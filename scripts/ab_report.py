@@ -6,10 +6,25 @@ Queries present on only one side are flagged explicitly instead of
 printing nan ratios. Usage: ab_report.py <name>"""
 import json, sys, glob, statistics as st
 name = sys.argv[1]
+def record(path):
+    """The captured line that carries the per-query map, or None: a capture
+    may hold log lines, several JSON lines or a truncated tail."""
+    found = None
+    for line in open(path, errors="replace").read().splitlines():
+        try:
+            d = json.loads(line)
+        except ValueError:
+            continue
+        if isinstance(d, dict) and isinstance(d.get("queries"), dict):
+            found = d
+    return found
 def load(side):
     out = {}
     for f in sorted(glob.glob(f"target/ab_r16/{name}_{side}[0-9].json")):
-        d = json.loads(open(f).read().splitlines()[0])
+        d = record(f)
+        if d is None:
+            print(f"ab_report: skipping {f}: no line carries \"queries\"", file=sys.stderr)
+            continue
         for q, v in d["queries"].items():
             out.setdefault(q, []).append((v[0], v[2]))
     return out

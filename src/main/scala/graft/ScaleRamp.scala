@@ -10,6 +10,12 @@ import org.apache.spark.sql.functions.{col, posexplode}
   * filters would pin the working set to the sf0.1 size and the scale claim
   * would be untested. Prints one JSON line with the same
   * `[median_sec, min_sec, jobs, scan_mb]` record as Bench (3 reps).
+  *
+  * Arguments are name filters: with none, every operator entry runs. The
+  * six synthetic skew-gate entries (`x_*_skew_*` and their two
+  * `x_*_uniform_*` controls) are not operator runs and run only when the
+  * explicit token `skew` is given, which selects all six; so the default
+  * ramp measures only the real operator surface.
   */
 object ScaleRamp {
   private val Reps = 3
@@ -37,6 +43,39 @@ object ScaleRamp {
         "u%da u%db u%dc u%dd u%de u%df u%dg u%dh u%di u%dj u%dk u%dl",
         Seq.fill(12)(col("doc_id")): _*).alias("text"))
   }
+
+  /** Hot-key skew gate for the one-pass window shapes of the substring
+    * and line dedup operators. Synthetic corpora sized off the fixture's
+    * doc ids:
+    *  - skew: every doc = one SHARED 8-token prefix + 4 unique tokens,
+    *    so the prefix 8-gram holds 1/5 of ALL postings (a task's fair
+    *    share is 1/32) and, at lineTokens=8, line 0 is the same hot
+    *    line in every doc — the "boilerplate repeated 10⁹×" case,
+    *    constructed to BIND;
+    *  - uniform: same doc count/shape, all 12 tokens unique per doc —
+    *    the no-skew control at identical scale.
+    * window = the one-pass window shape (default); join = the
+    * skewRobust aggregate→probe shape (two postings derivations,
+    * map-side partial min/max, AQE-splittable probe). Both produce
+    * identical rows; the ratio adjudicates the default per corpus.
+    */
+  private def skewGate(spark: org.apache.spark.sql.SparkSession,
+                       sfDir: String): Seq[(String, () => DataFrame)] = Seq(
+    "x_substr_skew_window" -> (() => graft.ops.Dedup.exactSubstringSpansKeep(
+      skewDocs(spark, sfDir), "doc_id", "text", k = 8, keepFirst = false)),
+    "x_substr_skew_join" -> (() => graft.ops.Dedup.exactSubstringSpansKeep(
+      skewDocs(spark, sfDir), "doc_id", "text", k = 8, keepFirst = false,
+      skewRobust = true)),
+    "x_substr_uniform_window" -> (() => graft.ops.Dedup.exactSubstringSpansKeep(
+      uniformDocs(spark, sfDir), "doc_id", "text", k = 8, keepFirst = false)),
+    "x_substr_uniform_join" -> (() => graft.ops.Dedup.exactSubstringSpansKeep(
+      uniformDocs(spark, sfDir), "doc_id", "text", k = 8, keepFirst = false,
+      skewRobust = true)),
+    "x_linededup_skew_window" -> (() => graft.ops.Dedup.dedupLinesKeepFirst(
+      skewDocs(spark, sfDir), "doc_id", "text", lineTokens = 8)),
+    "x_linededup_skew_join" -> (() => graft.ops.Dedup.dedupLinesKeepFirst(
+      skewDocs(spark, sfDir), "doc_id", "text", lineTokens = 8,
+      skewRobust = true)))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "target/sfgen/sf1")
@@ -179,36 +218,9 @@ object ScaleRamp {
       "x_leakage_split_full" -> (() => graft.ops.Dedup.leakageSafeSplit(
         graft.sources.Tables.documents(spark, sfDir), "doc_id", "text",
         splits = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
-        threshold = 0.9)),
-      // Round-17 hot-key skew gate for the r16 window rewrites (r16
-      // verdict #3). Synthetic corpora sized off the fixture's doc ids:
-      //  - skew: every doc = one SHARED 8-token prefix + 4 unique tokens,
-      //    so the prefix 8-gram holds 1/5 of ALL postings (a task's fair
-      //    share is 1/32) and, at lineTokens=8, line 0 is the same hot
-      //    line in every doc — the "boilerplate repeated 10⁹×" case the
-      //    verdict warns about, constructed to BIND;
-      //  - uniform: same doc count/shape, all 12 tokens unique per doc —
-      //    the no-skew control at identical scale.
-      // window = the r16 one-pass window shape (default); join = the
-      // skewRobust aggregate→probe shape (two postings derivations,
-      // map-side partial min/max, AQE-splittable probe). Both produce
-      // identical rows; the ratio adjudicates the default per corpus.
-      "x_substr_skew_window" -> (() => graft.ops.Dedup.exactSubstringSpansKeep(
-        skewDocs(spark, sfDir), "doc_id", "text", k = 8, keepFirst = false)),
-      "x_substr_skew_join" -> (() => graft.ops.Dedup.exactSubstringSpansKeep(
-        skewDocs(spark, sfDir), "doc_id", "text", k = 8, keepFirst = false,
-        skewRobust = true)),
-      "x_substr_uniform_window" -> (() => graft.ops.Dedup.exactSubstringSpansKeep(
-        uniformDocs(spark, sfDir), "doc_id", "text", k = 8, keepFirst = false)),
-      "x_substr_uniform_join" -> (() => graft.ops.Dedup.exactSubstringSpansKeep(
-        uniformDocs(spark, sfDir), "doc_id", "text", k = 8, keepFirst = false,
-        skewRobust = true)),
-      "x_linededup_skew_window" -> (() => graft.ops.Dedup.dedupLinesKeepFirst(
-        skewDocs(spark, sfDir), "doc_id", "text", lineTokens = 8)),
-      "x_linededup_skew_join" -> (() => graft.ops.Dedup.dedupLinesKeepFirst(
-        skewDocs(spark, sfDir), "doc_id", "text", lineTokens = 8,
-        skewRobust = true))
-    ).filter { case (name, _) => args.isEmpty || args.exists(name.contains) }
+        threshold = 0.9))
+    ).filter { case (name, _) => args.isEmpty || args.exists(name.contains) } ++
+      (if (args.contains("skew")) skewGate(spark, sfDir) else Nil)
 
     val results = runs.map { case (name, mk) =>
       val reps = (1 to Reps).map { _ =>

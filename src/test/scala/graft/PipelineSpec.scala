@@ -1,10 +1,13 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.pipeline.{Gold, Medallion, Silver}
+import graft.pipeline.{Bronze, Gold, Medallion, Silver}
+import graft.queries.MedallionQueries
 
 /** Home-Credit-shaped micro-fixtures pinning the reference's exact
   * semantics (FIXTURES.md §B edge rows; reference behavior cited in the
@@ -192,5 +195,42 @@ class PipelineSpec extends SparkSpec {
     assert(profiles.count() == 2)
     val segs = portfolio.select("risk_segment").as[String].collect().toSet
     assert(segs.nonEmpty && segs.subsetOf(Set("HIGH", "MEDIUM", "LOW")))
+  }
+
+  test("a warm medallion batch compiles no new generated class") {
+    // GraftSession sizes Spark's JVM-wide generated-class cache above one
+    // batch's working set; at Spark's default (100 entries) LRU eviction
+    // drops most of them before the next batch asks for them again
+    val dir = java.nio.file.Files.createTempDirectory("medallion-warm").toString
+    val (day, date) = ("2026-08-12", Medallion.PartitionDate(2026, 8, 12))
+    val sources = Seq[(String, (SparkSession, String) => DataFrame)](
+      "application_train" -> MedallionQueries.train, "application_test" -> MedallionQueries.test,
+      "bureau" -> MedallionQueries.bureau, "bureau_balance" -> MedallionQueries.bureauBalance,
+      "installments_payments" -> MedallionQueries.installments,
+      "previous_application" -> MedallionQueries.previousApps)
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    /** New classes compiled and their compile ms, for one batch. */
+    def batch(): (Long, Double) = {
+      val (n0, ns0) = (compiles, CodeGenerator.compileTime)
+      sources.foreach { case (t, f) => Bronze.ingestFrame(f(spark, sf001), s"$dir/bronze", t, day, "test") }
+      val Seq(train, testApps, bureau, balance, installments, previous) = sources.map { case (t, _) =>
+        Bronze.readIngestDate(spark, s"$dir/bronze", t, day).drop("ingest_date", "source_system")
+      }
+      val (profiles, portfolio) = Medallion.runFused(train, testApps, bureau, balance, installments,
+        previous, Some(MedallionQueries.statuses))
+      Medallion.writePartitioned(profiles, s"$dir/gold", "gold_client_risk_profile", date)
+      Medallion.writePartitioned(portfolio, s"$dir/gold", "gold_portfolio_risk", date)
+      (compiles - n0, (CodeGenerator.compileTime - ns0) / 1e6)
+    }
+    val cold = batch()
+    // AQE numbers codegen stages in the order they become ready, and the
+    // stage number is part of the class name: a warm batch whose stages
+    // finish in a new order compiles that variant once, then the cache
+    // holds it too. So the first warm batches may each add a few classes;
+    // with the cache too small, every warm batch recompiles them all.
+    var warm = List(batch())
+    while (warm.head._1 > 0 && warm.size < 3) warm = batch() :: warm
+    assert(warm.head == ((0L, 0.0)),
+      s"every warm batch compiled classes (count, ms): ${warm.reverse}; the cold one: $cold")
   }
 }
