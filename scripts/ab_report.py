@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
-"""Summarize an ab_r16 run: per query, median of the 3 per-JVM medians
-for A and B, plus MEDIAN job counts across reps (r16 ADVICE: the first
-rep's job count alone can mislead when AQE replans between reps).
+"""Summarize a scripts/ab.sh run (captures in target/ab/): per query,
+median of the 3 per-JVM medians for A and B, plus MEDIAN job counts
+across reps (r16 ADVICE: the first rep's job count alone can mislead
+when AQE replans between reps).
 Queries present on only one side are flagged explicitly instead of
 printing nan ratios. Usage: ab_report.py <name>"""
 import json, sys, glob, statistics as st
@@ -20,7 +21,7 @@ def record(path):
     return found
 def load(side):
     out = {}
-    for f in sorted(glob.glob(f"target/ab_r16/{name}_{side}[0-9].json")):
+    for f in sorted(glob.glob(f"target/ab/{name}_{side}[0-9].json")):
         d = record(f)
         if d is None:
             print(f"ab_report: skipping {f}: no line carries \"queries\"", file=sys.stderr)

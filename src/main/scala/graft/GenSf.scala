@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Scale-ramp fixture generator: replicates an existing sf fixture
   * `factor`× with key-space remapping so join cardinalities scale
   * HONESTLY — each replica's foreign keys point at its own replica of the
@@ -43,7 +45,7 @@ object GenSf {
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val spark = GraftSession.local()
 
-    def read(n: String) = spark.read.parquet(s"$src/$n.parquet")
+    def read(n: String) = Tables.parquet(spark, s"$src/$n.parquet")
     def write(df: DataFrame, n: String): Unit =
       df.write.mode("overwrite").parquet(s"$out/$n.parquet")
 
@@ -142,7 +144,7 @@ object GenSf {
 
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { n =>
-      println(s"[gensf] $n: ${spark.read.parquet(s"$out/$n.parquet").count()} rows")
+      println(s"[gensf] $n: ${Tables.parquet(spark, s"$out/$n.parquet").count()} rows")
     }
     spark.stop()
   }

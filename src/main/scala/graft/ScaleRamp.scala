@@ -113,7 +113,7 @@ object ScaleRamp {
           .filter(col("doc_id") % 25 === 0),
         "doc_id", "text", shingleK = 1, numHashes = 48)),
       "x_q93_candidates" -> (() => {
-        val corpusSig = spark.read.parquet(q93Idx)
+        val corpusSig = graft.sources.Tables.parquet(spark, q93Idx)
         val newSig = graft.ops.Dedup.minHashSignatures(
           graft.sources.Tables.documents(spark, sfDir)
             .filter(col("doc_id") % 25 === 0),
@@ -139,7 +139,7 @@ object ScaleRamp {
       "x_q97_curated_chain" -> (() =>
         graft.queries.TextQueries.curatedDocs(spark, sfDir)),
       "x_q93_probe_full" -> (() => graft.ops.Dedup.minHashNearDupAgainst(
-        spark.read.parquet(q93Idx),
+        graft.sources.Tables.parquet(spark, q93Idx),
         graft.sources.Tables.documents(spark, sfDir)
           .filter(col("doc_id") % 25 === 0),
         "doc_id", "text", threshold = 0.9, shingleK = 1,

@@ -28,7 +28,7 @@ object ScopeCheck {
       .write.mode("overwrite").parquet(idxPath)
     stages.clear()
     val out = graft.ops.Dedup.minHashNearDupAgainst(
-      spark.read.parquet(idxPath),
+      graft.sources.Tables.parquet(spark, idxPath),
       graft.sources.Tables.documents(spark, sfDir).filter(col("doc_id") % 25 === 0),
       "doc_id", "text", threshold = 0.9, shingleK = 1,
       bands = 16, rowsPerBand = 3, estMargin = 0.35)

@@ -71,9 +71,9 @@ object Graphs {
     // identical count off ONE derivation, and its required partitioning
     // IS the probe-key partitioning the cache wants (hashpartitioning on
     // src), so the explicit repartition goes too: one derivation, one
-    // exchange, no join. Hot-source buffering is bounded by the window's
-    // spillable row array and is the same hot key the per-iteration probe
-    // join already carries.
+    // exchange, no join. A hub's edges all land in one window task, which
+    // AQE cannot split (it can split the per-iteration probe join); the
+    // measured bound on hub out-degree is in SCALE.md.
     val edges = dedupEdges
       .withColumn("outdeg", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))

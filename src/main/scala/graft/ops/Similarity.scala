@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 import graft.ops.Projections
 import graft.ops.Checkpoints._
+import graft.sources.Tables
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (builder brief: brute-force cosine top-k baseline + bucketed scale
@@ -356,7 +357,7 @@ object Similarity {
     */
   def ivfIndexCentroids(spark: org.apache.spark.sql.SparkSession,
                         path: String): Array[Array[Double]] =
-    spark.read.parquet(s"$path/centroids").orderBy(col("cell").asc)
+    Tables.parquet(spark, s"$path/centroids").orderBy(col("cell").asc)
       .select(col("cw")).collect()
       .map(_.getSeq[Double](0).toArray)
 
@@ -372,7 +373,7 @@ object Similarity {
                      k: Int, nProbe: Int = 4): DataFrame = {
     import graft.functions.CentroidCellsExpr
     val cents = ivfIndexCentroids(spark, path)
-    val assigned = spark.read.parquet(s"$path/assigned")
+    val assigned = Tables.parquet(spark, s"$path/assigned")
     val probed = queries.select(col(idCol).alias("query_id"), col(vecCol).alias("__qv"))
       .withColumn("__cell", explode(CentroidCellsExpr(col("__qv"), cents, nProbe)))
       .withColumn("cell", col("__cell").cast("int")).drop("__cell")

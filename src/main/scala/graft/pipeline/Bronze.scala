@@ -45,6 +45,6 @@ object Bronze {
   /** Partition-pruned Bronze read for one ingest_date. */
   def readIngestDate(spark: SparkSession, bronzeBase: String, table: String,
                      ingestDate: String): DataFrame =
-    spark.read.parquet(s"${bronzeBase.stripSuffix("/")}/$table")
+    Tables.parquet(spark, s"${bronzeBase.stripSuffix("/")}/$table")
       .where(org.apache.spark.sql.functions.col("ingest_date") === ingestDate)
 }

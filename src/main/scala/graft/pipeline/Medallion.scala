@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Layer plumbing: partitioned writes, partition-pruned reads, catalog
   * registration, and the fused end-to-end pipeline.
   *
@@ -35,7 +37,7 @@ object Medallion {
     */
   def readPartition(spark: SparkSession, base: String, table: String,
                     date: PartitionDate): DataFrame =
-    spark.read.parquet(s"${base.stripSuffix("/")}/$table")
+    Tables.parquet(spark, s"${base.stripSuffix("/")}/$table")
       .where(col("year") === date.year && col("month") === date.month &&
         col("day") === date.day)
       .drop("year", "month", "day")

@@ -414,7 +414,7 @@ object AnalyticsQueries {
             .withColumn("month", date_format(col("o_orderdate"), "yyyy-MM")),
           "month", "o_custkey", out)
         graft.ops.Profiling.thetaRollup(
-          s.read.parquet(out)
+          Tables.parquet(s, out)
             .where(col("month") >= "1998-07" && col("month") <= "1998-09"))
       },
       None),
@@ -456,7 +456,7 @@ object AnalyticsQueries {
         graft.ops.Profiling.thetaStoreAppend(
           o.filter(col("month") === "1998-09"), "month", "o_custkey", store)
         graft.ops.Profiling.thetaRollup(
-          s.read.parquet(store)
+          Tables.parquet(s, store)
             .where(col("month").between("1998-07", "1998-09")))
       },
       None),

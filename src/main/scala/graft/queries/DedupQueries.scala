@@ -125,7 +125,7 @@ object DedupQueries {
         // full build+probe path (the signatures are deterministic, so the
         // result is identical either way).
         val corpusSig = sys.props.get("graft.bench.q93.index") match {
-          case Some(p) => s.read.parquet(p)
+          case Some(p) => Tables.parquet(s, p)
           case None => Dedup.minHashSignatures(
             all.filter(col("doc_id") % 25 =!= 0), "doc_id", "text",
             shingleK = 1, numHashes = 48)

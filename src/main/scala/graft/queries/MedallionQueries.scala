@@ -177,7 +177,7 @@ object MedallionQueries {
           buildKmvStore(s, d, p)
           p
         }
-        graft.ops.Profiling.kmvRollup(s.read.parquet(storePath), Seq.empty, k = 32)
+        graft.ops.Profiling.kmvRollup(Tables.parquet(s, storePath), Seq.empty, k = 32)
       },
       Some(s"""$withChain,
               |prev265 AS (SELECT o_orderkey AS SK_ID_PREV,

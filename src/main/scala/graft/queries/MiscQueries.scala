@@ -304,7 +304,7 @@ object MiscQueries {
           .withColumn("year", year(col("o_orderdate")))
           .withColumn("month", month(col("o_orderdate")))
           .write.mode("overwrite").partitionBy("year", "month").parquet(out)
-        s.read.parquet(out)
+        Tables.parquet(s, out)
           .where(col("year") === 1995 && col("month") >= 7)
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
             col("year").cast("long").alias("year"),
@@ -329,7 +329,7 @@ object MiscQueries {
         val base = s"/root/repo/target/graft_pathpart/$sfName"
         graft.sources.Sinks.parquetIntoPartitionDir(
           Tables.customer(s, d), base, "customer", ("ingest_date", "2026-08-12"))
-        s.read.parquet(s"$base/customer")
+        Tables.parquet(s, s"$base/customer")
           .select(col("c_custkey"), col("c_name"), col("c_acctbal"),
             col("ingest_date").cast("string").alias("ingest_date"))
       },

@@ -221,7 +221,7 @@ object SimilarityQueries {
     QueryDef("q129_audio_decode",
       (s, d) => {
         val out = Fixtures.audioMedia(s, d)
-        Multimodal.decodeAudio(s.read.parquet(out))
+        Multimodal.decodeAudio(Tables.parquet(s, out))
           .select(col("media_id"), col("n_bytes"), col("decode_ok"),
             col("sample_rate"), col("channels"), col("n_frames"),
             round(col("duration_s"), 9).alias("duration_s"),
@@ -250,7 +250,7 @@ object SimilarityQueries {
     QueryDef("q194_image_dhash",
       (s, d) => {
         val out = Fixtures.imageMedia(s, d)
-        Multimodal.dHashImages(s.read.parquet(out))
+        Multimodal.dHashImages(Tables.parquet(s, out))
           .select(col("media_id"), col("decode_ok"), col("width"),
             col("height"), col("dhash_hi"), col("dhash_lo"))
       },
@@ -277,7 +277,7 @@ object SimilarityQueries {
       (s, d) => {
         val out = Fixtures.imageMedia(s, d)
         Multimodal.dHashNearDup(
-          Multimodal.dHashImages(s.read.parquet(out)), maxHamming = 3)
+          Multimodal.dHashImages(Tables.parquet(s, out)), maxHamming = 3)
       },
       Some("""WITH m AS (SELECT media_id, lum
              |  FROM parquet_scan('/root/repo/target/graft_img/__SF_NAME__/media/*.parquet')),
@@ -307,7 +307,7 @@ object SimilarityQueries {
       (s, d) => {
         val out = Fixtures.audioMedia(s, d)
         Multimodal.decodeAudio(
-            Multimodal.decimateAudio(s.read.parquet(out), factor = 2))
+            Multimodal.decimateAudio(Tables.parquet(s, out), factor = 2))
           .select(col("media_id"), col("decode_ok"),
             col("sample_rate"), col("channels"), col("n_frames"),
             round(col("duration_s"), 9).alias("duration_s"),
@@ -343,7 +343,7 @@ object SimilarityQueries {
     QueryDef("q240_mp4_metadata",
       (s, d) => {
         val out = Fixtures.mp4Media(s, d)
-        Multimodal.mp4Meta(s.read.parquet(out))
+        Multimodal.mp4Meta(Tables.parquet(s, out))
           .select(col("media_id"), col("n_bytes"), col("parse_ok"),
             col("major_brand"), col("timescale"), col("duration"),
             col("duration_s"), col("n_tracks"), col("codecs"))
@@ -370,7 +370,7 @@ object SimilarityQueries {
     QueryDef("q230_audio_frame_features",
       (s, d) => {
         val out = Fixtures.audioFramesMedia(s, d)
-        Multimodal.audioFrameFeatures(s.read.parquet(out), frameSize = 256)
+        Multimodal.audioFrameFeatures(Tables.parquet(s, out), frameSize = 256)
           .select(col("media_id"), col("frame_idx"), col("n_samples"),
             col("sum_sq"), col("zcr"), round(col("rms"), 9).alias("rms"))
       },

@@ -1,19 +1,80 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** Fixture-table loaders (SURVEY §2.1 S3: parquet scans).
   *
-  * All loads are plain `spark.read.parquet` so Catalyst retains full
-  * pushdown/pruning freedom — callers `.select`/`.filter` and the parquet
-  * scan shows `PushedFilters`/narrowed `ReadSchema`.
+  * Parquet loads go through [[parquet]]: the same relation as
+  * `spark.read.parquet`, with the schema resolved on the driver. Catalyst
+  * keeps full pushdown/pruning freedom — callers `.select`/`.filter` and
+  * the parquet scan shows `PushedFilters`/narrowed `ReadSchema`.
   */
 object Tables {
 
+  /** `spark.read.parquet(path)` without its schema-inference job.
+    *
+    * With `mergeSchema` off Spark infers the schema from one footer —
+    * `_common_metadata`, else `_metadata`, else the first data file by
+    * path — but reads that footer in a one-task Spark job on every call.
+    * This picks the same file from the same listing, reads its footer on
+    * the driver with the conversion the inference task uses, and hands
+    * the result to the reader as the schema. Nothing is cached, so a
+    * table overwritten between reads resolves afresh.
+    *
+    * Falls through to `spark.read.parquet(path)` (so the caller gets
+    * Spark's own relation or error) when there is no file to read, the
+    * footer cannot be read, the path is a streaming sink's output (Spark
+    * then lists the sink's log, not the directory), or a data column
+    * shares a name with a partition column (a given schema would move it).
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None         => spark.read.parquet(path)
+    }
+
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val index = new InMemoryFileIndex(
+      spark, Seq(root.getFileSystem(hadoopConf).makeQualified(root)), Map.empty, None)
+    val leaves = index.allFiles().sortBy(_.getPath.toString)
+    if (leaves.isEmpty || FileStreamSink.hasMetadata(Seq(path), hadoopConf, conf)) return None
+    import ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE => common, PARQUET_METADATA_FILE => meta}
+    def first(p: String => Boolean) = leaves.find(f => p(f.getPath.getName))
+    val picked = first(_ == common).orElse(first(_ == meta)).orElse(first(n => n != common && n != meta))
+    // the settings Spark's inference task passes; it leaves the rest at their defaults
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+    val schema = picked.flatMap { f =>
+      try {
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, hadoopConf), SKIP_ROW_GROUPS)
+        Some(ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer), converter))
+      } catch { case NonFatal(_) => None }
+    }
+    val partCols = index.partitionSchema.fieldNames
+    schema.filterNot(_.fieldNames.exists(c => partCols.exists(conf.resolver(_, c))))
+  }
+
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
 
   def region(spark: SparkSession, sfDir: String): DataFrame   = table(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame   = table(spark, sfDir, "nation")

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.sources.Tables
+
 /** Structured Streaming counterparts of the batch time-series operators
   * (SURVEY §2.9): the same logical queries runnable as incremental
   * streams. The reference's "incremental" story is re-running batch jobs
@@ -48,7 +50,7 @@ object StreamingOps {
     // normal streaming bootstrap) falls back to the current micros-NTZ
     // layout rather than failing setup (round-10 ADVICE).
     val tsIsLong = scala.util.Try(
-      spark.read.parquet(path).schema("ts").dataType == LongType
+      Tables.parquet(spark, path).schema("ts").dataType == LongType
     ).getOrElse(false)
     val readSchema =
       if (tsIsLong)
@@ -146,7 +148,7 @@ object StreamingOps {
           val survivors =
             if (!indexExists) keptWithin
             else {
-              val corpusSig = spark.read.parquet(indexDir)
+              val corpusSig = Tables.parquet(spark, indexDir)
               val vsIndex = Dedup.minHashNearDupAgainst(corpusSig, keptWithin,
                   idCol, textCol, threshold, shingleK, bands, rowsPerBand, estMargin)
                 .select(col("new_id").alias("__drop")).distinct()
@@ -206,7 +208,7 @@ object StreamingOps {
             if (!indexExists) keptWithin
             else {
               val vsIndex = Dedup.embeddingNearDupAgainst(
-                  spark.read.parquet(indexDir), keptWithin, idCol, vecCol,
+                  Tables.parquet(spark, indexDir), keptWithin, idCol, vecCol,
                   threshold, dim, planes, bands, prefilterBits)
                 .select(col("new_id").alias("__drop")).distinct()
               keptWithin.join(vsIndex, col(idCol) === col("__drop"), "left_anti")
@@ -302,7 +304,7 @@ object StreamingOps {
                     groupCols: Seq[String], ranks: Seq[Double],
                     lgK: Int = 12, kllK: Int = 200): DataFrame = {
     import graft.functions.SketchAggs
-    val store = spark.read.parquet(sketchDir)
+    val store = Tables.parquet(spark, sketchDir)
     val (lgKUse, kllKUse) = storeParams(store, lgK, kllK)
     store
       .groupBy(groupCols.map(col): _*)
@@ -331,7 +333,7 @@ object StreamingOps {
                     compactDir: String, groupCols: Seq[String],
                     lgK: Int = 12, kllK: Int = 200): Unit = {
     import graft.functions.SketchAggs
-    val store = spark.read.parquet(sketchDir)
+    val store = Tables.parquet(spark, sketchDir)
     // parameters come from the store itself, so a compaction can never
     // silently downsample a higher-lgK store through the defaults (r12
     // ADVICE); the compacted store stays self-describing
