@@ -16,7 +16,7 @@ for round in 1 2 3; do
     [ "$side" = B ] && cls="$CLS_B"
     out="target/ab/${NAME}_${side}${round}"
     if CLS="$cls" SPARK_GRAFT_BENCH_REPS=3 SPARK_GRAFT_SF_DIR="$SF" \
-       scripts/bench_direct.sh "$QS" 2> "$out.err" | grep '"metric"' > "$out.json" \
+       scripts/run_main.sh graft.Bench "$QS" 2> "$out.err" | grep '"metric"' > "$out.json" \
        && [ -s "$out.json" ]; then
       echo "[ab] ${NAME} ${side}${round} OK"
     else

@@ -1,30 +1,13 @@
 #!/bin/bash
 # Chained scale-fixture generation: sf0.1 -> sf1 -> sf10 -> sf100, each a
 # 10x GenSf replication of the previous output. Runs in a plain JVM
-# (bench_direct.sh pattern) so sbt keeps the project lock for tests.
-# Usage: scripts/gen_chain.sh [last]   (last in {sf1,sf10,sf100}; default sf100)
+# (scripts/run_main.sh) so sbt keeps the project lock for tests.
+# Usage: [CLS=...] [SPARK_DRIVER_MEM=...] scripts/gen_chain.sh [last]
+#   (last in {sf1,sf10,sf100}; default sf100)
 set -e
-CLS="${CLS:-/root/repo/target/scala-2.13/classes}"
+cd "$(dirname "$0")/.."
 LAST="${1:-sf100}"
-run() {
-  java \
-    --add-opens java.base/java.lang=ALL-UNNAMED \
-    --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
-    --add-opens java.base/java.lang.reflect=ALL-UNNAMED \
-    --add-opens java.base/java.io=ALL-UNNAMED \
-    --add-opens java.base/java.net=ALL-UNNAMED \
-    --add-opens java.base/java.nio=ALL-UNNAMED \
-    --add-opens java.base/java.util=ALL-UNNAMED \
-    --add-opens java.base/java.util.concurrent=ALL-UNNAMED \
-    --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED \
-    --add-opens java.base/sun.nio.ch=ALL-UNNAMED \
-    --add-opens java.base/sun.nio.cs=ALL-UNNAMED \
-    --add-opens java.base/sun.security.action=ALL-UNNAMED \
-    --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
-    -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    -Xmx64g \
-    -cp "$CLS:/opt/spark/jars/*" graft.GenSf "$@"
-}
+run() { scripts/run_main.sh graft.GenSf "$@"; }
 echo "[gen_chain] sf0.1 -> sf1"
 run /root/testdata/sf0.1 target/sfgen/sf1 10
 [ "$LAST" = "sf1" ] && exit 0

@@ -1,9 +1,15 @@
 #!/bin/bash
-# Direct-JVM ScaleRamp runner (bench_direct.sh pattern): bypasses the sbt
-# project lock so generated-SF operator ramps can run while sbt
-# compiles/tests in parallel.
-# Usage: SPARK_GRAFT_SF_DIR=target/sfgen/sf1 scripts/ramp_direct.sh x_q93
-CLS="${CLS:-/root/repo/target/scala-2.13/classes}"
+# Runs one of the library's mains in a plain JVM, outside sbt, so long
+# benches and ramps can run while sbt holds the project lock.
+# Usage: [CLS=<classes dir>] [SPARK_DRIVER_MEM=8g] [GRAFT_JAVA_EXTRA=<jvm flags>] \
+#        scripts/run_main.sh <MainClass> [args]
+#   e.g. SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_BENCH_REPS=3 scripts/run_main.sh graft.Bench q93
+#   CLS defaults to this checkout's sbt output (target/scala-2.13/classes).
+MAIN="${1:?usage: scripts/run_main.sh <MainClass> [args]}"; shift
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+CLS="${CLS:-$ROOT/target/scala-2.13/classes}"
+# the Spark jars the build compiles against (build.sbt's unmanagedBase)
+JARS="$(sed -n 's/^unmanagedBase := file("\(.*\)")$/\1/p' "$ROOT/build.sbt")"
 exec java $GRAFT_JAVA_EXTRA \
   --add-opens java.base/java.lang=ALL-UNNAMED \
   --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
@@ -20,4 +26,4 @@ exec java $GRAFT_JAVA_EXTRA \
   --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-64g}" \
-  -cp "$CLS:/opt/spark/jars/*" graft.ScaleRamp "$@"
+  -cp "$CLS:$JARS/*" "$MAIN" "$@"

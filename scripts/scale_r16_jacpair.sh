@@ -20,7 +20,7 @@
 # Per r15 ADVICE: pipefail + per-run failure markers; a crashed leg is
 # recorded and later legs still run.
 set -uo pipefail
-cd /root/repo
+cd "$(dirname "$0")/.."
 mkdir -p target/scale_r16
 SAMPLER_LOG=target/scale_r16/jac_peak_scratch.log
 rm -f "$SAMPLER_LOG"
@@ -41,7 +41,7 @@ leg() { # name sfdir heap
   echo "[jacpair] $name (heap $heap) start $(date +%T)"
   echo "---- $name $(date +%s)" >> "$SAMPLER_LOG"
   if SPARK_DRIVER_MEM="$heap" SPARK_GRAFT_SF_DIR="$sfdir" \
-     scripts/ramp_direct.sh x_jaccard_prefix_full \
+     scripts/run_main.sh graft.ScaleRamp x_jaccard_prefix_full \
        2> "target/scale_r16/${name}.err" | grep '"metric"' \
        > "target/scale_r16/${name}.json" \
      && [ -s "target/scale_r16/${name}.json" ]; then
@@ -57,7 +57,7 @@ leg jacfix_sf10_80g target/sfgen/sf10 80g
 
 for sf in sf1 sf10; do
   echo "[jacpair] candcount $sf (production posture: WideShuffle scope + persisted tokens)"
-  if scripts/candcount_direct.sh "target/sfgen/$sf" jaccard \
+  if scripts/run_main.sh graft.CandCount "target/sfgen/$sf" jaccard \
        2> "target/scale_r16/jaccand_${sf}.err" | grep CANDIDATES \
        > "target/scale_r16/jaccand_${sf}.txt" \
      && [ -s "target/scale_r16/jaccand_${sf}.txt" ]; then

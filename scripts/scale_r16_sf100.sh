@@ -11,7 +11,7 @@
 # (c) keeps the du sampler so the footprint drop is a recorded number.
 # One JVM per leg, 3 reps, no env knobs beyond rep count / stage skip.
 set -uo pipefail
-cd /root/repo
+cd "$(dirname "$0")/.."
 mkdir -p target/scale_r15
 SAMPLER_LOG=target/scale_r15/peak_scratch_r2.log
 rm -f "$SAMPLER_LOG"
@@ -32,7 +32,7 @@ run() { # name sfdir queries
   echo "[r16sf100] $name start $(date +%T) free=$(df --output=avail -BG / | tail -1)"
   echo "---- $name $(date +%s)" >> "$SAMPLER_LOG"
   if SPARK_GRAFT_BENCH_REPS=3 SPARK_GRAFT_SKIP_STAGES=1 \
-     SPARK_GRAFT_SF_DIR="$sfdir" scripts/bench_direct.sh "$qs" \
+     SPARK_GRAFT_SF_DIR="$sfdir" scripts/run_main.sh graft.Bench "$qs" \
        2> "target/scale_r15/${name}.err" | grep '"metric"' \
        > "target/scale_r15/${name}.json" \
      && [ -s "target/scale_r15/${name}.json" ]; then

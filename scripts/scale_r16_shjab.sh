@@ -12,7 +12,7 @@
 # the codec): SPARK_GRAFT_IO_CODEC=lz4 on B, no-op env on A.
 # Per r15 ADVICE: pipefail + per-run failure markers.
 set -uo pipefail
-cd /root/repo
+cd "$(dirname "$0")/.."
 mkdir -p target/scale_r16
 QS="q42_,q44_,q48_,q49_,q69_,q76_,q93_,q118_,q120_,q135_"
 OLD_CLS=/tmp/graft_r13/target/scala-2.13/classes
@@ -23,7 +23,7 @@ run() { # name clsdir extra-env...
   echo "[shjab] $name start $(date +%T)"
   if CLS="$cls" SPARK_GRAFT_BENCH_REPS=3 SPARK_GRAFT_IO_CODEC=lz4 \
      SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
-     scripts/bench_direct.sh "$QS" \
+     scripts/run_main.sh graft.Bench "$QS" \
        2> "target/scale_r16/${name}.err" | grep '"metric"' \
        > "target/scale_r16/${name}.json" \
      && [ -s "target/scale_r16/${name}.json" ]; then
@@ -36,6 +36,6 @@ run() { # name clsdir extra-env...
 
 for round in 1 2 3; do
   run "shjab_old_r$round" "$OLD_CLS"
-  run "shjab_new_r$round" "/root/repo/target/scala-2.13/classes"
+  run "shjab_new_r$round" target/scala-2.13/classes
 done
 echo R16_SHJAB_DONE

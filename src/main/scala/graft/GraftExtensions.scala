@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-import graft.functions.{DotProductExpr, FreqItemsAgg, FreqMergeAgg, FreqTopItemsExpr, HyperplaneSketchWideExpr, JaccardSortedExpr, KllDoublesAgg, KllMergeAgg, KllSummaryExpr, KmvBottomKAgg, MinHashSignatureExpr, SimHash64, ThetaDiffExpr, ThetaEstimateExpr, ThetaPairExpr, ThetaSketchAgg, ThetaUnionAgg, TopKPairsAgg}
+import graft.functions.{BindComparisonLiterals, DotProductExpr, FreqItemsAgg, FreqMergeAgg, FreqTopItemsExpr, HyperplaneSketchWideExpr, JaccardSortedExpr, KllDoublesAgg, KllMergeAgg, KllSummaryExpr, KmvBottomKAgg, MinHashSignatureExpr, SimHash64, ThetaDiffExpr, ThetaEstimateExpr, ThetaPairExpr, ThetaSketchAgg, ThetaUnionAgg, TopKPairsAgg}
 import graft.ops.Hyperplanes
 
 /** Session extension wiring for the engine's native expressions, so a
@@ -25,6 +25,9 @@ import graft.ops.Hyperplanes
   *
   * [[GraftFunctions.registerAll]] installs the same set into an already
   * running session (tests, notebooks).
+  *
+  * Also installs [[graft.functions.BindComparisonLiterals]], the physical
+  * rule every [[GraftSession]] session already has.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -35,6 +38,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft", null, name, usage, ""),
         (exprs: Seq[Expression]) => builder(exprs)))
     }
+    BindComparisonLiterals.install(ext)
     // NO injectOptimizerRule: a window-top-1 → argmin-aggregate rewrite
     // was built, A/B-measured, and DELETED — Spark 4's own
     // InferWindowGroupLimit already plans a PARTIAL WindowGroupLimit

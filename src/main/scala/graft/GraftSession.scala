@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.functions.BindComparisonLiterals
+
 /** Session factory with the engine's standard configuration.
   *
   * Design notes (100 TB posture):
@@ -57,6 +59,9 @@ object GraftSession {
       // would truncate the whole table on an incremental re-run
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       .config("spark.ui.enabled", "false")
+      // comparison keys by reference: a new key reuses the generated class
+      // (DECISIONS.md "Bound comparison literals")
+      .withExtensions(BindComparisonLiterals.install)
 
   /** Local session; core count from SPARK_GRAFT_CPUS (driver contract).
     * SPARK_GRAFT_SHUFFLE_PARTITIONS still overrides the non-AQE shuffle

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.BindComparisonLiterals
+
 /** `spark.sql.extensions`-style installation: a session built with
   * [[GraftExtensions]] exposes the native expressions to pure-SQL users.
   * Runs in its own JVM (build.sbt testGrouping) because extensions apply
@@ -73,6 +75,30 @@ class ExtensionsSpec extends AnyFunSuite {
           |  (5L), (3L), (9L), (3L) AS t(v)""".stripMargin)
         .head().getSeq[Long](0)
       assert(kmv == Seq(3L, 5L))
+    } finally {
+      spark.stop()
+      org.apache.spark.sql.SparkSession.clearActiveSession()
+      org.apache.spark.sql.SparkSession.clearDefaultSession()
+    }
+  }
+
+  test("GraftExtensions installs the comparison-literal rule; installed twice, a new key compiles nothing") {
+    val spark = GraftSession.builder(4)
+      .appName("graft-ext")
+      .withExtensions(new GraftExtensions)
+      .getOrCreate()
+    try {
+      spark.sparkContext.setLogLevel("ERROR")
+      // once from GraftSession.builder, once from GraftExtensions
+      assert(spark.sessionState.columnarRules.count(_ eq BindComparisonLiterals.columnarRule) == 2)
+
+      val dir = java.nio.file.Files.createTempDirectory("ext-bind").toString
+      spark.range(200).selectExpr("id AS k", "CAST(id AS DOUBLE) / 2 AS d").write.parquet(s"$dir/t")
+      val t = graft.sources.Tables.parquet(spark, s"$dir/t")
+      def lookup(k: Long) = t.filter(s"k = $k").collect()
+      assert(lookup(17L).map(_.getDouble(1)).toSeq == Seq(8.5))
+      val n = SparkSpec.classesCompiled(assert(lookup(123L).map(_.getDouble(1)).toSeq == Seq(61.5)))
+      assert(n == 0, s"a new key compiled $n classes")
     } finally {
       spark.stop()
       org.apache.spark.sql.SparkSession.clearActiveSession()

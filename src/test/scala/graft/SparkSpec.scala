@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,5 +16,12 @@ object SparkSpec {
     val s = GraftSession.builder(4).getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
+  }
+
+  /** Generated classes compiled, JVM-wide, while `body` runs. */
+  def classesCompiled(body: => Any): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
 }
