@@ -12,11 +12,10 @@ import org.apache.spark.sql.SparkSession
   * (codegen compiler warmup, FileSourceStrategy init) so per-query numbers
   * measure the plan, not the JVM.
   *
-  * Stability (the round-3 lesson — numbers that swing 3.5× between rounds
-  * gate nothing):
-  *  - the shape comparison runs FIRST, on a pristine session, so 70 queries
-  *    of accumulated JVM/cache state can't pollute the one number that is
-  *    compared against the reference baseline;
+  * Stability (DECISIONS.md "Bench measurement rules"):
+  *  - the shape comparison runs FIRST, on a pristine session, so the
+  *    registry's accumulated JVM/cache state can't pollute the one number
+  *    that is compared against the reference baseline;
   *  - every query runs `reps` times and reports the MEDIAN, so one GC pause
   *    or compiler deopt can't fake a regression;
   *  - cached/checkpointed blocks are swept between queries — a query's
@@ -51,9 +50,8 @@ object Bench {
   }
 
   /** One rep's record: elapsed seconds, jobs launched, bytes scanned
-    * (metered by the shared [[JobMeter]] — round-4 verdict: a wall-second
-    * alone is not attributable; same jobs+bytes but more seconds =
-    * measurement/JIT noise, more jobs or bytes = a plan change).
+    * (metered by the shared [[JobMeter]]: same jobs+bytes but more seconds
+    * is noise, more jobs or bytes is a plan change).
     */
   private final case class Rep(sec: Double, jobs: Long, scanBytes: Long, ok: Boolean)
 
@@ -61,14 +59,11 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local()
 
-    // Host-drift canary (round-13 verdict #5): a fixed-shape in-memory
-    // aggregation — 4M generated rows, 4096-key hash agg, one exchange —
-    // measured before anything else, independent of SF and of the query
-    // registry. Rounds 10-13 each spent effort re-adjudicating 1.3-1.9×
-    // cross-round wall drift at unchanged jobs/bytes; dividing two
-    // rounds' walls by their canaries removes the machine from the
-    // comparison. Four runs: the first absorbs codegen/JIT warmup, the
-    // median of the last three is recorded as `host_canary_sec`.
+    // Host-drift canary: a fixed-shape in-memory aggregation (4M rows,
+    // 4096-key hash agg, one exchange) independent of SF and registry;
+    // dividing two runs' walls by their canaries removes the machine.
+    // Four runs: the first absorbs warmup, the median of the last three
+    // is recorded as `host_canary_sec`.
     val canarySec: Double =
       try {
         def once(): Double = {
@@ -90,10 +85,8 @@ object Bench {
 
     // Matched-scale shape comparison FIRST (full runs only): the
     // reference's literal job structure vs the library's, same fixtures,
-    // same deliverables, pristine session. Runs under the SAME trust
-    // machinery as the per-query bench (round-8 verdict #1): interleaved
-    // reps, median+min reported, jobs/bytes-gated retry — the headline
-    // baseline ratio is a median of ≥5 paired runs, never one sample.
+    // same deliverables, pristine session, under the same interleaved-
+    // median machinery as the per-query bench.
     val shape =
       if (args.isEmpty || args.headOption.contains("shape")) {
         try {
@@ -134,18 +127,6 @@ object Bench {
       r
     }
 
-    // The rep with the MEDIAN wall time (its jobs/bytes ride along, so the
-    // reported triple is one real run, not a mix), plus the MIN wall time:
-    // identical jobs/bytes with median >> min is self-evidently environment
-    // noise, not a plan regression (round-5 verdict: the closing-run
-    // environment inflated a handful of queries 2-6× at unchanged plans).
-    // A single failed rep marks the query failed — crashes must stay
-    // visible, not be medianed away.
-    def medianOf(reps: Seq[Rep]): (Rep, Double) = {
-      val med = reps.sortBy(_.sec).apply(reps.size / 2)
-      (med.copy(ok = reps.forall(_.ok)), reps.map(_.sec).min)
-    }
-
     // warmup: touch every fixture table once (scan + codegen warm)
     try graft.sources.Tables.registerAll(spark, sfDir) catch { case _: Throwable => }
     try spark.sql("select count(*) from lineitem").collect() catch { case _: Throwable => }
@@ -154,9 +135,7 @@ object Bench {
     // or comma-separated `runMain graft.Bench q60,q61,q97` (any match);
     // `runMain graft.Bench shape` runs only the shape comparison.
     // Resolved BEFORE the prepare steps so a filtered run only builds the
-    // fixtures/indexes its queries actually read (a generated-sf ramp run
-    // was paying 30+ min of media fixture synthesis for queries it never
-    // executed).
+    // fixtures/indexes its queries actually read.
     val selected = args.headOption match {
       case Some("shape") => Map.empty[String, (SparkSession, String) => org.apache.spark.sql.DataFrame]
       case Some(subs) =>
@@ -170,8 +149,7 @@ object Bench {
     // q93's corpus index is persisted state in production (the point of
     // the incremental shape) — build it once here, UNTIMED, report the
     // build cost as its own field, and let the timed reps measure the
-    // per-batch probe against the stored index (round-6 verdict: re-
-    // deriving the index every rep made q93's number dishonest).
+    // per-batch probe against the stored index.
     val prepared = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     if (canarySec >= 0) prepared("host_canary_sec") = canarySec
     if (selectedHas("q93")) try {
@@ -221,9 +199,7 @@ object Bench {
     // Media fixtures are input SYNTHESIS, not the measured op: pre-build
     // them untimed (Fixtures builds once per JVM — the timed reps then
     // measure decode/hash/frame work only) and report each build as its
-    // own field (round-10 verdict #5: q129/q145/q230's sf1 "superlinear"
-    // rows were fixture-build artifacts; the committed record now says so
-    // in numbers). q145 shares q129's fixture, q195 shares q194's.
+    // own field. q145 shares q129's fixture, q195 shares q194's.
     for ((key, users, build) <- Seq[(String, Seq[String], () => String)](
       ("q129_q145_fixture_build_sec", Seq("q129", "q145"),
         () => graft.queries.Fixtures.audioMedia(spark, sfDir)),
@@ -244,8 +220,7 @@ object Bench {
     }
     sweep(spark)
 
-    // Per-stage diagnostics for the two composed chains (round-12 verdict
-    // #2, extending the q93_index_build_sec precedent): each stage frame is
+    // Per-stage diagnostics for the two composed chains: each stage frame is
     // materialized ONCE through noop, so the committed record carries
     // `q97_stage_{gate,dedup,decontam,rollup}_sec` and
     // `q138_stage_{curate,mix,pack,shard}_sec`. Times are CUMULATIVE — a
@@ -259,8 +234,7 @@ object Bench {
       // SPARK_GRAFT_SKIP_STAGES=1 skips the diagnostic splits (huge-SF
       // runs where one cumulative stage walk costs more than the repped
       // query itself); the committed sf0.1 record always carries them.
-      // Compared against "1" exactly — SPARK_GRAFT_SKIP_STAGES=0 runs
-      // the splits (r13 ADVICE: presence-testing made =0 skip too).
+      // Compared against "1" exactly, so SPARK_GRAFT_SKIP_STAGES=0 runs them.
       val wanted = !sys.env.get("SPARK_GRAFT_SKIP_STAGES").contains("1") && (args.isEmpty ||
         args.headOption.exists(_.split(',').exists(p => p.nonEmpty && parent.contains(p))))
       if (wanted) try {
@@ -281,8 +255,7 @@ object Bench {
     // Reps are INTERLEAVED round-robin across queries (rep 1 of every
     // query, then rep 2, ...) so a transient load spike degrades one rep
     // of many queries — which the median absorbs — instead of sitting on
-    // all reps of whichever query it landed on (round-6 verdict: closing-
-    // environment load inflated three queries' medians 2-3.7×).
+    // all reps of whichever query it landed on.
     val results: Seq[(String, (Rep, Double))] =
       try {
         val byName = scala.collection.mutable.Map.empty[String, Vector[Rep]]
@@ -290,21 +263,11 @@ object Bench {
         for (_ <- 1 to Reps; (name, fn) <- ordered)
           byName(name) = byName(name) :+ runOne(fn)
         // Up to TWO retry rounds for environment-noise victims: a median
-        // > 1.5× min at equal jobs/bytes is load, not plan (round-9
-        // verdict #2: the old single >2× round left three queries in the
-        // 1.6-1.9× gap reading as regressions) — re-measure and keep the
-        // cleaner (lower-median) rep set; the min stays the global min, so
-        // a genuinely slow query cannot launder its number here. The
-        // jobs/scanBytes equality between the median and min reps is
-        // CHECKED, not assumed (round-7 ADVICE): a query with genuinely
-        // bimodal plans (e.g. AQE re-planning differently per rep) has
-        // different job counts and must keep its honest median.
-        // The global min is tracked as a full Rep (not just its seconds) so
-        // the jobs/scanBytes plan-equality guard is checked against the
-        // ACTUAL rep whose time triggers the retry and is reported as min —
-        // including one from a since-discarded rep set (round-10 ADVICE: a
-        // min from a dropped set was never plan-validated against the
-        // reported median, weakening the "CHECKED, not assumed" invariant).
+        // > 1.5× min at equal jobs/bytes is load, not plan — re-measure and
+        // keep the lower-median rep set; the min stays the global min, so a
+        // slow query cannot launder its number here. The jobs/scanBytes
+        // equality is CHECKED against the full global-min Rep (bimodal
+        // plans keep their honest median).
         val current = scala.collection.mutable.Map.empty[String, Vector[Rep]]
         val globalMinRep = scala.collection.mutable.Map.empty[String, Rep]
         val okAll = scala.collection.mutable.Map.empty[String, Boolean]
@@ -339,21 +302,20 @@ object Bench {
             if (newMed.sec < oldMed.sec) current(name) = reps
           }
         }
+        // The rep with the MEDIAN wall time (its jobs/bytes ride along, so
+        // the reported triple is one real run, not a mix), plus the MIN wall
+        // time. A single failed rep marks the query failed.
         ordered.map { case (name, _) =>
           val med = current(name).sortBy(_.sec).apply(current(name).size / 2)
           name -> (med.copy(ok = okAll(name)), globalMinRep(name).sec)
         }
       } finally spark.sparkContext.removeSparkListener(meter)
-    // Per-query record is [median_sec, min_sec, jobs, scan_mb] (round-4
-    // verdict: wall seconds alone make regressions unattributable; round-5
-    // verdict: min exposes environment noise) — median negative on
-    // failure. The capture of this line is TAIL-truncated downstream, so
-    // the headline numbers (shape comparison, total) go at the END where
-    // they always survive, and the full record is also written to
-    // BENCH_DETAIL.json.
-    val qs = results.map { case (k, (r, minSec)) =>
+    // Per-query record is [median_sec, min_sec, jobs, scan_mb], median
+    // negative on failure. Output layering: DECISIONS.md "The bench stdout
+    // contract".
+    def queryMap(key: String => String): String = results.map { case (k, (r, minSec)) =>
       String.format(java.util.Locale.ROOT, """"%s":[%.2f,%.2f,%d,%d]""",
-        k, Double.box(if (r.ok) r.sec else -r.sec), Double.box(minSec),
+        key(k), Double.box(if (r.ok) r.sec else -r.sec), Double.box(minSec),
         Long.box(r.jobs), Long.box(r.scanBytes / 1048576))
     }.mkString("{", ",", "}")
     val failures = results.collect { case (k, (r, _)) if !r.ok => "\"" + k + "\"" }
@@ -363,60 +325,26 @@ object Bench {
     val preparedJson = prepared.map { case (k, v) =>
       String.format(java.util.Locale.ROOT, ""","%s":%.3f""", k, Double.box(v))
     }.mkString
-    val line = String.format(java.util.Locale.ROOT,
-      """{"metric":"total","unit":"sec","reps":%d,"legend":"queries: name -> [median_sec, min_sec, jobs, scan_mb]","failures":%s,"queries":%s%s%s,"value":%.3f,"sf":"%s"}""",
-      Int.box(Reps), failures, qs, shape, preparedJson, Double.box(total), sfDir)
-    // only a FULL run may replace the committed record — a substring-
-    // filtered iteration (`runMain graft.Bench q44`) or shape-only run
-    // would clobber the 78-query file with a partial one
-    if (args.isEmpty)
-      try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_DETAIL.json"),
-        line.getBytes("UTF-8"))
-      catch { case e: Throwable => System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
-    println(line)
-    // The round-record capture keeps only the LAST 2000 chars of stdout
-    // (measured from the r9 snapshot), minus an ~80-char sbt epilogue —
-    // any final line longer than ~1.9 KB gets BEHEADED and the snapshot
-    // holds an unparseable fragment (this happened in rounds 7 AND 9;
-    // round-9 verdict #1 is explicit: the committed record must stand
-    // alone). At 216+ queries NO per-query encoding fits that window, so
-    // the layering is:
-    //  - full per-query record  -> BENCH_DETAIL.json  (committed)
-    //  - compact qnum-keyed [med_s,min_s,jobs,scan_mb] -> BENCH_COMPACT
-    //    .json (committed; small, diff-friendly, supports snapshot-free
-    //    regression adjudication)
-    //  - the FINAL stdout line carries the summary keys PLUS the compact
-    //    qnum-keyed map (round-17: the driver's per-query comparator reads
-    //    only this line — see the note at summaryLine); headline keys sit
-    //    at the very end so even a tail-truncated capture shows them, and
-    //    the committed BENCH_COMPACT.json holds the identical map for any
-    //    consumer that needs a guaranteed-complete parse.
-    val detailCompact = results.map { case (k, (r, minSec)) =>
-      String.format(java.util.Locale.ROOT, """"%s":[%.2f,%.2f,%d,%d]""",
-        k.stripPrefix("q").takeWhile(_ != '_'),
-        Double.box(if (r.ok) r.sec else -r.sec),
-        Double.box(minSec), Long.box(r.jobs), Long.box(r.scanBytes / 1048576))
-    }.mkString("{", ",", "}")
-    val compactLine = String.format(java.util.Locale.ROOT,
-      """{"metric":"total","unit":"sec","reps":%d,"fmt":"qnum:[med_s,min_s,jobs,scan_mb]","failures":%s%s%s,"queries":%s,"value":%.3f,"sf":"%s"}""",
-      Int.box(Reps), failures, shape, preparedJson, detailCompact, Double.box(total), sfDir)
-    if (args.isEmpty)
-      try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_COMPACT.json"),
-        compactLine.getBytes("UTF-8"))
-      catch { case e: Throwable => System.err.println(s"[bench] compact write failed: ${e.getMessage}") }
-    println(compactLine)
+    val detailCompact = queryMap(_.stripPrefix("q").takeWhile(_ != '_'))
+    // Only a FULL run replaces the committed record files; a filtered or
+    // shape-only run would clobber them with a partial one.
+    if (args.isEmpty) {
+      def write(file: String, json: String): Unit =
+        try java.nio.file.Files.write(java.nio.file.Paths.get(file), json.getBytes("UTF-8"))
+        catch { case e: Throwable => System.err.println(s"[bench] $file write failed: ${e.getMessage}") }
+      write("BENCH_DETAIL.json", String.format(java.util.Locale.ROOT,
+        """{"metric":"total","unit":"sec","reps":%d,"legend":"queries: name -> [median_sec, min_sec, jobs, scan_mb]","failures":%s,"queries":%s%s%s,"value":%.3f,"sf":"%s"}""",
+        Int.box(Reps), failures, queryMap(identity), shape, preparedJson, Double.box(total), sfDir))
+      write("BENCH_COMPACT.json", String.format(java.util.Locale.ROOT,
+        """{"metric":"total","unit":"sec","reps":%d,"fmt":"qnum:[med_s,min_s,jobs,scan_mb]","failures":%s%s%s,"queries":%s,"value":%.3f,"sf":"%s"}""",
+        Int.box(Reps), failures, shape, preparedJson, detailCompact, Double.box(total), sfDir))
+    }
     val nFail = results.count { case (_, (r, _)) => !r.ok }
     val failNames = results.collect { case (k, (r, _)) if !r.ok => "\"" + k + "\"" }
       .take(10).mkString("[", ",", "]")
-    // Round-17 measurement fix (r16 verdict #2): the driver's per-query
-    // round-over-round comparator reads ONLY the final "metric":"total"
-    // line, and for two rounds its per_query came out empty because the
-    // qnum-keyed timing map lived on the earlier BENCH_COMPACT line. The
-    // final line now CARRIES the map (additions-only: every prior key —
-    // value, n_queries, failures, canary, fixture fields — is kept, and
-    // the headline keys stay at the very end so a tail-truncated capture
-    // still shows them). The old bounded-size summary keys are unchanged;
-    // BENCH_DETAIL/COMPACT files still hold the same record.
+    // The one stdout line. Per-query comparisons read only this line, so
+    // it carries the compact map (DECISIONS.md "The bench stdout
+    // contract").
     val summaryLine = String.format(java.util.Locale.ROOT,
       """{"metric":"total","unit":"sec","reps":%d,"n_queries":%d,"n_failures":%d,"failures":%s,"fmt":"qnum:[med_s,min_s,jobs,scan_mb]","queries":%s%s%s,"detail":"BENCH_DETAIL.json","compact":"BENCH_COMPACT.json","value":%.3f,"sf":"%s"}""",
       Int.box(Reps), Int.box(results.size), Int.box(nFail), failNames,

@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions.{col, posexplode}
   * `[median_sec, min_sec, jobs, scan_mb]` record as Bench (3 reps).
   *
   * Arguments are name filters: with none, every operator entry runs. The
-  * six synthetic skew-gate entries (`x_*_skew_*` and their two
-  * `x_*_uniform_*` controls) are not operator runs and run only when the
-  * explicit token `skew` is given, which selects all six; so the default
-  * ramp measures only the real operator surface.
+  * three synthetic skew-gate entries (`x_*_skew_window` and the
+  * `x_substr_uniform_window` control) are not operator runs and run only
+  * when the explicit token `skew` is given, which selects all three; so
+  * the default ramp measures only the real operator surface.
   */
 object ScaleRamp {
   private val Reps = 3
@@ -54,28 +54,17 @@ object ScaleRamp {
     *    constructed to BIND;
     *  - uniform: same doc count/shape, all 12 tokens unique per doc —
     *    the no-skew control at identical scale.
-    * window = the one-pass window shape (default); join = the
-    * skewRobust aggregate→probe shape (two postings derivations,
-    * map-side partial min/max, AQE-splittable probe). Both produce
-    * identical rows; the ratio adjudicates the default per corpus.
+    * Each entry records wall and `spill_disk_mb`, so a scale run where
+    * the window shape binds shows up here.
     */
   private def skewGate(spark: org.apache.spark.sql.SparkSession,
                        sfDir: String): Seq[(String, () => DataFrame)] = Seq(
     "x_substr_skew_window" -> (() => graft.ops.Dedup.exactSubstringSpansKeep(
       skewDocs(spark, sfDir), "doc_id", "text", k = 8, keepFirst = false)),
-    "x_substr_skew_join" -> (() => graft.ops.Dedup.exactSubstringSpansKeep(
-      skewDocs(spark, sfDir), "doc_id", "text", k = 8, keepFirst = false,
-      skewRobust = true)),
     "x_substr_uniform_window" -> (() => graft.ops.Dedup.exactSubstringSpansKeep(
       uniformDocs(spark, sfDir), "doc_id", "text", k = 8, keepFirst = false)),
-    "x_substr_uniform_join" -> (() => graft.ops.Dedup.exactSubstringSpansKeep(
-      uniformDocs(spark, sfDir), "doc_id", "text", k = 8, keepFirst = false,
-      skewRobust = true)),
     "x_linededup_skew_window" -> (() => graft.ops.Dedup.dedupLinesKeepFirst(
-      skewDocs(spark, sfDir), "doc_id", "text", lineTokens = 8)),
-    "x_linededup_skew_join" -> (() => graft.ops.Dedup.dedupLinesKeepFirst(
-      skewDocs(spark, sfDir), "doc_id", "text", lineTokens = 8,
-      skewRobust = true)))
+      skewDocs(spark, sfDir), "doc_id", "text", lineTokens = 8)))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "target/sfgen/sf1")

@@ -53,10 +53,6 @@ object VectorFunctions {
       greatest(lit(-127.0), least(lit(127.0),
         floor(x.cast("double") / scale + 0.5))).cast("tinyint"))
 
-  /** Reconstruct doubles from a quantized vector. */
-  def dequantize(q: Column, scale: Column): Column =
-    transform(q, x => x.cast("double") * scale)
-
   /** Largest per-element reconstruction error of the quantization —
     * bounded by scale/2, i.e. max|x|/254.
     */

@@ -20,18 +20,16 @@ import graft.functions.TextFunctions
   * equivalent for spans detected at k-token granularity):
   *   1. postings: posexplode the positional k-gram hashes → one
   *      (doc, pos, gram) row per gram occurrence — the ONLY wide op
-  *      whose input is corpus-sized (one explode + one groupBy shuffle);
+  *      whose input is corpus-sized (one explode + one shuffle);
   *   2. shared grams: a gram occurring in >1 DISTINCT doc marks every
   *      one of its occurrences as duplicated text. `min(doc) != max(doc)`
-  *      states ">1 distinct" with plain partial-aggregable min/max — no
-  *      count-distinct expansion;
-  *   3. hits: postings semi-joined to shared grams on the gram key. A
-  *      stopword-like gram (df in the thousands) makes this join key hot
-  *      on BOTH sides of the aggregate→probe pair, but unlike a pairwise
-  *      join the cost here stays LINEAR in postings — each occurrence
-  *      matches the one aggregated gram row, never other occurrences, so
-  *      skew means an uneven-but-linear partition, which AQE skew-join
-  *      splitting rebalances. The optional `maxGramDocFreq` cap is the
+  *      states ">1 distinct" with plain min/max over a window partitioned
+  *      by gram — no count-distinct expansion;
+  *   3. hits: the marked postings. A stopword-like gram (df in the
+  *      thousands) puts all its postings in one window task, but unlike a
+  *      pairwise join the cost stays LINEAR in postings — the hot-gram
+  *      gate at sf10 measured no spill and no binding straggler (SCALE.md,
+  *      round 17). The optional `maxGramDocFreq` cap is the
   *      belt-and-braces posture for boilerplate grams (license headers
   *      in millions of docs): capped grams are dropped from span
   *      detection like [[DedupJaccardJoin.jaccardJoinPrefix]] df-caps
@@ -42,7 +40,7 @@ import graft.functions.TextFunctions
   *      corpus-wide).
   *
   * At 100 TB: postings are ~L rows per doc of length L (narrow: two
-  * longs + an int), the groupBy and semi-join shuffle them twice, and
+  * longs + an int), the gram window shuffles them once, and
   * everything after operates on hit rows only (duplicated text), which
   * real corpora keep far smaller than postings. No all-pairs path
   * exists at any stage.
@@ -56,11 +54,7 @@ trait DedupSubstring {
     * one slice per chained word), and inlined it would re-evaluate the
     * whole tokenize+hash chain per reference — binding measured 1.35x on
     * the sf0.1 bench (6.4 s → 4.8 s). Multiple references also stop
-    * CollapseProject from re-inlining the bound column. The remaining
-    * cost is the two-branch posting derivation (agg + probe), the
-    * deliberate 100 TB trade: re-deriving narrow postings beats
-    * materializing or shuffling a corpus-sized frame (the
-    * decontaminateBloom two-scan stance).
+    * CollapseProject from re-inlining the bound column.
     */
   private def postings(df: DataFrame, idCol: String, textCol: String,
                        k: Int): DataFrame =
@@ -94,8 +88,7 @@ trait DedupSubstring {
     */
   def exactSubstringSpansKeep(df: DataFrame, idCol: String, textCol: String,
                               k: Int, keepFirst: Boolean,
-                              maxGramDocFreq: Option[Int] = None,
-                              skewRobust: Boolean = false): DataFrame = {
+                              maxGramDocFreq: Option[Int] = None): DataFrame = {
     require(k >= 1, "k must be positive")
     val posts = postings(df, idCol, textCol, k)
     // Shared-gram detection (round 16): the UNCAPPED path computes
@@ -111,36 +104,14 @@ trait DedupSubstring {
     // countDistinct(doc), which a window cannot express without an
     // object-tier collect_set buffer per gram — exactly the r15
     // allocation-storm anti-pattern on stopword-like grams.
-    //
-    // `skewRobust` (round 17, the r16 verdict's hot-gram item): the
-    // window concentrates ALL postings of a gram in one task and AQE
-    // cannot split a window partition, so a single gram holding more
-    // than a task's fair share of postings (a boilerplate prefix in
-    // every doc — possible at 100 TB, constructible at sf10) turns into
-    // a straggler. The skew-robust shape is the two-level algebraic
-    // min/max: a partial-aggregable groupBy (map-side combine collapses
-    // the hot gram to one row per map task — the "salted two-level
-    // min/max" with Spark's own partial aggregation as the first level)
-    // probed back with an AQE-skew-splittable join. Price: postings are
-    // derived twice. Identical output rows either way (oracle-proven);
-    // the sf10 skew measurement lives in SCALE.md (round 17) and
-    // ScaleRamp (`x_substr_skew_*`). Default stays the window — real
-    // corpora put a gram's df far below a task's fair share, and the
-    // window form measured 0.55-0.60× at sf0.1 (r16 A/B).
     val marked = maxGramDocFreq match {
-      case None if !skewRobust =>
+      case None =>
         val byGram = Window.partitionBy(col("__gram"))
         posts
           .withColumn("__dmin", min(col("__doc")).over(byGram))
           .withColumn("__dmax", max(col("__doc")).over(byGram))
           .filter(col("__dmin") =!= col("__dmax"))
           .drop("__dmax")
-      case None =>
-        val shared = posts.groupBy(col("__gram"))
-          .agg(min(col("__doc")).alias("__dmin"), max(col("__doc")).alias("__dmax"))
-          .filter(col("__dmin") =!= col("__dmax"))
-          .select(col("__gram"), col("__dmin"))
-        posts.join(shared, Seq("__gram"))
       case Some(cap) =>
         val byGram = posts.groupBy(col("__gram"))
           .agg(min(col("__doc")).alias("__dmin"), max(col("__doc")).alias("__dmax"),
@@ -218,16 +189,13 @@ trait DedupSubstring {
     *
     * The coarse-grained sibling of [[exactSubstringDedup]]: line hashing
     * is what CCNet runs corpus-wide BEFORE any heavier span machinery.
-    * Shape: one explode → one groupBy(line) with a partial-aggregable
-    * integer min (the (doc, pos) rank packs into one long — no struct
-    * min state) → one aggregate→probe equi-join back on the line (linear
-    * like the shared-gram join: each occurrence meets one aggregated
-    * row, never other occurrences) → one per-doc regroup. Contract:
+    * Shape: one explode → one integer min over a window partitioned by
+    * line (the (doc, pos) rank packs into one long — no struct min
+    * state) → one per-doc regroup. Contract:
     * pos < 2^20 lines per doc (the rank is doc_id·2^20 + pos).
     */
   def dedupLinesKeepFirst(df: DataFrame, idCol: String, textCol: String,
-                          lineTokens: Int = 8,
-                          skewRobust: Boolean = false): DataFrame = {
+                          lineTokens: Int = 8): DataFrame = {
     require(lineTokens > 0, s"lineTokens must be positive: $lineTokens")
     val toks = TextFunctions.tokens(col(textCol))
     val nLines = ceil(size(toks).cast("double") / lineTokens).cast("int")
@@ -259,22 +227,9 @@ trait DedupSubstring {
     // TWICE and shuffled it twice (min-rank aggregate + probe join);
     // min(__rank) over the line partition is the same integer min off
     // one shuffle, sorted by the same key the SMJ probe sorted by.
-    // `skewRobust` (round 17): same trade as exactSubstringSpansKeep's
-    // shared-gram shape — a boilerplate LINE repeated across a large
-    // fraction of the corpus concentrates in one window task; the
-    // aggregate→probe shape pays a second line-frame derivation for
-    // map-side partial min + AQE-splittable probe. Identical rows.
-    val kept =
-      if (!skewRobust)
-        l.withColumn("__keep",
-            min(col("__rank")).over(Window.partitionBy(col("line"))))
-          .filter(col("__rank") === col("__keep"))
-      else {
-        val firsts = l.groupBy(col("line"))
-          .agg(min(col("__rank")).alias("__keep"))
-        l.join(firsts, Seq("line"))
-          .filter(col("__rank") === col("__keep"))
-      }
+    val kept = l
+      .withColumn("__keep", min(col("__rank")).over(Window.partitionBy(col("line"))))
+      .filter(col("__rank") === col("__keep"))
     // Per-doc line totals from the UN-exploded array (round 16): the old
     // shape re-derived and re-exploded the corpus a third time only to
     // count rows per doc; the explode count per row IS the array size,

@@ -13,15 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object Joins {
 
-  /** Left equi-join on shared key columns (USING semantics — one copy of
-    * the key in the output). `broadcastRight` for small dimension sides.
-    */
-  def leftUsing(left: DataFrame, right: DataFrame, keys: Seq[String],
-                broadcastRight: Boolean = false): DataFrame = {
-    val r = if (broadcastRight) broadcast(right) else right
-    left.join(r, keys, "left")
-  }
-
   /** J3: star enrichment — chain left joins on one key, then coalesce the
     * listed metric columns to 0 for unmatched rows (reference:
     * gold/processor.py:159-169). All feature sides join on the SAME key, so

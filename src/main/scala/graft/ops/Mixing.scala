@@ -27,22 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object Mixing {
 
-  /** Repeat one corpus `weight` times; output gains `pass` ∈ [0, ceil(w)). */
-  def upsample(df: DataFrame, idCol: String, weight: Double,
-               seed: String = "42"): DataFrame = {
-    require(weight >= 0.0, s"negative weight: $weight")
-    val full = math.floor(weight).toLong
-    val frac = weight - full
-    val maxPass = if (frac > 0.0) full else full - 1
-    if (maxPass < 0) df.withColumn("pass", lit(0L)).limit(0)
-    else {
-      val exploded = df.withColumn("pass", explode(sequence(lit(0L), lit(maxPass))))
-      if (frac == 0.0) exploded
-      else exploded.filter(col("pass") < full ||
-        draw(idCol, seed) < lit(Sampling.hexThreshold(frac)))
-    }
-  }
-
   /** Per-source weighted repetition over one tagged corpus. Sources
     * absent from `weights` are DROPPED — a mix recipe is exhaustive, and
     * silently passing unlisted sources through at weight 1 would corrupt

@@ -384,16 +384,6 @@ object Profiling {
       .agg(SketchAggs.freqSketch(col(itemCol), maxMapSize).alias("sketch"),
         count(lit(1)).alias("n_rows"))
 
-  /** Merge per-group frequent-items sketches and report the global heavy
-    * hitters with their brackets.
-    */
-  def freqRollup(sketched: DataFrame, maxMapSize: Int = 256): DataFrame =
-    sketched.agg(
-      SketchAggs.freqMerge(col("sketch"), maxMapSize).alias("sketch"),
-      sum(col("n_rows")).alias("n_rows"))
-      .select(SketchAggs.freqTopItems(col("sketch")).alias("top_items"),
-        col("n_rows"))
-
   /** Per-group KLL quantile sketches over a numeric column — the
     * mergeable counterpart of the exact percentile tier (q38/q161): a
     * gold table stores one KLL column per group and ANY later rank

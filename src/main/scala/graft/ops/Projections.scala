@@ -31,9 +31,6 @@ object Projections {
   def sanitizeName(name: String): String =
     name.toLowerCase.replace(" ", "_").replace("-", "_")
 
-  /** P5: drop columns if present (drift-tolerant). */
-  def dropCols(df: DataFrame, cols: String*): DataFrame = df.drop(cols: _*)
-
   /** P6: safe cast — only applied when the column exists (the reference's
     * `if col in df.columns` drift tolerance, silver/processor.py:103-113).
     * Invalid values → null (non-ANSI cast semantics).
@@ -49,11 +46,6 @@ object Projections {
     */
   def mapValue(df: DataFrame, column: String, from: String, to: String): DataFrame =
     df.withColumn(column, when(col(column) === lit(from), lit(to)).otherwise(col(column)))
-
-  /** P10: null → 0 default (reference: coalesce on join outputs,
-    * gold/processor.py:166-169).
-    */
-  def zeroFill(c: Column): Column = coalesce(c, lit(0))
 
   /** P12: guarded division — denominator <= 0 (or null) → `default`
     * (reference: silver/processor.py:481-487, gold/processor.py:171-176).

@@ -10,16 +10,9 @@ import org.apache.spark.sql.{DataFrame, Row}
   */
 object Sampling {
 
-  /** O1: head sample for export. */
-  def limitSample(df: DataFrame, n: Int): DataFrame = df.limit(n)
-
   /** O2: Bernoulli sample, seed-stable (reference uses seed=42). */
   def bernoulliSample(df: DataFrame, fraction: Double, seed: Long = 42L): DataFrame =
     df.sample(withReplacement = false, fraction, seed)
-
-  /** O2+O1: the reference's big-table export shape — sample then cap. */
-  def sampleThenLimit(df: DataFrame, fraction: Double, n: Int, seed: Long = 42L): DataFrame =
-    bernoulliSample(df, fraction, seed).limit(n)
 
   /** Deterministic train/val/test split for training-data pipelines: the
     * bucket is a pure function of the id (seeded xxhash64 mod 10k), so

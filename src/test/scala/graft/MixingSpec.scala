@@ -20,9 +20,14 @@ class MixingSpec extends SparkSpec {
 
   private def docs = Tables.documents(spark, sf001).select("doc_id")
 
+  /** A one-source recipe: every doc repeated `weight` times. */
+  private def upsample(weight: Double) =
+    Mixing.mixCorpora(docs.withColumn("source", lit("s")), "source", "doc_id",
+      Map("s" -> weight))
+
   test("integer weight repeats every row exactly w times with distinct pass tags") {
     val n = docs.count()
-    val up = Mixing.upsample(docs, "doc_id", 2.0)
+    val up = upsample(2.0)
     assert(up.count() == 2 * n)
     val irregular = up.groupBy("doc_id")
       .agg(countDistinct("pass").as("p"), count(lit(1)).as("c"))
@@ -37,7 +42,7 @@ class MixingSpec extends SparkSpec {
     // non-vacuous: the draw must cut strictly between none and all
     assert(expectPass2.nonEmpty && expectPass2.size < ids.size)
 
-    val up = Mixing.upsample(docs, "doc_id", 2.3)
+    val up = upsample(2.3)
     val gotPass2 = up.filter(col("pass") === 2)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(gotPass2 == expectPass2)
@@ -45,11 +50,11 @@ class MixingSpec extends SparkSpec {
   }
 
   test("weight below 1 is a pure fractional pass; weight 0 is empty") {
-    val half = Mixing.upsample(docs, "doc_id", 0.5)
+    val half = upsample(0.5)
     assert(half.select("pass").distinct().collect().map(_.getLong(0)).toSeq == Seq(0L))
     val n = docs.count().toDouble
     assert(math.abs(half.count() / n - 0.5) < 0.15, "draw far from its fraction")
-    assert(Mixing.upsample(docs, "doc_id", 0.0).count() == 0)
+    assert(upsample(0.0).count() == 0)
   }
 
   test("mixture is bit-stable under repartitioning") {

@@ -3,50 +3,21 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.{SimHash64, TextFunctions}
-import graft.ops.{Bucketing, Skew}
+import graft.ops.Bucketing
 import graft.sources.Tables
 
-/** Skew salting, bucketed co-located joins, and the native SimHash
+/** AQE skew splitting, bucketed co-located joins, and the native SimHash
   * expression.
   */
 class ScaleOpsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("saltedJoin matches the plain join result on a skewed key") {
-    val left = Tables.lineitem(spark, sf001) // l_orderkey repeats ~4x; good enough
-      .select("l_orderkey", "l_quantity", "l_partkey", "l_suppkey", "l_linenumber")
-    val right = Tables.orders(spark, sf001)
-      .select(col("o_orderkey").alias("l_orderkey"), col("o_totalprice"))
-    val plain = left.join(right, Seq("l_orderkey"))
-      .agg(sum("l_quantity"), sum("o_totalprice"), count(lit(1))).head()
-    val salted = Skew.saltedJoin(left, right, "l_orderkey",
-        saltBy = col("l_partkey") * 10000 + col("l_suppkey"), nSalts = 8)
-      .agg(sum("l_quantity"), sum("o_totalprice"), count(lit(1))).head()
-    assert(plain == salted)
-  }
-
-  test("saltedSumCount matches plain groupBy sums") {
-    val li = Tables.lineitem(spark, sf001)
-    val plain = li.groupBy("l_orderkey")
-      .agg(sum("l_quantity").alias("s"), count(lit(1)).alias("n"))
-      .orderBy("l_orderkey").collect()
-    val salted = Skew.saltedSumCount(li, "l_orderkey", "l_quantity",
-        saltBy = col("l_partkey"), nSalts = 4)
-      .orderBy("l_orderkey").collect()
-    assert(plain.length == salted.length)
-    plain.zip(salted).foreach { case (p, s) =>
-      assert(p.getLong(0) == s.getLong(0))
-      assert(p.getDouble(1) == s.getDouble(1))
-      assert(p.getLong(2) == s.getLong(2))
-    }
-  }
-
   test("AQE splits a skewed join partition at runtime (the no-salt scale path)") {
-    // salting (Skew.saltedJoin) is the manual fix; the plan-level fix this
-    // library leans on at scale is AQE's OptimizeSkewedJoin — prove it
-    // fires: one key holds ~95% of the left side, thresholds are lowered
-    // to fixture scale, broadcast is disabled so the join is sort-merge,
-    // and the executed plan must carry the skew=true marker.
+    // the skew fix this library leans on at scale is AQE's
+    // OptimizeSkewedJoin — prove it fires: one key holds ~95% of the left
+    // side, thresholds are lowered to fixture scale, broadcast is disabled
+    // so the join is sort-merge, and the executed plan must carry the
+    // skew=true marker.
     val conf = spark.conf
     val saved = Seq(
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
