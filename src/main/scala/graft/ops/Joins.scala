@@ -84,9 +84,9 @@ object Joins {
     * Scale posture: unlike [[upsert]] (bounded batch), BOTH sides here
     * are full snapshots, so the full-outer join legitimately shuffles
     * both — that cost is structural. The 100 TB mitigation is LAYOUT, not
-    * the operator: write snapshots bucketed by the key
-    * ([[Bucketing]]), and the join plans as a zip of co-partitioned
-    * scans with zero exchange.
+    * the operator: write snapshots bucketed by the key (Spark's
+    * `bucketBy`), and the join plans as a zip of co-partitioned scans
+    * with zero exchange.
     */
   def snapshotDiff(oldSnap: DataFrame, newSnap: DataFrame,
                    keys: Seq[String]): DataFrame = {

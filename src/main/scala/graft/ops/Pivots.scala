@@ -1,39 +1,44 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Pivot operator (SURVEY §2.4 A5; reference: silver/processor.py:624-642).
   *
-  * The reference pre-aggregates `(key, status) → count` before pivoting so
-  * the pivot works on the shrunken frame, then sanitizes the dynamic column
-  * names driver-side. We keep both steps and additionally accept EXPLICIT
-  * pivot values: with values given, Spark skips the extra distinct-values
-  * job — one less full scan, and a stable output schema (critical at scale
-  * and for oracle comparison; dynamic schemas drift with data).
+  * The reference pre-aggregates `(key, status) → count`, pivots, renames
+  * the dynamic columns driver-side and fills nulls with 0. Here the pivot
+  * is ONE aggregation: a conditional count per pivot value, so the counts
+  * sit beside any other per-key aggregate in the same `groupBy` and read
+  * 0, never null, for a key with no row of that value. Pivot values are
+  * EXPLICIT: a fixed list skips the distinct-values job and pins the
+  * output schema (critical at scale and for oracle comparison; dynamic
+  * schemas drift with data). [[pivotValues]] is that job, for callers that
+  * want the reference's dynamic columns.
   */
 object Pivots {
 
-  /** count-per-value pivot: one row per `key`, one `<prefix><value><suffix>`
-    * column per pivot value, missing combinations filled with 0.
+  /** One `<prefix><value><suffix>` LongType column per pivot value: the
+    * group's row count with `pivotCol` equal to the value.
+    */
+  def countColumns(pivotCol: String, values: Seq[String],
+                   prefix: String, suffix: String): Seq[Column] =
+    values.map { v =>
+      sum(when(col(pivotCol) === v, 1L).otherwise(0L))
+        .alias(prefix + Projections.sanitizeName(v) + suffix)
+    }
+
+  /** count-per-value pivot: one row per `key`, one [[countColumns]]
+    * column per pivot value.
     */
   def pivotCount(df: DataFrame, key: String, pivotCol: String,
                  values: Seq[String], prefix: String = "", suffix: String = "_count"): DataFrame = {
-    val pre = df.groupBy(col(key), col(pivotCol)).agg(count(lit(1)).alias("__n"))
-    val piv = pre.groupBy(col(key)).pivot(pivotCol, values).sum("__n")
-    val renamed = values.foldLeft(piv) { (acc, v) =>
-      acc.withColumnRenamed(v, prefix + Projections.sanitizeName(v) + suffix)
-    }
-    renamed.na.fill(0L, values.map(v => prefix + Projections.sanitizeName(v) + suffix))
+    val counts = countColumns(pivotCol, values, prefix, suffix)
+    df.groupBy(col(key)).agg(counts.head, counts.tail: _*)
   }
 
-  /** Dynamic-values variant (runs the distinct job; values sorted for a
-    * deterministic column order). Mirrors the reference exactly.
+  /** The distinct values of `pivotCol`, sorted for a deterministic column
+    * order (one job). Mirrors the reference's dynamic pivot columns.
     */
-  def pivotCountDynamic(df: DataFrame, key: String, pivotCol: String,
-                        prefix: String = "", suffix: String = "_count"): DataFrame = {
-    val values = df.select(pivotCol).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-    pivotCount(df, key, pivotCol, values, prefix, suffix)
-  }
+  def pivotValues(df: DataFrame, pivotCol: String): Seq[String] =
+    df.select(pivotCol).distinct().collect().map(_.getString(0)).toSeq.sorted
 }

@@ -236,13 +236,4 @@ object PlanAudit {
     }
     warns.result().distinct
   }
-
-  /** Throw if the plan carries any ERROR finding (product joins). */
-  def assertScalable(df: DataFrame, maxExchanges: Int = 6): Unit = {
-    val findings = audit(df, maxExchanges)
-    val errors = findings.filter(_.severity == "ERROR")
-    if (errors.nonEmpty)
-      throw new IllegalStateException(
-        s"plan fails the scale audit:\n${errors.mkString("\n")}")
-  }
 }

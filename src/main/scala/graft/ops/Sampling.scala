@@ -14,32 +14,6 @@ object Sampling {
   def bernoulliSample(df: DataFrame, fraction: Double, seed: Long = 42L): DataFrame =
     df.sample(withReplacement = false, fraction, seed)
 
-  /** Deterministic train/val/test split for training-data pipelines: the
-    * bucket is a pure function of the id (seeded xxhash64 mod 10k), so
-    * the same row lands in the same split on every run, on any cluster
-    * size, and across reshuffles — unlike `randomSplit`, which depends on
-    * partition layout. Fractions must sum to ≤ 1; rows beyond the listed
-    * fractions (if they sum below 1) get split = null.
-    *
-    * Zero-shuffle: the split column is a projection; downstream writers
-    * can `partitionBy("split")`.
-    */
-  def hashSplit(df: DataFrame, idCol: String,
-                fractions: Seq[(String, Double)], seed: Long = 42L): DataFrame = {
-    import org.apache.spark.sql.functions._
-    require(fractions.nonEmpty && fractions.map(_._2).sum <= 1.0 + 1e-9,
-      "split fractions must sum to <= 1")
-    val bucket = pmod(xxhash64(col(idCol), lit(seed)), lit(10000L))
-    val bounds = fractions.scanLeft(0L) { case (acc, (_, f)) =>
-      acc + math.round(f * 10000)
-    }.tail
-    val expr = fractions.zip(bounds).foldRight(lit(null).cast("string")) {
-      case (((name, _), hi), elseExpr) =>
-        when(bucket < hi, lit(name)).otherwise(elseExpr)
-    }
-    df.withColumn("split", expr)
-  }
-
   /** Exact-fraction stratified sample: per-stratum Bernoulli with a
     * seeded hash threshold — deterministic, single pass, no
     * count-per-stratum pre-job (`df.stat.sampleBy` has the same contract

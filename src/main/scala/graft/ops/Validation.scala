@@ -72,7 +72,7 @@ object Validation {
     *
     * Scale: one shuffle each side on the shared key — structural for two
     * fact-sized tables; bucket both by the key at write time and the join
-    * co-locates ([[Bucketing]]). The detail aggregate is map-side
+    * co-locates (Spark's `bucketBy`). The detail aggregate is map-side
     * combined before its shuffle, so the join sees one row per key.
     */
   def reconcileAggregate(fact: DataFrame, factKey: String, factVal: Column,

@@ -13,9 +13,12 @@ import graft.ops.{Pivots, Projections, SetOps, Validation, Windows}
   * Deviations from the reference are performance-only, never semantic:
   *  - validation metrics come from ONE conditional-sum pass, not one
   *    count() job per rule (7 rescans → 1);
-  *  - the pivot accepts explicit status values to skip the distinct job
+  *  - previous applications are ONE per-client aggregation (counts,
+  *    amount averages and a conditional count per status) where the
+  *    reference runs three and joins them back;
+  *  - the status pivot accepts explicit values to skip the distinct job
   *    and fix the output schema (pass None to match the reference's
-  *    dynamic behavior exactly).
+  *    dynamic columns).
   */
 object Silver {
 
@@ -127,47 +130,37 @@ object Silver {
   }
 
   /** silver_previous_applications: counts + rejection rate + average
-    * amounts (drift-tolerant) + sanitized status pivot, joined per client
-    * (silver/processor.py:588-651).
+    * amounts + status pivot per client (silver/processor.py:588-651), as
+    * ONE aggregation — the reference's three per-client aggregates and
+    * two joins give the same rows. Only the amount averages are
+    * drift-tolerant (each is built when its column is present);
+    * `NAME_CONTRACT_STATUS` is required.
     *
     * `statusValues`: pass the known status set to pin the schema and skip
     * the distinct-values job; None reproduces the reference's dynamic
-    * pivot.
+    * pivot columns.
     */
   def previousApplications(prev: DataFrame,
                            statusValues: Option[Seq[String]] = None): DataFrame = {
-    val counts = prev.groupBy("SK_ID_CURR")
-      .agg(
-        count(lit(1)).alias("previous_app_count"),
-        sum(when(col("NAME_CONTRACT_STATUS").isin("Refused", "Refused by client"), 1)
-          .otherwise(0)).alias("previous_rejected_count"))
-      .withColumn("previous_rejection_rate",
-        Projections.guardedDiv(
-          col("previous_rejected_count"), col("previous_app_count"), lit(0.0)))
-
+    val status = "NAME_CONTRACT_STATUS"
     val amountAggs = Seq(
       "AMT_APPLICATION" -> "previous_avg_requested",
       "AMT_CREDIT" -> "previous_avg_granted"
     ).collect { case (src, dst) if prev.columns.contains(src) => avg(col(src)).alias(dst) }
+    val statusCounts = Pivots.countColumns(status,
+      statusValues.getOrElse(Pivots.pivotValues(prev, status)),
+      "prev_status_", "_count")
 
-    val withAmounts =
-      if (amountAggs.nonEmpty)
-        counts.join(
-          prev.groupBy("SK_ID_CURR").agg(amountAggs.head, amountAggs.tail: _*),
-          Seq("SK_ID_CURR"), "left")
-      else counts
-
-    val statusCounts =
-      if (prev.columns.contains("NAME_CONTRACT_STATUS"))
-        statusValues match {
-          case Some(vs) => Pivots.pivotCount(prev, "SK_ID_CURR", "NAME_CONTRACT_STATUS",
-            vs, prefix = "prev_status_", suffix = "_count")
-          case None => Pivots.pivotCountDynamic(prev, "SK_ID_CURR", "NAME_CONTRACT_STATUS",
-            prefix = "prev_status_", suffix = "_count")
-        }
-      else prev.select("SK_ID_CURR").distinct()
-
-    withAmounts.join(statusCounts, Seq("SK_ID_CURR"), "left")
+    val rejected = sum(when(col(status).isin("Refused", "Refused by client"), 1).otherwise(0))
+      .alias("previous_rejected_count")
+    val perClient = prev.groupBy("SK_ID_CURR")
+      .agg(count(lit(1)).alias("previous_app_count"), rejected +: (amountAggs ++ statusCounts): _*)
+    val rate = Projections.guardedDiv(
+      col("previous_rejected_count"), col("previous_app_count"), lit(0.0))
+      .alias("previous_rejection_rate")
+    // the rate sits after the two counts, where the reference's withColumn put it
+    val (keyAndCounts, features) = perClient.columns.toSeq.map(col).splitAt(3)
+    perClient.select(keyAndCounts ++ (rate +: features): _*)
       .filter(col("SK_ID_CURR").isNotNull)
   }
 }

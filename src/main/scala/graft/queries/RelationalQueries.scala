@@ -172,8 +172,8 @@ object RelationalQueries {
               |       ELSE NULL END AS tax_ratio
               |FROM lineitem GROUP BY l_orderkey""".stripMargin)),
 
-    // A5: pre-aggregate-then-pivot with explicit values (stable schema,
-    // skips the distinct-values job).
+    // A5: count-per-status pivot as one conditional-count aggregation,
+    // explicit values (stable schema, skips the distinct-values job).
     QueryDef("q10_pivot_status",
       (s, d) => Pivots.pivotCount(Tables.orders(s, d), "o_custkey", "o_orderstatus",
           Seq("F", "O", "P"), prefix = "status_")

@@ -80,26 +80,6 @@ class ActionsSpec extends SparkSpec {
     }
   }
 
-  test("hashSplit is deterministic, disjoint-complete, and near the fractions") {
-    import graft.ops.Sampling
-    val docs = graft.sources.Tables.documents(spark, sf001)
-    val split = Sampling.hashSplit(docs, "doc_id",
-      Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-    val counts = split.groupBy("split").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val total = counts.values.sum
-    assert(total == docs.count())                 // complete, no null split
-    assert(!counts.contains(null))
-    assert(math.abs(counts("train").toDouble / total - 0.8) < 0.05)
-    assert(math.abs(counts("val").toDouble / total - 0.1) < 0.04)
-    // a re-run and a repartitioned run assign every row identically
-    val again = Sampling.hashSplit(docs.repartition(7), "doc_id",
-      Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-    val joined = split.select(col("doc_id"), col("split").alias("a"))
-      .join(again.select(col("doc_id"), col("split").alias("b")), "doc_id")
-    assert(joined.filter(col("a") =!= col("b")).count() == 0)
-  }
-
   test("stratifiedSample keeps per-stratum fractions and is a subset") {
     import graft.ops.Sampling
     val events = graft.sources.Tables.events(spark, sf001)

@@ -110,27 +110,44 @@ class PipelineSpec extends SparkSpec {
 
   test("previousApplications: rejection rate, averages, sanitized pivot columns") {
     val prev = Seq(
-      (1L, 10L, "Approved", 10000.0, 8000.0),
-      (2L, 10L, "Refused", 15000.0, 0.0),
-      (3L, 10L, "Unused offer", 5000.0, 0.0),
-      (4L, 20L, "Refused by client", 9000.0, 0.0))
-      .toDF("SK_ID_PREV", "SK_ID_CURR", "NAME_CONTRACT_STATUS",
-        "AMT_APPLICATION", "AMT_CREDIT")
-    val out = Silver.previousApplications(prev)
-    // 'Unused offer' → prev_status_unused_offer_count (spaces sanitized)
-    assert(out.columns.contains("prev_status_unused_offer_count"))
-    assert(out.columns.contains("prev_status_refused_by_client_count"))
-    val rows = out.collect().map(r => r.getAs[Long]("SK_ID_CURR") -> r).toMap
-    val c10 = rows(10L)
-    assert(c10.getAs[Long]("previous_app_count") == 3L)
-    assert(c10.getAs[Long]("previous_rejected_count") == 1L)
-    assert(math.abs(c10.getAs[Double]("previous_rejection_rate") - 1.0 / 3.0) < 1e-12)
-    assert(math.abs(c10.getAs[Double]("previous_avg_requested") - 10000.0) < 1e-9)
-    assert(rows(20L).getAs[Double]("previous_rejection_rate") == 1.0)
-    // explicit-values variant pins the schema without a distinct job
+      (Some(10L), "Approved", Some(10000.0), Some(8000.0)),
+      (Some(10L), "Refused", Some(15000.0), Some(0.0)),
+      (Some(10L), "Unused offer", Some(5000.0), Some(0.0)),     // no 'Refused by client' row
+      (Some(20L), "Refused by client", Some(9000.0), Some(4000.0)),
+      (Some(20L), "Canceled", None, Some(3000.0)),               // outside the pinned set
+      (Some(30L), "Approved", None, None),                       // no amounts at all
+      (None, "Refused", Some(100.0), Some(100.0)))               // null key: dropped
+      .toDF("SK_ID_CURR", "NAME_CONTRACT_STATUS", "AMT_APPLICATION", "AMT_CREDIT")
+    val head = Seq(
+      StructField("SK_ID_CURR", LongType),
+      StructField("previous_app_count", LongType, nullable = false),
+      StructField("previous_rejected_count", LongType),
+      StructField("previous_rejection_rate", DoubleType),
+      StructField("previous_avg_requested", DoubleType),
+      StructField("previous_avg_granted", DoubleType))
+    def statusFields(names: String*) =
+      names.map(n => StructField(s"prev_status_${n}_count", LongType))
+    def rowsOf(df: DataFrame) = df.collect().sortBy(_.getLong(0)).toSeq
+
+    // pinned: the schema is the given set; a missing status reads 0, an
+    // unlisted one is ignored
     val pinned = Silver.previousApplications(prev,
       Some(Seq("Approved", "Refused", "Refused by client", "Unused offer")))
-    assert(pinned.columns.count(_.startsWith("prev_status_")) == 4)
+    assert(pinned.schema == StructType(head ++
+      statusFields("approved", "refused", "refused_by_client", "unused_offer")))
+    assert(rowsOf(pinned) == Seq(
+      Row(10L, 3L, 1L, 1.0 / 3, 10000.0, 8000.0 / 3, 1L, 1L, 0L, 1L),
+      Row(20L, 2L, 1L, 0.5, 9000.0, 3500.0, 0L, 0L, 1L, 0L),
+      Row(30L, 1L, 0L, 0.0, null, null, 1L, 0L, 0L, 0L)))
+
+    // dynamic (the reference): one column per distinct status, sorted
+    val dynamic = Silver.previousApplications(prev)
+    assert(dynamic.schema == StructType(head ++ statusFields(
+      "approved", "canceled", "refused", "refused_by_client", "unused_offer")))
+    assert(rowsOf(dynamic) == Seq(
+      Row(10L, 3L, 1L, 1.0 / 3, 10000.0, 8000.0 / 3, 1L, 0L, 1L, 0L, 1L),
+      Row(20L, 2L, 1L, 0.5, 9000.0, 3500.0, 0L, 1L, 0L, 1L, 0L),
+      Row(30L, 1L, 0L, 0.0, null, null, 1L, 0L, 0L, 0L, 0L)))
   }
 
   test("gold clientRiskProfile: zero-fills, ratios, segment rules, rounding") {

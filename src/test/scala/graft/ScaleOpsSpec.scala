@@ -3,11 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.{SimHash64, TextFunctions}
-import graft.ops.Bucketing
 import graft.sources.Tables
 
-/** AQE skew splitting, bucketed co-located joins, and the native SimHash
-  * expression.
+/** AQE skew splitting and the native SimHash expression.
   */
 class ScaleOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -145,28 +143,6 @@ class ScaleOpsSpec extends SparkSpec {
       saved.foreach { case (k, v) =>
         v match { case Some(x) => conf.set(k, x); case None => conf.unset(k) }
       }
-    }
-  }
-
-  test("bucketed tables join without exchange or sort") {
-    val wh = java.nio.file.Files.createTempDirectory("bucketed").toString
-    Bucketing.writeBucketed(Tables.orders(spark, sf001), spark,
-      "orders_bkt", s"$wh/orders", "o_orderkey", 4)
-    Bucketing.writeBucketed(
-      Tables.lineitem(spark, sf001).withColumnRenamed("l_orderkey", "o_orderkey"),
-      spark, "lineitem_bkt", s"$wh/lineitem", "o_orderkey", 4)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
-      val joined = Bucketing.coLocatedJoin(spark, "orders_bkt", "lineitem_bkt", "o_orderkey")
-      joined.collect()
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"bucketed join still shuffles:\n$plan")
-      assert(joined.count() == Tables.lineitem(spark, sf001).count())
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS orders_bkt")
-      spark.sql("DROP TABLE IF EXISTS lineitem_bkt")
     }
   }
 
