@@ -20,13 +20,13 @@ import org.apache.spark.sql.SparkSession
   *    or compiler deopt can't fake a regression;
   *  - cached/checkpointed blocks are swept between queries — a query's
   *    timing must not depend on what the previous query leaked.
+  * [[Measure]] holds the rep loop and these rules for Bench and ScaleRamp.
   */
 object Bench {
-  // 5 is the committed-record contract (the driver's full sf0.1 run);
-  // SPARK_GRAFT_BENCH_REPS exists ONLY for huge generated-SF diagnostic
-  // runs (sf100: one rep is minutes), where 3 reps keeps a median while
-  // staying inside the round budget — SCALE.md marks any row measured
-  // with fewer reps.
+  // 5 is the committed-record contract (the full sf0.1 run);
+  // SPARK_GRAFT_BENCH_REPS exists ONLY for diagnostic runs, e.g.
+  // scripts/ab.sh's 3 reps per JVM — SCALE.md marks any row measured with
+  // fewer reps.
   private val Reps: Int = {
     val raw = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5")
     val n =
@@ -39,21 +39,6 @@ object Bench {
       "(0 reps would feed empty rep sets to the median)")
     n
   }
-
-  /** Sweep session state a query may have left behind: CacheManager
-    * entries and directly-persisted RDDs (localCheckpoint blocks backing a
-    * returned frame land here too).
-    */
-  private def sweep(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-  }
-
-  /** One rep's record: elapsed seconds, jobs launched, bytes scanned
-    * (metered by the shared [[JobMeter]]: same jobs+bytes but more seconds
-    * is noise, more jobs or bytes is a plan change).
-    */
-  private final case class Rep(sec: Double, jobs: Long, scanBytes: Long, ok: Boolean)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -81,51 +66,28 @@ object Bench {
       } catch { case e: Throwable =>
         System.err.println(s"[bench] host canary failed: ${e.getMessage}"); -1.0
       }
-    sweep(spark)
+    Measure.sweep(spark)
 
     // Matched-scale shape comparison FIRST (full runs only): the
     // reference's literal job structure vs the library's, same fixtures,
-    // same deliverables, pristine session, under the same interleaved-
-    // median machinery as the per-query bench.
+    // same deliverables, pristine session, reps interleaved and retried
+    // under the same rule as the per-query bench.
     val shape =
       if (args.isEmpty || args.headOption.contains("shape")) {
-        try {
-          val (ref, ours) = ShapeBench.compareRepped(spark, sfDir, Reps)
-          // Locale.ROOT: the f-interpolator is locale-sensitive and would
-          // emit comma decimals (invalid JSON) on e.g. de_DE JVMs
-          String.format(java.util.Locale.ROOT,
-            ""","shape_reps":%d,"baseline_shape_sec":%.3f,"baseline_shape_min_sec":%.3f,"graft_shape_sec":%.3f,"graft_shape_min_sec":%.3f,"shape_speedup":%.3f,"baseline_shape_jobs":%d,"graft_shape_jobs":%d,"baseline_shape_scan_mb":%d,"graft_shape_scan_mb":%d""",
-            Int.box(math.max(ref.reps, ours.reps)),
-            Double.box(ref.med.sec), Double.box(ref.minSec),
-            Double.box(ours.med.sec), Double.box(ours.minSec),
-            Double.box(ref.med.sec / ours.med.sec),
-            Long.box(ref.med.jobs), Long.box(ours.med.jobs),
-            Long.box(ref.med.scanBytes / 1048576), Long.box(ours.med.scanBytes / 1048576))
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] shape compare failed: ${e.getMessage}")
-            ""","shape_error":true"""
-        }
+        val Seq((_, ref), (_, ours)) = Measure.repped(spark, Seq(
+          "reference shape" -> (() => ShapeBench.referenceShape(spark, sfDir)),
+          "graft shape" -> (() => ShapeBench.graftShape(spark, sfDir))), Reps)
+        val (rm, om) = (ref.median, ours.median)
+        // Locale.ROOT: the f-interpolator is locale-sensitive and would
+        // emit comma decimals (invalid JSON) on e.g. de_DE JVMs
+        if (ref.ok && ours.ok) String.format(java.util.Locale.ROOT,
+          ""","shape_reps":%d,"baseline_shape_sec":%.3f,"baseline_shape_min_sec":%.3f,"graft_shape_sec":%.3f,"graft_shape_min_sec":%.3f,"shape_speedup":%.3f,"baseline_shape_jobs":%d,"graft_shape_jobs":%d,"baseline_shape_scan_mb":%d,"graft_shape_scan_mb":%d""",
+          Int.box(Reps), Double.box(rm.sec), Double.box(ref.fastest.sec),
+          Double.box(om.sec), Double.box(ours.fastest.sec), Double.box(rm.sec / om.sec),
+          Long.box(rm.jobs), Long.box(om.jobs),
+          Long.box(rm.scanBytes / 1048576), Long.box(om.scanBytes / 1048576))
+        else ""","shape_error":true"""
       } else ""
-    sweep(spark)
-
-    val meter = new JobMeter
-    spark.sparkContext.addSparkListener(meter)
-
-    // One timed+metered rep; failure is recorded, never masked (a crashed
-    // query must not contribute an innocent-looking small timing).
-    def runOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Rep = {
-      meter.reset()
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
-        catch { case e: Throwable => System.err.println(s"[bench] ${e.getMessage}"); false }
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
-      val r = Rep(sec, meter.jobs.get, meter.bytes.get, ok)
-      sweep(spark)
-      r
-    }
 
     // warmup: touch every fixture table once (scan + codegen warm)
     try graft.sources.Tables.registerAll(spark, sfDir) catch { case _: Throwable => }
@@ -166,7 +128,7 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] q93 index prepare failed (falls back to inline build): ${e.getMessage}")
     }
-    sweep(spark)
+    Measure.sweep(spark)
 
     // q265's KMV store is persisted state the same way (build untimed,
     // report the cost, let the timed reps measure the READBACK rollup
@@ -180,7 +142,7 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] q265 store prepare failed (falls back to inline build): ${e.getMessage}")
     }
-    sweep(spark)
+    Measure.sweep(spark)
 
     // q266's IVF index is persisted state the same way (build once per
     // corpus refresh, probe per request batch) — build untimed, report
@@ -194,7 +156,7 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] q266 index prepare failed (falls back to inline build): ${e.getMessage}")
     }
-    sweep(spark)
+    Measure.sweep(spark)
 
     // Media fixtures are input SYNTHESIS, not the measured op: pre-build
     // them untimed (Fixtures builds once per JVM — the timed reps then
@@ -218,7 +180,7 @@ object Bench {
         System.err.println(s"[bench] $key prepare failed (falls back to inline build): ${e.getMessage}")
       }
     }
-    sweep(spark)
+    Measure.sweep(spark)
 
     // Per-stage diagnostics for the two composed chains: each stage frame is
     // materialized ONCE through noop, so the committed record carries
@@ -231,18 +193,14 @@ object Bench {
     // the parent query, so sf-ramp snapshots carry the split.
     def stageSplit(parent: String,
                    stages: => Seq[(String, org.apache.spark.sql.DataFrame)]): Unit = {
-      // SPARK_GRAFT_SKIP_STAGES=1 skips the diagnostic splits (huge-SF
-      // runs where one cumulative stage walk costs more than the repped
-      // query itself); the committed sf0.1 record always carries them.
-      // Compared against "1" exactly, so SPARK_GRAFT_SKIP_STAGES=0 runs them.
-      val wanted = !sys.env.get("SPARK_GRAFT_SKIP_STAGES").contains("1") && (args.isEmpty ||
-        args.headOption.exists(_.split(',').exists(p => p.nonEmpty && parent.contains(p))))
+      val wanted = args.isEmpty ||
+        args.headOption.exists(_.split(',').exists(p => p.nonEmpty && parent.contains(p)))
       if (wanted) try {
         for ((name, df) <- stages) {
           val t0 = System.nanoTime()
           df.write.mode("overwrite").format("noop").save()
           prepared(s"${parent}_stage_${name}_sec") = (System.nanoTime() - t0) / 1e9
-          sweep(spark)
+          Measure.sweep(spark)
         }
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $parent stage split failed: ${e.getMessage}")
@@ -251,76 +209,21 @@ object Bench {
     stageSplit("q97", graft.queries.TextQueries.curationStages(spark, sfDir))
     stageSplit("q138", graft.queries.TextQueries.assemblyStages(spark, sfDir))
 
-    val ordered = selected.toSeq.sortBy(_._1)
-    // Reps are INTERLEAVED round-robin across queries (rep 1 of every
-    // query, then rep 2, ...) so a transient load spike degrades one rep
-    // of many queries — which the median absorbs — instead of sitting on
-    // all reps of whichever query it landed on.
-    val results: Seq[(String, (Rep, Double))] =
-      try {
-        val byName = scala.collection.mutable.Map.empty[String, Vector[Rep]]
-          .withDefaultValue(Vector.empty)
-        for (_ <- 1 to Reps; (name, fn) <- ordered)
-          byName(name) = byName(name) :+ runOne(fn)
-        // Up to TWO retry rounds for environment-noise victims: a median
-        // > 1.5× min at equal jobs/bytes is load, not plan — re-measure and
-        // keep the lower-median rep set; the min stays the global min, so a
-        // slow query cannot launder its number here. The jobs/scanBytes
-        // equality is CHECKED against the full global-min Rep (bimodal
-        // plans keep their honest median).
-        val current = scala.collection.mutable.Map.empty[String, Vector[Rep]]
-        val globalMinRep = scala.collection.mutable.Map.empty[String, Rep]
-        val okAll = scala.collection.mutable.Map.empty[String, Boolean]
-        for ((name, _) <- ordered) {
-          current(name) = byName(name)
-          globalMinRep(name) = current(name).minBy(_.sec)
-          okAll(name) = current(name).forall(_.ok)
-        }
-        for (round <- 1 to 2) {
-          val retryNames = ordered.filter { case (name, _) =>
-            val reps = current(name)
-            val med = reps.sortBy(_.sec).apply(reps.size / 2)
-            val minRep = globalMinRep(name)
-            okAll(name) && minRep.sec > 0 &&
-              med.sec > 1.5 * minRep.sec &&
-              med.jobs == minRep.jobs &&
-              math.abs(med.scanBytes - minRep.scanBytes) <=
-                math.max(minRep.scanBytes / 10, 1L << 20)
-          }
-          if (retryNames.nonEmpty)
-            System.err.println(s"[bench] retry round $round, noisy medians: ${retryNames.map(_._1).mkString(",")}")
-          val retried = scala.collection.mutable.Map.empty[String, Vector[Rep]]
-            .withDefaultValue(Vector.empty)
-          for (_ <- 1 to Reps; (name, fn) <- retryNames)
-            retried(name) = retried(name) :+ runOne(fn)
-          for ((name, reps) <- retried) {
-            val newMin = reps.minBy(_.sec)
-            if (newMin.sec < globalMinRep(name).sec) globalMinRep(name) = newMin
-            okAll(name) = okAll(name) && reps.forall(_.ok)
-            val oldMed = current(name).sortBy(_.sec).apply(current(name).size / 2)
-            val newMed = reps.sortBy(_.sec).apply(reps.size / 2)
-            if (newMed.sec < oldMed.sec) current(name) = reps
-          }
-        }
-        // The rep with the MEDIAN wall time (its jobs/bytes ride along, so
-        // the reported triple is one real run, not a mix), plus the MIN wall
-        // time. A single failed rep marks the query failed.
-        ordered.map { case (name, _) =>
-          val med = current(name).sortBy(_.sec).apply(current(name).size / 2)
-          name -> (med.copy(ok = okAll(name)), globalMinRep(name).sec)
-        }
-      } finally spark.sparkContext.removeSparkListener(meter)
+    val results = Measure.repped(spark, selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> (() => fn(spark, sfDir).write.mode("overwrite").format("noop").save())
+    }, Reps)
     // Per-query record is [median_sec, min_sec, jobs, scan_mb], median
     // negative on failure. Output layering: DECISIONS.md "The bench stdout
     // contract".
-    def queryMap(key: String => String): String = results.map { case (k, (r, minSec)) =>
+    def queryMap(key: String => String): String = results.map { case (k, rec) =>
+      val r = rec.median
       String.format(java.util.Locale.ROOT, """"%s":[%.2f,%.2f,%d,%d]""",
-        key(k), Double.box(if (r.ok) r.sec else -r.sec), Double.box(minSec),
+        key(k), Double.box(if (rec.ok) r.sec else -r.sec), Double.box(rec.fastest.sec),
         Long.box(r.jobs), Long.box(r.scanBytes / 1048576))
     }.mkString("{", ",", "}")
-    val failures = results.collect { case (k, (r, _)) if !r.ok => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val total = results.collect { case (_, (r, _)) if r.ok => r.sec }.sum
+    val failed = results.collect { case (k, rec) if !rec.ok => "\"" + k + "\"" }
+    val failures = failed.mkString("[", ",", "]")
+    val total = results.collect { case (_, rec) if rec.ok => rec.median.sec }.sum
 
     val preparedJson = prepared.map { case (k, v) =>
       String.format(java.util.Locale.ROOT, ""","%s":%.3f""", k, Double.box(v))
@@ -339,15 +242,13 @@ object Bench {
         """{"metric":"total","unit":"sec","reps":%d,"fmt":"qnum:[med_s,min_s,jobs,scan_mb]","failures":%s%s%s,"queries":%s,"value":%.3f,"sf":"%s"}""",
         Int.box(Reps), failures, shape, preparedJson, detailCompact, Double.box(total), sfDir))
     }
-    val nFail = results.count { case (_, (r, _)) => !r.ok }
-    val failNames = results.collect { case (k, (r, _)) if !r.ok => "\"" + k + "\"" }
-      .take(10).mkString("[", ",", "]")
+    val failNames = failed.take(10).mkString("[", ",", "]")
     // The one stdout line. Per-query comparisons read only this line, so
     // it carries the compact map (DECISIONS.md "The bench stdout
     // contract").
     val summaryLine = String.format(java.util.Locale.ROOT,
       """{"metric":"total","unit":"sec","reps":%d,"n_queries":%d,"n_failures":%d,"failures":%s,"fmt":"qnum:[med_s,min_s,jobs,scan_mb]","queries":%s%s%s,"detail":"BENCH_DETAIL.json","compact":"BENCH_COMPACT.json","value":%.3f,"sf":"%s"}""",
-      Int.box(Reps), Int.box(results.size), Int.box(nFail), failNames,
+      Int.box(Reps), Int.box(results.size), Int.box(failed.size), failNames,
       detailCompact, shape, preparedJson, Double.box(total), sfDir)
     println(summaryLine)
     spark.stop()

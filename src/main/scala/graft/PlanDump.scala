@@ -45,9 +45,7 @@ object PlanDump {
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $name failed: ${e.getMessage}")
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Measure.sweep(spark)
     }
     spark.stop()
   }

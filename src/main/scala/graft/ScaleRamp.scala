@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions.{col, posexplode}
   * bound their brute-force DuckDB oracles — at a generated sf1 those
   * filters would pin the working set to the sf0.1 size and the scale claim
   * would be untested. Prints one JSON line with the same
-  * `[median_sec, min_sec, jobs, scan_mb]` record as Bench (3 reps).
+  * `[median_sec, min_sec, jobs, scan_mb]` record as Bench (3 interleaved
+  * reps and the same retry rule, through [[Measure]]) plus `spill_disk_mb`.
   *
   * Arguments are name filters: with none, every operator entry runs. The
   * three synthetic skew-gate entries (`x_*_skew_window` and the
@@ -69,28 +70,10 @@ object ScaleRamp {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "target/sfgen/sf1")
     val spark = GraftSession.local()
-    val meter = new JobMeter
-    spark.sparkContext.addSparkListener(meter)
 
-    def sweep(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
-
-    // Prebuilt corpus index for the q93 probe decomposition (untimed —
-    // persisted state is the premise of the incremental shape, exactly as
-    // Bench treats it)
-    lazy val q93Idx: String = {
-      val p = new java.io.File(
-        s"target/bench_idx/ramp_q93_${new java.io.File(sfDir).getName}")
-        .getAbsolutePath
-      graft.ops.Dedup.minHashSignatures(
-        graft.sources.Tables.documents(spark, sfDir)
-          .filter(col("doc_id") % 25 =!= 0),
-        "doc_id", "text", shingleK = 1, numHashes = 48)
-        .write.mode("overwrite").parquet(p)
-      p
-    }
+    // corpus index of the q93 probe decomposition, built below
+    val q93Idx = new java.io.File(
+      s"target/bench_idx/ramp_q93_${new java.io.File(sfDir).getName}").getAbsolutePath
 
     val runs: Seq[(String, () => DataFrame)] = Seq(
       // q93 probe DECOMPOSITION (round 11: the sf10 ramp put the probe at
@@ -211,30 +194,27 @@ object ScaleRamp {
     ).filter { case (name, _) => args.isEmpty || args.exists(name.contains) } ++
       (if (args.contains("skew")) skewGate(spark, sfDir) else Nil)
 
-    val results = runs.map { case (name, mk) =>
-      val reps = (1 to Reps).map { _ =>
-        meter.reset()
-        val t0 = System.nanoTime()
-        val ok =
-          try { mk().write.mode("overwrite").format("noop").save(); true }
-          catch { case e: Throwable => System.err.println(s"[ramp] $name: ${e.getMessage}"); false }
-        val sec = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
-        val r = (sec, meter.jobs.get, meter.bytes.get, meter.spillDisk.get, ok)
-        sweep()
-        r
-      }
-      val med = reps.sortBy(_._1).apply(Reps / 2)
-      val ok = reps.forall(_._5)
-      name -> (med, reps.map(_._1).min, ok)
-    }
+    // Build the index before the reps, untimed: persisted state is the
+    // premise of the incremental shape, exactly as Bench treats it
+    if (runs.exists { case (name, _) => Set("x_q93_candidates", "x_q93_probe_full")(name) }) try {
+      graft.ops.Dedup.minHashSignatures(
+        graft.sources.Tables.documents(spark, sfDir).filter(col("doc_id") % 25 =!= 0),
+        "doc_id", "text", shingleK = 1, numHashes = 48)
+        .write.mode("overwrite").parquet(q93Idx)
+    } catch { case e: Throwable => System.err.println(s"[ramp] q93 index build failed: ${e.getMessage}") }
+    Measure.sweep(spark)
+
+    val results = Measure.repped(spark, runs.map { case (name, mk) =>
+      name -> (() => mk().write.mode("overwrite").format("noop").save())
+    }, Reps)
     // record: [median_sec (negative = a rep failed), min_sec, jobs,
     // scan_mb, spill_disk_mb] — spill added round 16 so tier claims in
     // SCALE.md are recorded measurements, not log inferences
-    val qs = results.map { case (name, (med, minSec, ok)) =>
+    val qs = results.map { case (name, rec) =>
+      val med = rec.median
       String.format(java.util.Locale.ROOT, """"%s":[%.2f,%.2f,%d,%d,%d]""",
-        name, Double.box(if (ok) med._1 else -med._1), Double.box(minSec),
-        Long.box(med._2), Long.box(med._3 / 1048576), Long.box(med._4 / 1048576))
+        name, Double.box(if (rec.ok) med.sec else -med.sec), Double.box(rec.fastest.sec),
+        Long.box(med.jobs), Long.box(med.scanBytes / 1048576), Long.box(med.spillBytes / 1048576))
     }.mkString("{", ",", "}")
     println(String.format(java.util.Locale.ROOT,
       """{"metric":"scale_ramp","unit":"sec","reps":%d,"queries":%s,"sf":"%s"}""",

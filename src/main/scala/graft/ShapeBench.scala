@@ -5,43 +5,9 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Validation
+import graft.ops.{Pivots, Projections, Validation}
 import graft.pipeline.{Gold, Silver}
 import graft.queries.MedallionQueries
-
-/** Jobs-launched / bytes-scanned listener shared by [[ShapeBench]] (per
-  * shape) and [[Bench]] (per query rep): the scale-invariant cost of a
-  * plan — wall time at sf0.1 is dominated by per-job constants, but jobs
-  * and bytes read grow with data. One implementation so the shape
-  * comparison and the per-query records can never diverge in what they
-  * count.
-  */
-/** Jobs + bytes-read meter. `bytesRead` is the stage input metric, which
-  * counts CACHED-block re-reads as well as file scans — an iterative
-  * query (e.g. connected components) re-reading its persisted edge frame
-  * each round accumulates scan_mb without touching parquet. Interpret
-  * scan_mb as "bytes entering tasks", not file I/O.
-  */
-final class JobMeter extends org.apache.spark.scheduler.SparkListener {
-  val jobs = new java.util.concurrent.atomic.AtomicLong
-  val bytes = new java.util.concurrent.atomic.AtomicLong
-  // Spill volumes decide which MEMORY TIER a run executed on — the
-  // round-15 jaccard gate taught that a wall ratio straddling the
-  // memory→disk boundary overstates the slope, so scale rulings need the
-  // tier RECORDED, not inferred from stray log lines. `spillDisk` is
-  // bytes written to disk by sorters/aggregates; `spillMem` is the
-  // in-memory size of the spilled data (Spark's memoryBytesSpilled).
-  val spillDisk = new java.util.concurrent.atomic.AtomicLong
-  val spillMem = new java.util.concurrent.atomic.AtomicLong
-  override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-    jobs.incrementAndGet()
-  override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-    bytes.addAndGet(sc.stageInfo.taskMetrics.inputMetrics.bytesRead)
-    spillDisk.addAndGet(sc.stageInfo.taskMetrics.diskBytesSpilled)
-    spillMem.addAndGet(sc.stageInfo.taskMetrics.memoryBytesSpilled)
-  }
-  def reset(): Unit = { jobs.set(0); bytes.set(0); spillDisk.set(0); spillMem.set(0) }
-}
 
 /** Matched-scale benchmark: the reference pipeline's LITERAL plan shapes
   * vs this library's plan shapes, on the SAME fixture-derived frames, the
@@ -64,22 +30,12 @@ final class JobMeter extends org.apache.spark.scheduler.SparkListener {
   *
   * Both shapes are verified to produce identical Gold outputs
   * (ShapeBenchSpec), so the timing ratio compares plans, not answers.
+  * [[Bench]] times and meters each shape through [[Measure]].
   */
 object ShapeBench {
 
-  final case class ShapeResult(sec: Double, profileRows: Long, portfolioRows: Long,
-                               jobs: Long = 0, scanBytes: Long = 0)
-
-  /** Meters jobs/bytes while `body` runs (see [[JobMeter]]). */
-  private def instrumented(spark: SparkSession)(body: => ShapeResult): ShapeResult = {
-    val meter = new JobMeter
-    spark.sparkContext.addSparkListener(meter)
-    try {
-      val r = body
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
-      r.copy(jobs = meter.jobs.get, scanBytes = meter.bytes.get)
-    } finally spark.sparkContext.removeSparkListener(meter)
-  }
+  /** The Gold row counts a shape produced. */
+  final case class ShapeResult(profileRows: Long, portfolioRows: Long)
 
   private def freshDir(tag: String): String =
     Files.createTempDirectory(s"graft_shape_$tag").toString
@@ -105,14 +61,12 @@ object ShapeBench {
     * structure on the HC-shaped fixture frames. Deviations: none —
     * including the parts the library deliberately does differently.
     */
-  def referenceShape(spark: SparkSession, sfDir: String): ShapeResult = instrumented(spark) {
+  def referenceShape(spark: SparkSession, sfDir: String): ShapeResult = {
     val out = freshDir("ref")
     try referenceShapeAt(spark, sfDir, out) finally deleteRecursively(out)
   }
 
   private def referenceShapeAt(spark: SparkSession, sfDir: String, out: String): ShapeResult = {
-    val t0 = System.nanoTime()
-
     // ---- silver_client_application (processor.py:73-191) ----
     val train = MedallionQueries.train(spark, sfDir)
     val test = MedallionQueries.test(spark, sfDir)
@@ -155,7 +109,7 @@ object ShapeBench {
     // ---- silver_previous_applications (processor.py:556-679) ----
     val prev = MedallionQueries.previousApps(spark, sfDir)
     prev.count()                                     // processor.py:566
-    val prevAgg = Silver.previousApplications(prev, statusValues = None) // dynamic pivot distinct job
+    val prevAgg = referencePreviousApplications(prev)
     prevAgg.count()                                  // processor.py:653
     prevAgg.filter(col("SK_ID_CURR").isNull).count() // processor.py:658 (post-filter in lib, count 0)
     writePartitioned(prevAgg, s"$out/silver_previous_applications")
@@ -177,7 +131,39 @@ object ShapeBench {
     writePartitioned(portfolio, s"$out/gold_portfolio_risk")
     val nPortfolio = spark.read.parquet(s"$out/gold_portfolio_risk/$part").count() // :270
 
-    ShapeResult((System.nanoTime() - t0) / 1e9, nProfile, nPortfolio)
+    ShapeResult(nProfile, nPortfolio)
+  }
+
+  /** The reference's step-4 builder as it runs (processor.py:588-651):
+    * counts and amount averages as two per-client aggregates, the dynamic
+    * status pivot as a distinct job plus a `(client, status)`
+    * pre-aggregate → `.pivot` → rename → `na.fill(0)`, all left-joined
+    * back onto the counts. Stated here rather than through
+    * [[Silver.previousApplications]], so the replay does not move when the
+    * library's builder does; ShapeBenchSpec pins that both give the same
+    * rows.
+    */
+  private[graft] def referencePreviousApplications(prev: DataFrame): DataFrame = {
+    val status = "NAME_CONTRACT_STATUS"
+    val counts = prev.groupBy("SK_ID_CURR")
+      .agg(count(lit(1)).alias("previous_app_count"),
+        sum(when(col(status).isin("Refused", "Refused by client"), 1).otherwise(0))
+          .alias("previous_rejected_count"))
+      .withColumn("previous_rejection_rate", Projections.guardedDiv(
+        col("previous_rejected_count"), col("previous_app_count"), lit(0.0)))
+    val amounts = prev.groupBy("SK_ID_CURR").agg(
+      avg(col("AMT_APPLICATION")).alias("previous_avg_requested"),
+      avg(col("AMT_CREDIT")).alias("previous_avg_granted"))
+    val values = Pivots.pivotValues(prev, status)
+    val names = values.map(v => s"prev_status_${Projections.sanitizeName(v)}_count")
+    val pivoted = prev.groupBy(col("SK_ID_CURR"), col(status)).agg(count(lit(1)).alias("__n"))
+      .groupBy("SK_ID_CURR").pivot(status, values).sum("__n")
+    val statusCounts = values.zip(names)
+      .foldLeft(pivoted) { case (df, (v, n)) => df.withColumnRenamed(v, n) }
+      .na.fill(0L, names)
+    counts.join(amounts, Seq("SK_ID_CURR"), "left")
+      .join(statusCounts, Seq("SK_ID_CURR"), "left")
+      .filter(col("SK_ID_CURR").isNotNull)
   }
 
   // -------------------------------------------------------------------------
@@ -190,14 +176,13 @@ object ShapeBench {
     * and Gold consumes the Silver FRAMES — the write is a sink, not a
     * handoff, so nothing is read back from disk mid-pipeline.
     */
-  def graftShape(spark: SparkSession, sfDir: String): ShapeResult = instrumented(spark) {
+  def graftShape(spark: SparkSession, sfDir: String): ShapeResult = {
     val out = freshDir("graft")
     try graftShapeAt(spark, sfDir, out) finally deleteRecursively(out)
   }
 
   private def graftShapeAt(spark: SparkSession, sfDir: String, out: String): ShapeResult = {
     import org.apache.spark.storage.StorageLevel
-    val t0 = System.nanoTime()
 
     // Each Silver frame is computed ONCE: persisted (memory, disk spill),
     // written as the layer deliverable, then flows into Gold from the
@@ -241,88 +226,6 @@ object ShapeBench {
     val nPortfolio = portfolio.count()
     Seq(validApp, bureauValid, payValid, prevAgg, profile).foreach(_.unpersist(false))
 
-    ShapeResult((System.nanoTime() - t0) / 1e9, nProfile, nPortfolio)
-  }
-
-  /** Run both shapes (reference first — its cache/unpersist leaves no
-    * state) and return (reference, graft).
-    */
-  def compare(spark: SparkSession, sfDir: String): (ShapeResult, ShapeResult) = {
-    val ref = referenceShape(spark, sfDir)
-    val ours = graftShape(spark, sfDir)
-    (ref, ours)
-  }
-
-  /** Median-rep record for one shape: the rep with the median wall time
-    * (its jobs/bytes ride along — one real run, not a mix) plus the min
-    * wall time across all reps. Same semantics as Bench's per-query
-    * record: identical jobs/bytes with median >> min is environment
-    * noise, not a plan change.
-    */
-  final case class ShapeStats(med: ShapeResult, minSec: Double, reps: Int)
-
-  private def statsOf(rs: Seq[ShapeResult]): ShapeStats =
-    ShapeStats(rs.sortBy(_.sec).apply(rs.size / 2), rs.map(_.sec).min, rs.size)
-
-  /** Noise detector — the EXACT rule Bench applies to queries (round-7
-    * ADVICE: jobs/bytes equality between the median and min reps is
-    * checked, not assumed): median > 2x min at equal jobs and ~equal
-    * scan bytes is load, not a plan regression.
-    */
-  private def noisy(rs: Seq[ShapeResult]): Boolean = {
-    val s = statsOf(rs)
-    val minRep = rs.minBy(_.sec)
-    s.minSec > 0 && s.med.sec > 2 * s.minSec &&
-      s.med.jobs == minRep.jobs &&
-      math.abs(s.med.scanBytes - minRep.scanBytes) <=
-        math.max(minRep.scanBytes / 10, 1L << 20)
-  }
-
-  /** Trustworthy shape comparison (round-8 verdict #1: the headline
-    * baseline ratio must not rest on a single un-repped sample — r8's
-    * committed record showed 0.82x while three same-plan measurements sat
-    * at 2.57-2.59x).
-    *
-    * Runs the two shapes INTERLEAVED (ref, graft, ref, graft, ...) for
-    * `reps` rounds, so a transient load spike lands on one rep of each
-    * shape — which the median absorbs — instead of on every rep of
-    * whichever shape it coincided with. Then one retry round per shape
-    * under the same jobs/bytes-gated rule as Bench's queries: a noisy
-    * median (median > 2x min at unchanged jobs/bytes) is re-measured and
-    * the cleaner (lower-median) rep set kept; the min stays the global
-    * min, so a genuinely slow shape cannot launder its number.
-    */
-  def compareRepped(spark: SparkSession, sfDir: String,
-                    reps: Int): (ShapeStats, ShapeStats) = {
-    def sweep(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
-    def runSet(): (Vector[ShapeResult], Vector[ShapeResult]) = {
-      var refs = Vector.empty[ShapeResult]
-      var ours = Vector.empty[ShapeResult]
-      for (_ <- 1 to reps) {
-        refs :+= referenceShape(spark, sfDir); sweep()
-        ours :+= graftShape(spark, sfDir); sweep()
-      }
-      (refs, ours)
-    }
-    val (refs1, ours1) = runSet()
-    // Retry is per-shape-pair: if EITHER median is noise-suspect, re-run
-    // the full interleaved set (keeping the pairing honest) and take, per
-    // shape, the rep set with the lower median; the reported min is the
-    // GLOBAL min across both sets, so a genuinely slow shape cannot
-    // launder its number through the retry.
-    if (noisy(refs1) || noisy(ours1)) {
-      System.err.println("[shape] noisy median detected (median > 2x min at equal jobs/bytes); re-measuring")
-      val (refs2, ours2) = runSet()
-      def merge(a: Vector[ShapeResult], b: Vector[ShapeResult]): ShapeStats = {
-        val (sa, sb) = (statsOf(a), statsOf(b))
-        val keep = if (sb.med.sec < sa.med.sec) sb else sa
-        keep.copy(minSec = math.min(sa.minSec, sb.minSec), reps = a.size + b.size)
-      }
-      (merge(refs1, refs2), merge(ours1, ours2))
-    } else (statsOf(refs1), statsOf(ours1))
+    ShapeResult(nProfile, nPortfolio)
   }
 }

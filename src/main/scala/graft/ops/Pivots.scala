@@ -36,9 +36,12 @@ object Pivots {
     df.groupBy(col(key)).agg(counts.head, counts.tail: _*)
   }
 
-  /** The distinct values of `pivotCol`, sorted for a deterministic column
-    * order (one job). Mirrors the reference's dynamic pivot columns.
+  /** The distinct non-null values of `pivotCol`, sorted for a
+    * deterministic column order (one job). Mirrors the reference's dynamic
+    * pivot columns. Null is left out: `=== null` is never true, so its
+    * count column could only ever read 0.
     */
   def pivotValues(df: DataFrame, pivotCol: String): Seq[String] =
-    df.select(pivotCol).distinct().collect().map(_.getString(0)).toSeq.sorted
+    df.select(pivotCol).where(col(pivotCol).isNotNull).distinct()
+      .collect().map(_.getString(0)).toSeq.sorted
 }

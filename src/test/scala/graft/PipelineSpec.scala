@@ -116,6 +116,7 @@ class PipelineSpec extends SparkSpec {
       (Some(20L), "Refused by client", Some(9000.0), Some(4000.0)),
       (Some(20L), "Canceled", None, Some(3000.0)),               // outside the pinned set
       (Some(30L), "Approved", None, None),                       // no amounts at all
+      (Some(30L), null, None, None),                             // null status: no column
       (None, "Refused", Some(100.0), Some(100.0)))               // null key: dropped
       .toDF("SK_ID_CURR", "NAME_CONTRACT_STATUS", "AMT_APPLICATION", "AMT_CREDIT")
     val head = Seq(
@@ -138,7 +139,7 @@ class PipelineSpec extends SparkSpec {
     assert(rowsOf(pinned) == Seq(
       Row(10L, 3L, 1L, 1.0 / 3, 10000.0, 8000.0 / 3, 1L, 1L, 0L, 1L),
       Row(20L, 2L, 1L, 0.5, 9000.0, 3500.0, 0L, 0L, 1L, 0L),
-      Row(30L, 1L, 0L, 0.0, null, null, 1L, 0L, 0L, 0L)))
+      Row(30L, 2L, 0L, 0.0, null, null, 1L, 0L, 0L, 0L)))
 
     // dynamic (the reference): one column per distinct status, sorted
     val dynamic = Silver.previousApplications(prev)
@@ -147,7 +148,7 @@ class PipelineSpec extends SparkSpec {
     assert(rowsOf(dynamic) == Seq(
       Row(10L, 3L, 1L, 1.0 / 3, 10000.0, 8000.0 / 3, 1L, 0L, 1L, 0L, 1L),
       Row(20L, 2L, 1L, 0.5, 9000.0, 3500.0, 0L, 1L, 0L, 1L, 0L),
-      Row(30L, 1L, 0L, 0.0, null, null, 1L, 0L, 0L, 0L, 0L)))
+      Row(30L, 2L, 0L, 0.0, null, null, 1L, 0L, 0L, 0L, 0L)))
   }
 
   test("gold clientRiskProfile: zero-fills, ratios, segment rules, rounding") {

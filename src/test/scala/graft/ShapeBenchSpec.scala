@@ -16,6 +16,19 @@ class ShapeBenchSpec extends SparkSpec {
     assert(ref.profileRows > 0 && ref.portfolioRows > 0)
   }
 
+  test("the reference replay's step 4 equals the library's dynamic-pivot builder") {
+    // the replay states the reference's three aggregates and two joins
+    // itself; the library's one-pass builder must give the same rows
+    val prev = graft.queries.MedallionQueries.previousApps(spark, sf001)
+    val ref = ShapeBench.referencePreviousApplications(prev)
+    val lib = graft.pipeline.Silver.previousApplications(prev, None)
+    assert(ref.schema.map(f => f.name -> f.dataType) == lib.schema.map(f => f.name -> f.dataType))
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.mkString("|")).toSeq.sorted
+    val refRows = rows(ref)
+    assert(refRows.nonEmpty)
+    assert(refRows == rows(lib))
+  }
+
   test("graft-shape gold outputs equal the q60/q61 registered queries") {
     // the shape bench writes what q60/q61 compute — same frames, different sink
     import org.apache.spark.sql.functions.col

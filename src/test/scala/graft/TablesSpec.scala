@@ -2,7 +2,7 @@ package graft
 
 import scala.util.Try
 
-import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.DataFrame
 
 import graft.pipeline.{Bronze, Medallion}
 import graft.sources.{Sinks, Tables}
@@ -13,15 +13,8 @@ class TablesSpec extends SparkSpec {
 
   /** Jobs launched while `build` runs, counted after the listener bus drains. */
   private def jobsDuring[T](build: => T): (T, Long) = {
-    val sc = spark.sparkContext
-    GraftBridge.drainListenerBus(sc)
-    val meter = new JobMeter
-    sc.addSparkListener(meter)
-    try {
-      val out = build
-      GraftBridge.drainListenerBus(sc)
-      (out, meter.jobs.get)
-    } finally sc.removeSparkListener(meter)
+    val (out, rep) = Measure.metered(spark)(build)
+    (out.toTry.get, rep.jobs)
   }
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
