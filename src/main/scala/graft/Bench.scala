@@ -115,13 +115,9 @@ object Bench {
     val prepared = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     if (canarySec >= 0) prepared("host_canary_sec") = canarySec
     if (selectedHas("q93")) try {
-      import org.apache.spark.sql.functions.col
       val idxPath = new java.io.File("target/bench_idx/q93_corpus_sig").getAbsolutePath
       val t0 = System.nanoTime()
-      graft.ops.Dedup.minHashSignatures(
-          graft.sources.Tables.documents(spark, sfDir)
-            .filter(col("doc_id") % 25 =!= 0), "doc_id", "text",
-          shingleK = 1, numHashes = 48)
+      graft.queries.DedupQueries.q93Signatures(spark, sfDir, batch = false)
         .write.mode("overwrite").parquet(idxPath)
       prepared("q93_index_build_sec") = (System.nanoTime() - t0) / 1e9
       sys.props("graft.bench.q93.index") = idxPath

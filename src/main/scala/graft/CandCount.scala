@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions.{col, posexplode}
+import org.apache.spark.sql.functions.col
+
+import graft.queries.DedupQueries
 
 /** Diagnostic main: COUNT q93's band-join candidate pairs at a given SF —
   * the workload-growth denominator for the SCALE.md ratio gates (wall
@@ -38,20 +40,10 @@ object CandCount {
       spark.stop()
       return
     }
-    def sig(filter: org.apache.spark.sql.Column) =
-      graft.ops.Dedup.minHashSignatures(
-        graft.sources.Tables.documents(spark, sfDir).filter(filter),
-        "doc_id", "text", shingleK = 1, numHashes = 48)
-    def banded(s: org.apache.spark.sql.DataFrame) = s.select(col("__id"),
-      posexplode(graft.functions.TextFunctions.bandKeys(col("__sig"), 16, 3))
-        .as(Seq("__band", "__key")))
-    val corpus = banded(sig(col("doc_id") % 25 =!= 0))
-    val batch = banded(sig(col("doc_id") % 25 === 0))
-    val n = batch.alias("a").join(corpus.alias("b"),
-        col("a.__band") === col("b.__band") && col("a.__key") === col("b.__key") &&
-          col("a.__id") =!= col("b.__id"))
-      .select(col("a.__id").alias("new_id"), col("b.__id").alias("corpus_id"))
-      .distinct().count()
+    val n = graft.ops.Dedup.incrementalCandidates(
+      DedupQueries.q93Signatures(spark, sfDir, batch = false),
+      DedupQueries.q93Signatures(spark, sfDir, batch = true),
+      DedupQueries.Q93Bands, DedupQueries.Q93RowsPerBand).count()
     println(s"CANDIDATES=$n sf=$sfDir")
     spark.stop()
   }

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, posexplode}
+import org.apache.spark.sql.functions.col
+
+import graft.queries.DedupQueries
 
 /** Full-breadth scale-ramp companion to [[Bench]]: a handful of operator
   * runs over the ENTIRE fixture for operators whose registry queries carry
@@ -80,27 +82,11 @@ object ScaleRamp {
       // 16.9× over 10× data — attribute the bend): batch hashing alone,
       // band-join candidate generation alone, and the full probe, all
       // against the SAME prebuilt index the registry/Bench form uses.
-      "x_q93_batch_sig" -> (() => graft.ops.Dedup.minHashSignatures(
-        graft.sources.Tables.documents(spark, sfDir)
-          .filter(col("doc_id") % 25 === 0),
-        "doc_id", "text", shingleK = 1, numHashes = 48)),
-      "x_q93_candidates" -> (() => {
-        val corpusSig = graft.sources.Tables.parquet(spark, q93Idx)
-        val newSig = graft.ops.Dedup.minHashSignatures(
-          graft.sources.Tables.documents(spark, sfDir)
-            .filter(col("doc_id") % 25 === 0),
-          "doc_id", "text", shingleK = 1, numHashes = 48)
-        def banded(sig: DataFrame) = sig.select(col("__id"),
-          posexplode(graft.functions.TextFunctions.bandKeys(col("__sig"), 16, 3))
-            .as(Seq("__band", "__key")))
-        banded(newSig).alias("a").join(banded(corpusSig).alias("b"),
-          col("a.__band") === col("b.__band") &&
-            col("a.__key") === col("b.__key") &&
-            col("a.__id") =!= col("b.__id"))
-          .select(col("a.__id").alias("new_id"),
-            col("b.__id").alias("corpus_id"))
-          .distinct()
-      }),
+      "x_q93_batch_sig" -> (() => DedupQueries.q93Signatures(spark, sfDir, batch = true)),
+      "x_q93_candidates" -> (() => graft.ops.Dedup.incrementalCandidates(
+        graft.sources.Tables.parquet(spark, q93Idx),
+        DedupQueries.q93Signatures(spark, sfDir, batch = true),
+        DedupQueries.Q93Bands, DedupQueries.Q93RowsPerBand)),
       // q97 chain DECOMPOSITION (round 11: 13× at 10× data in the sf10
       // subset): the fused signal scan and the exact-dedup hash shuffle
       // are the only corpus-wide stages — time each alone.
@@ -110,12 +96,8 @@ object ScaleRamp {
         graft.sources.Tables.documents(spark, sfDir), "doc_id", "text")),
       "x_q97_curated_chain" -> (() =>
         graft.queries.TextQueries.curatedDocs(spark, sfDir)),
-      "x_q93_probe_full" -> (() => graft.ops.Dedup.minHashNearDupAgainst(
-        graft.sources.Tables.parquet(spark, q93Idx),
-        graft.sources.Tables.documents(spark, sfDir)
-          .filter(col("doc_id") % 25 === 0),
-        "doc_id", "text", threshold = 0.9, shingleK = 1,
-        bands = 16, rowsPerBand = 3, estMargin = 0.35)),
+      "x_q93_probe_full" -> (() =>
+        DedupQueries.q93Probe(spark, sfDir, graft.sources.Tables.parquet(spark, q93Idx))),
       // q118's operator without the oracle-bounding doc_id filter
       "x_jaccard_prefix_full" -> (() => graft.ops.Dedup.jaccardJoinPrefix(
         graft.sources.Tables.documents(spark, sfDir), "doc_id", "text",
@@ -197,10 +179,7 @@ object ScaleRamp {
     // Build the index before the reps, untimed: persisted state is the
     // premise of the incremental shape, exactly as Bench treats it
     if (runs.exists { case (name, _) => Set("x_q93_candidates", "x_q93_probe_full")(name) }) try {
-      graft.ops.Dedup.minHashSignatures(
-        graft.sources.Tables.documents(spark, sfDir).filter(col("doc_id") % 25 =!= 0),
-        "doc_id", "text", shingleK = 1, numHashes = 48)
-        .write.mode("overwrite").parquet(q93Idx)
+      DedupQueries.q93Signatures(spark, sfDir, batch = false).write.mode("overwrite").parquet(q93Idx)
     } catch { case e: Throwable => System.err.println(s"[ramp] q93 index build failed: ${e.getMessage}") }
     Measure.sweep(spark)
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions.col
+import graft.queries.DedupQueries
 
 /** Diagnostic main: does the scoped wide-shuffle ceiling actually reach
   * q93's banded candidate exchanges? Runs the q93 operator once against a
@@ -21,17 +21,9 @@ object ScopeCheck {
     })
     val idxPath = new java.io.File(
       s"target/bench_idx/scopecheck_${new java.io.File(sfDir).getName}").getAbsolutePath
-    graft.ops.Dedup.minHashSignatures(
-        graft.sources.Tables.documents(spark, sfDir)
-          .filter(col("doc_id") % 25 =!= 0), "doc_id", "text",
-        shingleK = 1, numHashes = 48)
-      .write.mode("overwrite").parquet(idxPath)
+    DedupQueries.q93Signatures(spark, sfDir, batch = false).write.mode("overwrite").parquet(idxPath)
     stages.clear()
-    val out = graft.ops.Dedup.minHashNearDupAgainst(
-      graft.sources.Tables.parquet(spark, idxPath),
-      graft.sources.Tables.documents(spark, sfDir).filter(col("doc_id") % 25 === 0),
-      "doc_id", "text", threshold = 0.9, shingleK = 1,
-      bands = 16, rowsPerBand = 3, estMargin = 0.35)
+    val out = DedupQueries.q93Probe(spark, sfDir, graft.sources.Tables.parquet(spark, idxPath))
     out.write.mode("overwrite").format("noop").save()
     org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
     import scala.jdk.CollectionConverters._

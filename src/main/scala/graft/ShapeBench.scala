@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Pivots, Projections, Validation}
-import graft.pipeline.{Gold, Silver}
+import graft.pipeline.{Gold, Medallion, Silver}
 import graft.queries.MedallionQueries
 
 /** Matched-scale benchmark: the reference pipeline's LITERAL plan shapes
@@ -22,11 +22,8 @@ import graft.queries.MedallionQueries
   * a dynamic-pivot distinct job (processor.py:624-642), cache+count of
   * installments (processor.py:422-424), and disk handoffs between layers
   * (gold/processor.py:127-140,234-237 re-read Silver/Gold parquet) — and
-  * timing it against the library shape on identical inputs:
-  * observe-attached single-pass validation metrics, pinned pivot values,
-  * in-memory layer handoff (Silver frames flow into Gold without a
-  * round-trip through the object store), and one cached client-profile
-  * reused by the portfolio rollup.
+  * timing it against the library shape on identical inputs. The library
+  * shape is [[Medallion.runBatch]] itself, not a copy of it.
   *
   * Both shapes are verified to produce identical Gold outputs
   * (ShapeBenchSpec), so the timing ratio compares plans, not answers.
@@ -49,9 +46,8 @@ object ShapeBench {
         .forEach(p => { F.deleteIfExists(p); () })
   }
 
-  private def writePartitioned(df: DataFrame, path: String): Unit =
-    df.withColumn("year", lit(2026)).withColumn("month", lit(8)).withColumn("day", lit(12))
-      .write.mode("overwrite").partitionBy("year", "month", "day").parquet(path)
+  /** The partition both shapes write their tables into. */
+  private[graft] val Date = Medallion.PartitionDate(2026, 8, 12)
 
   // -------------------------------------------------------------------------
   // Reference shape: every job the reference runs, in its order.
@@ -66,7 +62,7 @@ object ShapeBench {
     try referenceShapeAt(spark, sfDir, out) finally deleteRecursively(out)
   }
 
-  private def referenceShapeAt(spark: SparkSession, sfDir: String, out: String): ShapeResult = {
+  private[graft] def referenceShapeAt(spark: SparkSession, sfDir: String, out: String): ShapeResult = {
     // ---- silver_client_application (processor.py:73-191) ----
     val train = MedallionQueries.train(spark, sfDir)
     val test = MedallionQueries.test(spark, sfDir)
@@ -80,7 +76,7 @@ object ShapeBench {
     }
     val validApp = Validation.validate(normalized, rules)
     validApp.count()                                 // processor.py:169
-    writePartitioned(validApp, s"$out/silver_client_application")
+    Medallion.writePartitioned(validApp, out, "silver_client_application", Date)
 
     // ---- silver_bureau_summary (processor.py:243-375) ----
     val bureau = MedallionQueries.bureau(spark, sfDir)
@@ -91,7 +87,7 @@ object ShapeBench {
     bureauAgg.filter(col("SK_ID_CURR").isNull).count() // processor.py:354
     val bureauValid = bureauAgg.filter(col("SK_ID_CURR").isNotNull)
     bureauValid.count()                              // processor.py:358
-    writePartitioned(bureauValid, s"$out/silver_bureau_summary")
+    Medallion.writePartitioned(bureauValid, out, "silver_bureau_summary", Date)
 
     // ---- silver_payment_behavior (processor.py:407-519) ----
     val inst = MedallionQueries.installments(spark, sfDir)
@@ -103,7 +99,7 @@ object ShapeBench {
     payAgg.filter(col("SK_ID_CURR").isNull).count()  // processor.py:494
     val payValid = payAgg.filter(col("SK_ID_CURR").isNotNull)
     payValid.count()                                 // processor.py:498
-    writePartitioned(payValid, s"$out/silver_payment_behavior")
+    Medallion.writePartitioned(payValid, out, "silver_payment_behavior", Date)
     instCached.unpersist()                           // processor.py:519
 
     // ---- silver_previous_applications (processor.py:556-679) ----
@@ -112,23 +108,23 @@ object ShapeBench {
     val prevAgg = referencePreviousApplications(prev)
     prevAgg.count()                                  // processor.py:653
     prevAgg.filter(col("SK_ID_CURR").isNull).count() // processor.py:658 (post-filter in lib, count 0)
-    writePartitioned(prevAgg, s"$out/silver_previous_applications")
+    Medallion.writePartitioned(prevAgg, out, "silver_previous_applications", Date)
 
     // ---- gold_client_risk_profile (gold/processor.py:108-223): re-read Silver ----
-    val part = "year=2026/month=8/day=12"
+    val part = s"year=${Date.year}/month=${Date.month}/day=${Date.day}"
     val appS = spark.read.parquet(s"$out/silver_client_application/$part")
     val burS = spark.read.parquet(s"$out/silver_bureau_summary/$part")
     val payS = spark.read.parquet(s"$out/silver_payment_behavior/$part")
     val prvS = spark.read.parquet(s"$out/silver_previous_applications/$part")
     val profile = Gold.clientRiskProfile(appS, burS, payS, prvS)
     val nProfile = profile.count()                   // gold/processor.py:216
-    writePartitioned(profile, s"$out/gold_client_risk_profile")
+    Medallion.writePartitioned(profile, out, "gold_client_risk_profile", Date)
 
     // ---- gold_portfolio_risk (gold/processor.py:226-271): re-read Gold ----
     val profBack = spark.read.parquet(s"$out/gold_client_risk_profile/$part")
     profBack.count()                                 // gold/processor.py:240
     val portfolio = Gold.portfolioRisk(profBack)
-    writePartitioned(portfolio, s"$out/gold_portfolio_risk")
+    Medallion.writePartitioned(portfolio, out, "gold_portfolio_risk", Date)
     val nPortfolio = spark.read.parquet(s"$out/gold_portfolio_risk/$part").count() // :270
 
     ShapeResult(nProfile, nPortfolio)
@@ -167,65 +163,21 @@ object ShapeBench {
   }
 
   // -------------------------------------------------------------------------
-  // Library shape: same deliverables, the plans this library chooses.
+  // Library shape: the batch the library runs.
   // -------------------------------------------------------------------------
 
-  /** Same six parquet tables and the same validation metrics, produced the
-    * way the library is designed to: metrics ride the write jobs as
-    * `observe` telemetry (zero extra scans), the pivot schema is pinned,
-    * and Gold consumes the Silver FRAMES — the write is a sink, not a
-    * handoff, so nothing is read back from disk mid-pipeline.
+  /** Same six parquet tables and the same validation metrics, produced by
+    * [[Medallion.runBatch]]: metrics ride the write jobs as `observe`
+    * telemetry, the pivot schema is pinned, and Gold consumes the persisted
+    * Silver frames — nothing is read back from disk mid-pipeline.
     */
   def graftShape(spark: SparkSession, sfDir: String): ShapeResult = {
     val out = freshDir("graft")
-    try graftShapeAt(spark, sfDir, out) finally deleteRecursively(out)
-  }
-
-  private def graftShapeAt(spark: SparkSession, sfDir: String, out: String): ShapeResult = {
-    import org.apache.spark.storage.StorageLevel
-
-    // Each Silver frame is computed ONCE: persisted (memory, disk spill),
-    // written as the layer deliverable, then flows into Gold from the
-    // persisted blocks — executor-local reuse instead of the reference's
-    // write-then-re-read-from-storage handoff, and no recompute either.
-    def persistAndWrite(df: DataFrame, path: String): DataFrame = {
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      writePartitioned(p, path)
-      p
-    }
-
-    // ---- Silver: validated app with observe-attached metrics ----
-    val unioned = graft.ops.SetOps.unionByNameTolerant(
-      MedallionQueries.train(spark, sfDir), MedallionQueries.test(spark, sfDir))
-    val normalized = Silver.normalizeApplication(unioned)
-    val (validApp0, obs) = Validation.validateObserved(normalized, Silver.clientApplicationRules)
-    val validApp = persistAndWrite(validApp0, s"$out/silver_client_application")
-    obs.get                                          // metrics materialized by the write job
-
-    val bureauValid = persistAndWrite(
-      Silver.bureauSummary(
-        MedallionQueries.bureau(spark, sfDir), MedallionQueries.bureauBalance(spark, sfDir)),
-      s"$out/silver_bureau_summary")
-
-    val payValid = persistAndWrite(
-      Silver.paymentBehavior(MedallionQueries.installments(spark, sfDir)),
-      s"$out/silver_payment_behavior")
-
-    val prevAgg = persistAndWrite(
-      Silver.previousApplications(
-        MedallionQueries.previousApps(spark, sfDir), Some(MedallionQueries.statuses)),
-      s"$out/silver_previous_applications")
-
-    // ---- Gold: consume the persisted Silver frames ----
-    val profile = Gold.clientRiskProfile(validApp, bureauValid, payValid, prevAgg)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    writePartitioned(profile, s"$out/gold_client_risk_profile")
-    val nProfile = profile.count()                   // served from cache (populated by the write)
-    val portfolio = Gold.portfolioRisk(profile)      // cache reuse, no disk round-trip
-    writePartitioned(portfolio, s"$out/gold_portfolio_risk")
-    val nPortfolio = portfolio.count()
-    Seq(validApp, bureauValid, payValid, prevAgg, profile).foreach(_.unpersist(false))
-
-    ShapeResult(nProfile, nPortfolio)
+    try {
+      val r = Medallion.runBatch(MedallionQueries.sources(spark, sfDir), out, out, Date,
+        MedallionQueries.statuses)
+      r.validation.get                               // the metrics, a deliverable of both shapes
+      ShapeResult(r.profileRows, r.portfolioRows)
+    } finally deleteRecursively(out)
   }
 }

@@ -38,11 +38,8 @@ object Validation {
     * Single scan (vs the reference's one job per rule).
     */
   def failureCounts(df: DataFrame, rules: Seq[Rule]): DataFrame = {
-    val perRule = rules.map(r => sum(when(!passes(r), 1L).otherwise(0L)).alias(s"fail_${r.name}"))
-    val totals = Seq(
-      count(lit(1)).alias("total_rows"),
-      sum(when(conjunction(rules), 1L).otherwise(0L)).alias("passed_rows"))
-    df.agg((perRule ++ totals).head, (perRule ++ totals).tail: _*)
+    val m = metrics(rules)
+    df.agg(m.head, m.tail: _*)
   }
 
   /** Zero-extra-scan variant: attach the same metrics as `observe`
@@ -54,13 +51,15 @@ object Validation {
   def validateObserved(df: DataFrame, rules: Seq[Rule],
                        name: String = "validation"): (DataFrame, org.apache.spark.sql.Observation) = {
     val obs = new org.apache.spark.sql.Observation(name)
-    val perRule = rules.map(r => sum(when(!passes(r), 1L).otherwise(0L)).alias(s"fail_${r.name}"))
-    val totals = Seq(
+    val m = metrics(rules)
+    (df.observe(obs, m.head, m.tail: _*).filter(conjunction(rules)), obs)
+  }
+
+  /** Per-rule `fail_<name>` counts, then `total_rows` and `passed_rows`. */
+  private def metrics(rules: Seq[Rule]): Seq[Column] =
+    rules.map(r => sum(when(!passes(r), 1L).otherwise(0L)).alias(s"fail_${r.name}")) ++ Seq(
       count(lit(1)).alias("total_rows"),
       sum(when(conjunction(rules), 1L).otherwise(0L)).alias("passed_rows"))
-    val observed = df.observe(obs, (perRule ++ totals).head, (perRule ++ totals).tail: _*)
-    (observed.filter(conjunction(rules)), obs)
-  }
 
   /** Cross-table aggregate reconciliation — the invariant audit between a
     * fact header and its detail lines (does `sum(detail)` equal the

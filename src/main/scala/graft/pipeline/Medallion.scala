@@ -1,21 +1,40 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
+import graft.ops.{SetOps, Validation}
 import graft.sources.Tables
 
-/** Layer plumbing: partitioned writes, partition-pruned reads, catalog
-  * registration, and the fused end-to-end pipeline.
+/** Layer plumbing (partitioned writes, partition-pruned reads, catalog
+  * registration) and the one statement of a medallion batch: which Silver
+  * builders feed which Gold builders, in what order, and how each layer is
+  * persisted and written.
   *
-  * The reference materializes every layer and re-reads it (the lakehouse
-  * restartability contract); [[runFused]] exposes the same computation as
-  * one in-memory plan for benchmarking / single-shot runs — at 100 TB the
-  * difference is two full write+read round-trips of the Silver layer.
+  * [[runBatch]] is the batch the library runs; [[clientRiskProfile]] is the
+  * same composition as one in-memory plan with nothing written, the plan
+  * the q60/q61 oracle checks. Both go through [[silverLayer]] and [[gold]],
+  * so they cannot drift apart.
   */
 object Medallion {
 
   final case class PartitionDate(year: Int, month: Int, day: Int)
+
+  /** The six source tables of one batch (the reference's Bronze layer). */
+  final case class Sources(train: DataFrame, test: DataFrame, bureau: DataFrame,
+                           bureauBalance: DataFrame, installments: DataFrame,
+                           previousApps: DataFrame)
+
+  /** What a batch reports: the client-application validation metrics
+    * (filled in by the Silver write job) and the Gold row counts.
+    */
+  final case class BatchResult(validation: Observation, profileRows: Long,
+                               portfolioRows: Long)
+
+  /** Silver table names, in the order [[silverLayer]] returns the frames. */
+  val SilverTables: Seq[String] = Seq("silver_client_application", "silver_bureau_summary",
+    "silver_payment_behavior", "silver_previous_applications")
 
   /** S6: partitioned overwrite under `<base>/<table>/year=/month=/day=`
     * (reference: silver/processor.py:179-188).
@@ -51,21 +70,59 @@ object Medallion {
     spark.sql(s"CREATE TABLE $db.$table USING PARQUET LOCATION '$path'")
   }
 
-  /** Fused Bronze→Gold pipeline: all four Silver tables + both Gold tables
-    * from in-memory frames, no intermediate materialization. The Silver
-    * profile feeding two consumers (profile + portfolio) is the one place
-    * a cache pays for itself (the reference instead re-reads its own
-    * parquet output, gold/processor.py:234-237).
+  /** Silver steps 2-4 beside the validated client application, in
+    * [[SilverTables]] order. `statuses` pins the previous-application
+    * pivot columns, so no distinct-values job runs.
     */
-  def runFused(train: DataFrame, test: DataFrame, bureau: DataFrame,
-               bureauBalance: DataFrame, installments: DataFrame,
-               previousApps: DataFrame,
-               statusValues: Option[Seq[String]] = None): (DataFrame, DataFrame) = {
-    val app = Silver.clientApplication(train, test)
-    val bureauSum = Silver.bureauSummary(bureau, bureauBalance)
-    val payment = Silver.paymentBehavior(installments)
-    val prev = Silver.previousApplications(previousApps, statusValues)
-    val profiles = Gold.clientRiskProfile(app, bureauSum, payment, prev)
-    (profiles, Gold.portfolioRisk(profiles))
+  private def silverLayer(app: DataFrame, src: Sources, statuses: Seq[String]): Seq[DataFrame] =
+    Seq(app, Silver.bureauSummary(src.bureau, src.bureauBalance),
+      Silver.paymentBehavior(src.installments),
+      Silver.previousApplications(src.previousApps, Some(statuses)))
+
+  /** The Gold star join over the four Silver frames. */
+  private def gold(silver: Seq[DataFrame]): DataFrame = {
+    val Seq(app, bureau, payment, previous) = silver
+    Gold.clientRiskProfile(app, bureau, payment, previous)
+  }
+
+  /** gold_client_risk_profile of one batch as one in-memory plan: plain
+    * [[Validation.validate]], nothing persisted or written.
+    */
+  def clientRiskProfile(src: Sources, statuses: Seq[String]): DataFrame =
+    gold(silverLayer(Silver.clientApplication(src.train, src.test), src, statuses))
+
+  /** One Bronze→Gold batch: the four Silver tables under `silverBase`, the
+    * two Gold tables under `goldBase`, all in the `date` partition.
+    *
+    * Each Silver frame is persisted once, written, and fed to Gold from the
+    * persisted blocks: no recompute, and no write-then-re-read handoff
+    * (the reference re-reads its own parquet, gold/processor.py:127-140,
+    * 234-237). The profile is persisted too, since the portfolio rollup
+    * reads it again. Validation metrics and Gold row counts are `observe`
+    * metrics of the write jobs, so no job runs only to count.
+    */
+  def runBatch(src: Sources, silverBase: String, goldBase: String,
+               date: PartitionDate, statuses: Seq[String]): BatchResult = {
+    val (app, validation) = Validation.validateObserved(
+      Silver.normalizeApplication(SetOps.unionByNameTolerant(src.train, src.test)),
+      Silver.clientApplicationRules)
+    val silver = silverLayer(app, src, statuses).map(_.persist(StorageLevel.MEMORY_AND_DISK))
+    val profile = gold(silver).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      SilverTables.zip(silver).foreach { case (t, df) => writePartitioned(df, silverBase, t, date) }
+      BatchResult(validation,
+        writeCounted(profile, goldBase, "gold_client_risk_profile", date),
+        writeCounted(Gold.portfolioRisk(profile), goldBase, "gold_portfolio_risk", date))
+    } finally (silver :+ profile).foreach(_.unpersist(false))
+  }
+
+  /** [[writePartitioned]], returning the rows written as observed by the
+    * write job.
+    */
+  private def writeCounted(df: DataFrame, base: String, table: String,
+                           date: PartitionDate): Long = {
+    val rows = new Observation(table)
+    writePartitioned(df.observe(rows, count(lit(1)).alias("rows")), base, table, date)
+    rows.get("rows").asInstanceOf[Long]
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
-import graft.pipeline.{Gold, Silver}
+import graft.pipeline.{Gold, Medallion, Silver}
 
 /** Flagship: the ENTIRE medallion pipeline (union→validate→window→join→
   * agg→pivot→star-join→segment→rollup) as driver-verified queries, on
@@ -91,12 +91,13 @@ object MedallionQueries {
       floor(col("o_totalprice")).cast("double").alias("AMT_APPLICATION"),
       (floor(col("o_totalprice")) - (col("o_orderkey") % 100)).cast("double").alias("AMT_CREDIT"))
 
+  /** The six HC-shaped source frames of one medallion batch. */
+  private[graft] def sources(spark: SparkSession, d: String): Medallion.Sources =
+    Medallion.Sources(train(spark, d), test(spark, d), bureau(spark, d),
+      bureauBalance(spark, d), installments(spark, d), previousApps(spark, d))
+
   private def profiles(spark: SparkSession, d: String): DataFrame =
-    Gold.clientRiskProfile(
-      Silver.clientApplication(train(spark, d), test(spark, d)),
-      Silver.bureauSummary(bureau(spark, d), bureauBalance(spark, d)),
-      Silver.paymentBehavior(installments(spark, d)),
-      Silver.previousApplications(previousApps(spark, d), Some(statuses)))
+    Medallion.clientRiskProfile(sources(spark, d), statuses)
 
   lazy val all: Seq[QueryDef] = Seq(
     QueryDef("q60_medallion_profile", (s, d) => profiles(s, d), Some(profileSql)),

@@ -173,8 +173,9 @@ object MiscQueries {
     // columnNameOfCorruptRecord. The oracle reads the SAME files via
     // read_text and restates Spark's pinned PERMISSIVE contract as a
     // string split: parsed prefix kept, failing field null, raw line
-    // captured in-band. Path-pinned at sf0.01 like q72 (static oracle
-    // SQL); the write is parallel, the read is one parse per line.
+    // captured in-band. The oracle reads the files of the sf it is
+    // verified at (`__SF_NAME__`, like q72); the write is parallel, the
+    // read is one parse per line.
     QueryDef("q239_csv_malformed",
       (s, d) => {
         val sfName = new java.io.File(d).getName
@@ -198,7 +199,7 @@ object MiscQueries {
       },
       Some("""WITH raw AS (
              |  SELECT unnest(string_split(content, chr(10))) AS line
-             |  FROM read_text('/root/repo/target/graft_csv_bad/sf0.01/orders/part-*.txt')),
+             |  FROM read_text('/root/repo/target/graft_csv_bad/__SF_NAME__/orders/part-*.txt')),
              |t AS (SELECT line, string_split(line, ',') AS toks
              |      FROM raw WHERE line <> ''),
              |j AS (SELECT line, toks,
@@ -254,9 +255,9 @@ object MiscQueries {
     // CSV reader, not just a Spark-to-Spark round trip. Both sides cast
     // to one explicit type set: Spark infers INT where DuckDB infers
     // BIGINT, so uncasted schemas can never hash-compare. The write lands
-    // under target/ keyed by sf name (the oracle path is static SQL and
-    // the driver evaluates it at sf0.01 only; bench runs at other sfs
-    // write sibling dirs and never clobber it). The write is PARALLEL —
+    // under target/ keyed by sf name, and the oracle path names the
+    // same dir through the `__SF_NAME__` token Verify substitutes, so runs
+    // at different sfs never read each other's files. The write is PARALLEL —
     // the oracle globs *.csv, so funneling the table through one task
     // (coalesce(1)) would buy nothing and serialize the whole write at
     // scale.
@@ -282,7 +283,7 @@ object MiscQueries {
              |  CAST(o_totalprice AS DOUBLE) AS o_totalprice,
              |  CAST(o_orderdate AS TIMESTAMP) AS o_orderdate,
              |  CAST(o_orderpriority AS VARCHAR) AS o_orderpriority
-             |FROM read_csv_auto('/root/repo/target/graft_csv/sf0.01/orders/*.csv', header=true)""".stripMargin)),
+             |FROM read_csv_auto('/root/repo/target/graft_csv/__SF_NAME__/orders/*.csv', header=true)""".stripMargin)),
 
     // Partitioned-Parquet round-trip (SURVEY §2.1 S4/S6, reference
     // spark/silver/processor.py:179-188 + gold/processor.py:117-130): the
@@ -312,7 +313,7 @@ object MiscQueries {
       },
       Some("""SELECT o_orderkey, o_custkey, o_totalprice,
              |  CAST(year AS BIGINT) AS year, CAST(month AS BIGINT) AS month
-             |FROM parquet_scan('/root/repo/target/graft_part/sf0.01/orders/**/*.parquet',
+             |FROM parquet_scan('/root/repo/target/graft_part/__SF_NAME__/orders/**/*.parquet',
              |                  hive_partitioning=true)
              |WHERE year = 1995 AND month >= 7""".stripMargin)),
 
@@ -335,7 +336,7 @@ object MiscQueries {
       },
       Some("""SELECT c_custkey, c_name, c_acctbal,
              |  CAST(ingest_date AS VARCHAR) AS ingest_date
-             |FROM parquet_scan('/root/repo/target/graft_pathpart/sf0.01/customer/**/*.parquet',
+             |FROM parquet_scan('/root/repo/target/graft_pathpart/__SF_NAME__/customer/**/*.parquet',
              |                  hive_partitioning=true)""".stripMargin)),
 
     // JSONL round-trip: the documents corpus written as JSON lines (the
@@ -359,7 +360,7 @@ object MiscQueries {
           .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
       },
       Some("""SELECT doc_id, text, lang, source, n_chars
-             |FROM read_json_auto('/root/repo/target/graft_jsonl/sf0.01/documents/*.json',
+             |FROM read_json_auto('/root/repo/target/graft_jsonl/__SF_NAME__/documents/*.json',
              |                    format='newline_delimited')""".stripMargin)),
 
     // ORC round-trip: the orders fixture written to ORC (Spark's native

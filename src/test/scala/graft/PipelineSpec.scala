@@ -209,16 +209,28 @@ class PipelineSpec extends SparkSpec {
     val prev = Seq((1L, 1L, "Approved", 10000.0, 8000.0))
       .toDF("SK_ID_PREV", "SK_ID_CURR", "NAME_CONTRACT_STATUS", "AMT_APPLICATION", "AMT_CREDIT")
 
-    val (profiles, portfolio) = Medallion.runFused(train, test, bureau, balance, inst, prev)
-    assert(profiles.count() == 2)
-    val segs = portfolio.select("risk_segment").as[String].collect().toSet
-    assert(segs.nonEmpty && segs.subsetOf(Set("HIGH", "MEDIUM", "LOW")))
+    val dir = java.nio.file.Files.createTempDirectory("medallion-batch").toString
+    val date = Medallion.PartitionDate(2026, 8, 12)
+    val r = Medallion.runBatch(Medallion.Sources(train, test, bureau, balance, inst, prev),
+      s"$dir/silver", s"$dir/gold", date, Seq("Approved", "Refused"))
+    assert(r.validation.get("total_rows") == 2L && r.validation.get("passed_rows") == 2L)
+    assert(Medallion.SilverTables.forall(t =>
+      Medallion.readPartition(spark, s"$dir/silver", t, date).count() > 0))
+    assert(r.profileRows == 2 &&
+      Medallion.readPartition(spark, s"$dir/gold", "gold_client_risk_profile", date).count() == 2)
+    val segs = Medallion.readPartition(spark, s"$dir/gold", "gold_portfolio_risk", date)
+      .select("risk_segment").as[String].collect().toSet
+    assert(r.portfolioRows == segs.size && segs.nonEmpty && segs.subsetOf(Set("HIGH", "MEDIUM", "LOW")))
   }
 
   test("a warm medallion batch compiles no new generated class") {
     // GraftSession sizes Spark's JVM-wide generated-class cache above one
     // batch's working set; at Spark's default (100 entries) LRU eviction
-    // drops most of them before the next batch asks for them again
+    // drops most of them before the next batch asks for them again.
+    // Spark reads that size once, from the conf of the active session when
+    // its CodeGenerator first loads: reading the compile timer below before
+    // the session exists would fix the cache at the default
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000")
     val dir = java.nio.file.Files.createTempDirectory("medallion-warm").toString
     val (day, date) = ("2026-08-12", Medallion.PartitionDate(2026, 8, 12))
     val sources = Seq[(String, (SparkSession, String) => DataFrame)](
@@ -234,10 +246,8 @@ class PipelineSpec extends SparkSpec {
       val Seq(train, testApps, bureau, balance, installments, previous) = sources.map { case (t, _) =>
         Bronze.readIngestDate(spark, s"$dir/bronze", t, day).drop("ingest_date", "source_system")
       }
-      val (profiles, portfolio) = Medallion.runFused(train, testApps, bureau, balance, installments,
-        previous, Some(MedallionQueries.statuses))
-      Medallion.writePartitioned(profiles, s"$dir/gold", "gold_client_risk_profile", date)
-      Medallion.writePartitioned(portfolio, s"$dir/gold", "gold_portfolio_risk", date)
+      Medallion.runBatch(Medallion.Sources(train, testApps, bureau, balance, installments, previous),
+        s"$dir/silver", s"$dir/gold", date, MedallionQueries.statuses)
       (compiles - n0, (CodeGenerator.compileTime - ns0) / 1e6)
     }
     val cold = batch()

@@ -30,34 +30,28 @@ class ShapeBenchSpec extends SparkSpec {
   }
 
   test("graft-shape gold outputs equal the q60/q61 registered queries") {
-    // the shape bench writes what q60/q61 compute — same frames, different sink
+    // both shapes' written Gold tables, read back, against what q60/q61
+    // compute in memory: row for row, column for column
     import org.apache.spark.sql.functions.col
-    val q60 = SparkEntry.queries("q60_medallion_profile")(spark, sf001)
-    val q61 = SparkEntry.queries("q61_medallion_portfolio")(spark, sf001)
-
-    def canon(df: DataFrame): Set[String] = {
+    import graft.pipeline.Medallion
+    def canon(df: DataFrame): Seq[String] = {
       val cols = df.columns.sorted.toSeq
-      df.select(cols.map(col): _*).collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSet
+      cols.mkString(",") +:
+        df.select(cols.map(col): _*).collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
     }
+    val want = Seq("q60_medallion_profile", "q61_medallion_portfolio")
+      .map(q => canon(SparkEntry.queries(q)(spark, sf001)))
+    assert(want.forall(_.size > 1))
+    val date = ShapeBench.Date
+    def gold(dir: String): Seq[Seq[String]] = Seq("gold_client_risk_profile", "gold_portfolio_risk")
+      .map(t => canon(Medallion.readPartition(spark, dir, t, date)))
 
-    val out = java.nio.file.Files.createTempDirectory("graft_shape_check").toString
-    val unioned = graft.ops.SetOps.unionByNameTolerant(
-      graft.queries.MedallionQueries.train(spark, sf001),
-      graft.queries.MedallionQueries.test(spark, sf001))
-    val validApp = graft.ops.Validation.validate(
-      graft.pipeline.Silver.normalizeApplication(unioned),
-      graft.pipeline.Silver.clientApplicationRules)
-    val profile = graft.pipeline.Gold.clientRiskProfile(
-      validApp,
-      graft.pipeline.Silver.bureauSummary(
-        graft.queries.MedallionQueries.bureau(spark, sf001),
-        graft.queries.MedallionQueries.bureauBalance(spark, sf001)),
-      graft.pipeline.Silver.paymentBehavior(
-        graft.queries.MedallionQueries.installments(spark, sf001)),
-      graft.pipeline.Silver.previousApplications(
-        graft.queries.MedallionQueries.previousApps(spark, sf001),
-        Some(graft.queries.MedallionQueries.statuses)))
-    assert(canon(profile) == canon(q60))
-    assert(canon(graft.pipeline.Gold.portfolioRisk(profile)) == canon(q61))
+    val lib = java.nio.file.Files.createTempDirectory("graft_shape_check").toString
+    Medallion.runBatch(graft.queries.MedallionQueries.sources(spark, sf001), lib, lib, date,
+      graft.queries.MedallionQueries.statuses)
+    assert(gold(lib) == want)
+    val ref = java.nio.file.Files.createTempDirectory("graft_shape_ref").toString
+    ShapeBench.referenceShapeAt(spark, sf001, ref)
+    assert(gold(ref) == want)
   }
 }
