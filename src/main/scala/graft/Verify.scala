@@ -40,9 +40,14 @@ object Verify {
     // substitute the actual dir here so the oracle is derived from the
     // same sfDir the Spark side wrote under — it can't silently go stale
     // when the driver verifies at a different scale factor.
+    // Round-trip oracles (q72 and the like) name the dir their files were
+    // written under with the __TARGET__ token; it gets the same path.
     val sfName = new java.io.File(sfDir).getName
+    def bind(sql: String): String = sql
+      .replace("__TARGET__", graft.queries.Fixtures.targetDir)
+      .replace("__SF_NAME__", sfName)
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v.replace("__SF_NAME__", sfName))}" }
+      .map { case (k, v) => s"${q(k)}: ${q(bind(v))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -26,6 +26,11 @@ object Fixtures {
     path
   }
 
+  /** Absolute path of `target/` under the working directory: where the
+    * round-trip queries write their files. Their oracles name it with the
+    * `__TARGET__` token, which Verify replaces with this path. */
+  val targetDir: String = new java.io.File("target").getAbsolutePath
+
   private def sfName(d: String): String = new java.io.File(d).getName
 
   /** WAV blobs + stored samples (q129 decode, q145 decimate). */

@@ -174,12 +174,12 @@ object MiscQueries {
     // read_text and restates Spark's pinned PERMISSIVE contract as a
     // string split: parsed prefix kept, failing field null, raw line
     // captured in-band. The oracle reads the files of the sf it is
-    // verified at (`__SF_NAME__`, like q72); the write is parallel, the
-    // read is one parse per line.
+    // verified at (`__TARGET__` and `__SF_NAME__`, like q72); the write is
+    // parallel, the read is one parse per line.
     QueryDef("q239_csv_malformed",
       (s, d) => {
         val sfName = new java.io.File(d).getName
-        val out = s"/root/repo/target/graft_csv_bad/$sfName/orders"
+        val out = s"${Fixtures.targetDir}/graft_csv_bad/$sfName/orders"
         val good = concat_ws(",", col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice").cast("decimal(12,2)").cast("string"))
         val line = when(col("o_orderkey") % 7 === 0,
@@ -199,7 +199,7 @@ object MiscQueries {
       },
       Some("""WITH raw AS (
              |  SELECT unnest(string_split(content, chr(10))) AS line
-             |  FROM read_text('/root/repo/target/graft_csv_bad/__SF_NAME__/orders/part-*.txt')),
+             |  FROM read_text('__TARGET__/graft_csv_bad/__SF_NAME__/orders/part-*.txt')),
              |t AS (SELECT line, string_split(line, ',') AS toks
              |      FROM raw WHERE line <> ''),
              |j AS (SELECT line, toks,
@@ -256,15 +256,15 @@ object MiscQueries {
     // to one explicit type set: Spark infers INT where DuckDB infers
     // BIGINT, so uncasted schemas can never hash-compare. The write lands
     // under target/ keyed by sf name, and the oracle path names the
-    // same dir through the `__SF_NAME__` token Verify substitutes, so runs
-    // at different sfs never read each other's files. The write is PARALLEL —
-    // the oracle globs *.csv, so funneling the table through one task
-    // (coalesce(1)) would buy nothing and serialize the whole write at
-    // scale.
+    // same dir through the `__TARGET__` and `__SF_NAME__` tokens Verify
+    // substitutes, so runs at different sfs never read each other's
+    // files. The write is PARALLEL — the oracle globs *.csv, so funneling
+    // the table through one task (coalesce(1)) would buy nothing and
+    // serialize the whole write at scale.
     QueryDef("q72_csv_roundtrip",
       (s, d) => {
         val sfName = new java.io.File(d).getName
-        val out = s"/root/repo/target/graft_csv/$sfName/orders"
+        val out = s"${Fixtures.targetDir}/graft_csv/$sfName/orders"
         Tables.orders(s, d).write.mode("overwrite")
           .option("header", "true")
           .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
@@ -283,7 +283,7 @@ object MiscQueries {
              |  CAST(o_totalprice AS DOUBLE) AS o_totalprice,
              |  CAST(o_orderdate AS TIMESTAMP) AS o_orderdate,
              |  CAST(o_orderpriority AS VARCHAR) AS o_orderpriority
-             |FROM read_csv_auto('/root/repo/target/graft_csv/__SF_NAME__/orders/*.csv', header=true)""".stripMargin)),
+             |FROM read_csv_auto('__TARGET__/graft_csv/__SF_NAME__/orders/*.csv', header=true)""".stripMargin)),
 
     // Partitioned-Parquet round-trip (SURVEY §2.1 S4/S6, reference
     // spark/silver/processor.py:179-188 + gold/processor.py:117-130): the
@@ -300,7 +300,7 @@ object MiscQueries {
     QueryDef("q73_partitioned_roundtrip",
       (s, d) => {
         val sfName = new java.io.File(d).getName
-        val out = s"/root/repo/target/graft_part/$sfName/orders"
+        val out = s"${Fixtures.targetDir}/graft_part/$sfName/orders"
         Tables.orders(s, d)
           .withColumn("year", year(col("o_orderdate")))
           .withColumn("month", month(col("o_orderdate")))
@@ -313,7 +313,7 @@ object MiscQueries {
       },
       Some("""SELECT o_orderkey, o_custkey, o_totalprice,
              |  CAST(year AS BIGINT) AS year, CAST(month AS BIGINT) AS month
-             |FROM parquet_scan('/root/repo/target/graft_part/__SF_NAME__/orders/**/*.parquet',
+             |FROM parquet_scan('__TARGET__/graft_part/__SF_NAME__/orders/**/*.parquet',
              |                  hive_partitioning=true)
              |WHERE year = 1995 AND month >= 7""".stripMargin)),
 
@@ -327,7 +327,7 @@ object MiscQueries {
     QueryDef("q79_path_partition_roundtrip",
       (s, d) => {
         val sfName = new java.io.File(d).getName
-        val base = s"/root/repo/target/graft_pathpart/$sfName"
+        val base = s"${Fixtures.targetDir}/graft_pathpart/$sfName"
         graft.sources.Sinks.parquetIntoPartitionDir(
           Tables.customer(s, d), base, "customer", ("ingest_date", "2026-08-12"))
         Tables.parquet(s, s"$base/customer")
@@ -336,7 +336,7 @@ object MiscQueries {
       },
       Some("""SELECT c_custkey, c_name, c_acctbal,
              |  CAST(ingest_date AS VARCHAR) AS ingest_date
-             |FROM parquet_scan('/root/repo/target/graft_pathpart/__SF_NAME__/customer/**/*.parquet',
+             |FROM parquet_scan('__TARGET__/graft_pathpart/__SF_NAME__/customer/**/*.parquet',
              |                  hive_partitioning=true)""".stripMargin)),
 
     // JSONL round-trip: the documents corpus written as JSON lines (the
@@ -348,7 +348,7 @@ object MiscQueries {
     QueryDef("q81_jsonl_roundtrip",
       (s, d) => {
         val sfName = new java.io.File(d).getName
-        val out = s"/root/repo/target/graft_jsonl/$sfName/documents"
+        val out = s"${Fixtures.targetDir}/graft_jsonl/$sfName/documents"
         Tables.documents(s, d).write.mode("overwrite").json(out)
         val schema = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("doc_id", LongType),
@@ -360,7 +360,7 @@ object MiscQueries {
           .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
       },
       Some("""SELECT doc_id, text, lang, source, n_chars
-             |FROM read_json_auto('/root/repo/target/graft_jsonl/__SF_NAME__/documents/*.json',
+             |FROM read_json_auto('__TARGET__/graft_jsonl/__SF_NAME__/documents/*.json',
              |                    format='newline_delimited')""".stripMargin)),
 
     // ORC round-trip: the orders fixture written to ORC (Spark's native
