@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.functions.BindComparisonLiterals
+import graft.sources.{PosixLocalFileContextFs, PosixLocalFileSystem}
 
 /** Session factory with the engine's standard configuration.
   *
@@ -59,6 +60,10 @@ object GraftSession {
       // would truncate the whole table on an incremental re-run
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       .config("spark.ui.enabled", "false")
+      // local writes set permissions without forking chmod (DECISIONS.md "Session defaults")
+      .config("spark.hadoop.fs.file.impl", classOf[PosixLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[PosixLocalFileContextFs].getName)
       // comparison keys by reference: a new key reuses the generated class
       // (DECISIONS.md "Bound comparison literals")
       .withExtensions(BindComparisonLiterals.install)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query registry (build plan: SURVEY.md §7).
   *
   * Every implemented operator is a named entry in [[queries]]; entries whose
   * semantics are ANSI-SQL-expressible carry a DuckDB oracle in [[oracleSql]]

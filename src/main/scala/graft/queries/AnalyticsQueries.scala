@@ -405,7 +405,7 @@ object AnalyticsQueries {
     QueryDef("q252_sketch_gold_readback",
       (s, d) => {
         val sfName = new java.io.File(d).getName
-        val out = s"/root/repo/target/graft_part/$sfName/cust_sketch_monthly"
+        val out = s"${Fixtures.targetDir}/graft_part/$sfName/cust_sketch_monthly"
         // thetaStoreBuild pins STATIC overwrite per-write: the session
         // default is dynamic, under which this full rebuild would leave
         // stale partitions from a prior layout (the q258 spec's finding)
@@ -448,7 +448,7 @@ object AnalyticsQueries {
     QueryDef("q258_sketch_store_append",
       (s, d) => {
         val sfName = new java.io.File(d).getName
-        val store = s"/root/repo/target/graft_part/$sfName/cust_sketch_incr"
+        val store = s"${Fixtures.targetDir}/graft_part/$sfName/cust_sketch_incr"
         val o = Tables.orders(s, d)
           .withColumn("month", date_format(col("o_orderdate"), "yyyy-MM"))
         graft.ops.Profiling.thetaStoreBuild(
@@ -484,7 +484,7 @@ object AnalyticsQueries {
       (s, d) => {
         import graft.streaming.StreamingOps
         val sfName = new java.io.File(d).getName
-        val base = s"/root/repo/target/graft_part/$sfName/stream_sketch"
+        val base = s"${Fixtures.targetDir}/graft_part/$sfName/stream_sketch"
         val p = new org.apache.hadoop.fs.Path(base)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
         val (src, store, ckpt, compacted) =

@@ -27,15 +27,15 @@ object Fixtures {
   }
 
   /** Absolute path of `target/` under the working directory: where the
-    * round-trip queries write their files. Their oracles name it with the
-    * `__TARGET__` token, which Verify replaces with this path. */
+    * round-trip and fixture queries write their files. Their oracles name
+    * it with the `__TARGET__` token, which Verify replaces with this path. */
   val targetDir: String = new java.io.File("target").getAbsolutePath
 
   private def sfName(d: String): String = new java.io.File(d).getName
 
   /** WAV blobs + stored samples (q129 decode, q145 decimate). */
   def audioMedia(s: SparkSession, d: String): String = {
-    val out = s"/root/repo/target/graft_audio/${sfName(d)}/media"
+    val out = s"$targetDir/graft_audio/${sfName(d)}/media"
     ensure(out) {
       Multimodal.wavFromTones(Multimodal.tonesFromDocuments(Tables.documents(s, d)))
         .write.mode("overwrite").parquet(out)
@@ -44,7 +44,7 @@ object Fixtures {
 
   /** Same WAV fixture under q230's own path (frame features). */
   def audioFramesMedia(s: SparkSession, d: String): String = {
-    val out = s"/root/repo/target/graft_audio_frames/${sfName(d)}/media"
+    val out = s"$targetDir/graft_audio_frames/${sfName(d)}/media"
     ensure(out) {
       Multimodal.wavFromTones(Multimodal.tonesFromDocuments(Tables.documents(s, d)))
         .write.mode("overwrite").parquet(out)
@@ -53,7 +53,7 @@ object Fixtures {
 
   /** PNG blobs + stored luminance (q194 dHash, q195 near-dup). */
   def imageMedia(s: SparkSession, d: String): String = {
-    val out = s"/root/repo/target/graft_img/${sfName(d)}/media"
+    val out = s"$targetDir/graft_img/${sfName(d)}/media"
     ensure(out) {
       Multimodal.pngLumaFixture(Tables.documents(s, d))
         .write.mode("overwrite").parquet(out)
@@ -62,7 +62,7 @@ object Fixtures {
 
   /** MP4 blobs + generation-time expectations (q240). */
   def mp4Media(s: SparkSession, d: String): String = {
-    val out = s"/root/repo/target/graft_mp4/${sfName(d)}/media"
+    val out = s"$targetDir/graft_mp4/${sfName(d)}/media"
     ensure(out) {
       Multimodal.mp4Fixture(Tables.documents(s, d))
         .write.mode("overwrite").parquet(out)

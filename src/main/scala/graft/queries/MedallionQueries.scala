@@ -174,7 +174,7 @@ object MedallionQueries {
       (s, d) => {
         val storePath = sys.props.get("graft.bench.q265.store").getOrElse {
           val sfName = new java.io.File(d).getName
-          val p = s"/root/repo/target/graft_part/$sfName/kmv_store"
+          val p = s"${Fixtures.targetDir}/graft_part/$sfName/kmv_store"
           buildKmvStore(s, d, p)
           p
         }

@@ -372,7 +372,7 @@ object MiscQueries {
     QueryDef("q82_orc_roundtrip",
       (s, d) => {
         val sfName = new java.io.File(d).getName
-        val out = s"/root/repo/target/graft_orc/$sfName/orders"
+        val out = s"${Fixtures.targetDir}/graft_orc/$sfName/orders"
         Tables.orders(s, d).write.mode("overwrite").orc(out)
         Tables.orc(s, out).select(
           col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
@@ -392,7 +392,7 @@ object MiscQueries {
     QueryDef("q80_jdbc_roundtrip",
       (s, d) => {
         val sfName = new java.io.File(d).getName
-        val url = s"jdbc:derby:/root/repo/target/graft_derby_q80/$sfName;create=true"
+        val url = s"jdbc:derby:${Fixtures.targetDir}/graft_derby_q80/$sfName;create=true"
         val props = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
         // bounded: the gate pins write+read correctness through a real SQL
         // database; a single-node embedded DB is not a throughput surface,
@@ -1028,7 +1028,7 @@ object MiscQueries {
     QueryDef("q192_schema_evolution_scan",
       (s, d) => {
         val sfName = new java.io.File(d).getName
-        val out = s"/root/repo/target/graft_evo/$sfName/orders"
+        val out = s"${Fixtures.targetDir}/graft_evo/$sfName/orders"
         val o = Tables.orders(s, d)
         o.filter(col("o_orderkey") % 2 === 0)
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))

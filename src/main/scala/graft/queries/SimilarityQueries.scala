@@ -236,7 +236,7 @@ object SimilarityQueries {
              |  round(sqrt(CAST(list_sum(list_transform(samples,
              |    x -> CAST(x AS BIGINT) * x)) AS DOUBLE) / len(samples)) / 32768.0, 9) AS rms,
              |  CAST(list_max(list_transform(samples, x -> abs(x))) AS BIGINT) AS peak
-             |FROM parquet_scan('/root/repo/target/graft_audio/__SF_NAME__/media/*.parquet')""".stripMargin)),
+             |FROM parquet_scan('__TARGET__/graft_audio/__SF_NAME__/media/*.parquet')""".stripMargin)),
 
     // REAL image perceptual hashing under the q129 fixture discipline:
     // 9×8 PNGs land on disk NEXT TO their encode-side integer luminance;
@@ -264,7 +264,7 @@ object SimilarityQueries {
              |    CASE WHEN lum[(i // 8) * 9 + (i % 8) + 1] >
              |              lum[(i // 8) * 9 + (i % 8) + 2]
              |         THEN (CAST(1 AS BIGINT) << i) ELSE 0 END)) AS BIGINT) AS dhash_lo
-             |FROM parquet_scan('/root/repo/target/graft_img/__SF_NAME__/media/*.parquet')""".stripMargin)),
+             |FROM parquet_scan('__TARGET__/graft_img/__SF_NAME__/media/*.parquet')""".stripMargin)),
 
     // Image NEAR-duplicate pairs — the multimodal member of the dedup
     // family: Hamming ≤ 3 on the dHash via 4×16-bit pigeonhole bands
@@ -280,7 +280,7 @@ object SimilarityQueries {
           Multimodal.dHashImages(Tables.parquet(s, out)), maxHamming = 3)
       },
       Some("""WITH m AS (SELECT media_id, lum
-             |  FROM parquet_scan('/root/repo/target/graft_img/__SF_NAME__/media/*.parquet')),
+             |  FROM parquet_scan('__TARGET__/graft_img/__SF_NAME__/media/*.parquet')),
              |h AS (SELECT media_id,
              |  CAST(list_sum(list_transform(range(32), i ->
              |    CASE WHEN lum[((i+32) // 8) * 9 + ((i+32) % 8) + 1] >
@@ -316,7 +316,7 @@ object SimilarityQueries {
       Some("""WITH m AS (SELECT media_id, channels, sample_rate,
              |  flatten(list_transform(range((len(samples) // channels + 1) // 2),
              |    f -> samples[f*2*channels + 1 : f*2*channels + channels])) AS ds
-             |  FROM parquet_scan('/root/repo/target/graft_audio/__SF_NAME__/media/*.parquet'))
+             |  FROM parquet_scan('__TARGET__/graft_audio/__SF_NAME__/media/*.parquet'))
              |SELECT media_id,
              |  true AS decode_ok,
              |  CAST(sample_rate // 2 AS INTEGER) AS sample_rate,
@@ -358,7 +358,7 @@ object SimilarityQueries {
              |        + 0.5) / 1e9 AS duration_s,
              |  exp_n_tracks AS n_tracks,
              |  exp_codecs AS codecs
-             |FROM parquet_scan('/root/repo/target/graft_mp4/__SF_NAME__/media/*.parquet')""".stripMargin)),
+             |FROM parquet_scan('__TARGET__/graft_mp4/__SF_NAME__/media/*.parquet')""".stripMargin)),
 
     // Frame-windowed audio features (per-frame RMS + zero-crossing rate —
     // the VAD/segmentation primitive) under the q129 fixture discipline:
@@ -375,7 +375,7 @@ object SimilarityQueries {
             col("sum_sq"), col("zcr"), round(col("rms"), 9).alias("rms"))
       },
       Some("""WITH m AS (SELECT media_id, samples
-             |  FROM parquet_scan('/root/repo/target/graft_audio_frames/__SF_NAME__/media/*.parquet')),
+             |  FROM parquet_scan('__TARGET__/graft_audio_frames/__SF_NAME__/media/*.parquet')),
              |f AS (SELECT media_id, u.i AS frame_idx,
              |        samples[(u.i*256 + 1):(u.i*256 + 256)] AS fr
              |      FROM m, unnest(range(CAST(ceil(len(samples) / 256.0) AS BIGINT))) AS u(i))
@@ -870,7 +870,7 @@ object SimilarityQueries {
       (s, d) => {
         val idxPath = sys.props.get("graft.bench.q266.index").getOrElse {
           val sfName = new java.io.File(d).getName
-          val p = s"/root/repo/target/graft_part/$sfName/ivf_index"
+          val p = s"${Fixtures.targetDir}/graft_part/$sfName/ivf_index"
           buildIvfIndex(s, d, p)
           p
         }

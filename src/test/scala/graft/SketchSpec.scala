@@ -106,7 +106,7 @@ class SketchSpec extends SparkSpec {
   }
 
   test("theta: the gold sketch table reads back partition-PRUNED and exact-mode exact") {
-    val dir = s"/root/repo/target/graft_part/spec/cust_sketch_monthly"
+    val dir = s"${graft.queries.Fixtures.targetDir}/graft_part/spec/cust_sketch_monthly"
     Profiling.thetaSketch(
         orders.withColumn("month", date_format(col("o_orderdate"), "yyyy-MM")),
         Seq("month"), "o_custkey")
@@ -142,8 +142,8 @@ class SketchSpec extends SparkSpec {
     }
     val o = orders.withColumn("month",
       date_format(col("o_orderdate"), "yyyy-MM"))
-    val incr = "/root/repo/target/graft_part/spec/cust_sketch_incr"
-    val full = "/root/repo/target/graft_part/spec/cust_sketch_full"
+    val incr = s"${graft.queries.Fixtures.targetDir}/graft_part/spec/cust_sketch_incr"
+    val full = s"${graft.queries.Fixtures.targetDir}/graft_part/spec/cust_sketch_full"
 
     // bootstrap history, snapshot its files, then append September
     Profiling.thetaStoreBuild(o.filter(col("month") < "1998-09"),
