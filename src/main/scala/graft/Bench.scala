@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.{DedupQueries, Fixtures, MedallionQueries, SimilarityQueries}
+
 /** Benchmark main (driver contract): runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -26,9 +28,10 @@ object Bench {
   // 5 is the committed-record contract (the full sf0.1 run);
   // SPARK_GRAFT_BENCH_REPS exists ONLY for diagnostic runs, e.g.
   // scripts/ab.sh's 3 reps per JVM — SCALE.md marks any row measured with
-  // fewer reps.
+  // fewer reps, and such a run never writes the committed record files.
+  private val CommittedReps = 5
   private val Reps: Int = {
-    val raw = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5")
+    val raw = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", CommittedReps.toString)
     val n =
       try raw.toInt
       catch { case _: NumberFormatException =>
@@ -97,7 +100,7 @@ object Bench {
     // or comma-separated `runMain graft.Bench q60,q61,q97` (any match);
     // `runMain graft.Bench shape` runs only the shape comparison.
     // Resolved BEFORE the prepare steps so a filtered run only builds the
-    // fixtures/indexes its queries actually read.
+    // inputs its queries actually read.
     val selected = args.headOption match {
       case Some("shape") => Map.empty[String, (SparkSession, String) => org.apache.spark.sql.DataFrame]
       case Some(subs) =>
@@ -108,75 +111,33 @@ object Bench {
     def selectedHas(subs: String*): Boolean =
       selected.keys.exists(n => subs.exists(n.contains))
 
-    // q93's corpus index is persisted state in production (the point of
-    // the incremental shape) — build it once here, UNTIMED, report the
-    // build cost as its own field, and let the timed reps measure the
-    // per-batch probe against the stored index.
+    // Prebuilt query inputs (DECISIONS.md "Prebuilt query inputs"): q93's
+    // corpus index, q265's KMV store, q266's IVF index and the media
+    // fixtures. Each is built here untimed through its Fixtures entry,
+    // the same one the query reads, and its build is reported as its own
+    // field; the timed reps then measure the query over the stored input.
+    // q145 shares q129's fixture, q195 shares q194's. A build that throws
+    // is not recorded, so the query's first rep builds it again.
     val prepared = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     if (canarySec >= 0) prepared("host_canary_sec") = canarySec
-    if (selectedHas("q93")) try {
-      val idxPath = new java.io.File("target/bench_idx/q93_corpus_sig").getAbsolutePath
-      val t0 = System.nanoTime()
-      graft.queries.DedupQueries.q93Signatures(spark, sfDir, batch = false)
-        .write.mode("overwrite").parquet(idxPath)
-      prepared("q93_index_build_sec") = (System.nanoTime() - t0) / 1e9
-      sys.props("graft.bench.q93.index") = idxPath
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] q93 index prepare failed (falls back to inline build): ${e.getMessage}")
-    }
-    Measure.sweep(spark)
-
-    // q265's KMV store is persisted state the same way (build untimed,
-    // report the cost, let the timed reps measure the READBACK rollup
-    // only — the split the gold theta store has had since q252/q253)
-    if (selectedHas("q265")) try {
-      val storePath = new java.io.File("target/bench_idx/q265_kmv_store").getAbsolutePath
-      val t0 = System.nanoTime()
-      graft.queries.MedallionQueries.buildKmvStore(spark, sfDir, storePath)
-      prepared("q265_store_build_sec") = (System.nanoTime() - t0) / 1e9
-      sys.props("graft.bench.q265.store") = storePath
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] q265 store prepare failed (falls back to inline build): ${e.getMessage}")
-    }
-    Measure.sweep(spark)
-
-    // q266's IVF index is persisted state the same way (build once per
-    // corpus refresh, probe per request batch) — build untimed, report
-    // the cost, let the timed reps measure the PROBE-ONLY read path
-    if (selectedHas("q266")) try {
-      val idxPath = new java.io.File("target/bench_idx/q266_ivf_index").getAbsolutePath
-      val t0 = System.nanoTime()
-      graft.queries.SimilarityQueries.buildIvfIndex(spark, sfDir, idxPath)
-      prepared("q266_index_build_sec") = (System.nanoTime() - t0) / 1e9
-      sys.props("graft.bench.q266.index") = idxPath
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] q266 index prepare failed (falls back to inline build): ${e.getMessage}")
-    }
-    Measure.sweep(spark)
-
-    // Media fixtures are input SYNTHESIS, not the measured op: pre-build
-    // them untimed (Fixtures builds once per JVM — the timed reps then
-    // measure decode/hash/frame work only) and report each build as its
-    // own field. q145 shares q129's fixture, q195 shares q194's.
     for ((key, users, build) <- Seq[(String, Seq[String], () => String)](
-      ("q129_q145_fixture_build_sec", Seq("q129", "q145"),
-        () => graft.queries.Fixtures.audioMedia(spark, sfDir)),
-      ("q194_q195_fixture_build_sec", Seq("q194", "q195"),
-        () => graft.queries.Fixtures.imageMedia(spark, sfDir)),
-      ("q230_fixture_build_sec", Seq("q230"),
-        () => graft.queries.Fixtures.audioFramesMedia(spark, sfDir)),
-      ("q240_fixture_build_sec", Seq("q240"),
-        () => graft.queries.Fixtures.mp4Media(spark, sfDir)))
+      ("q93_index_build_sec", Seq("q93"), () => DedupQueries.q93Index(spark, sfDir)),
+      ("q265_store_build_sec", Seq("q265"), () => MedallionQueries.kmvStore(spark, sfDir)),
+      ("q266_index_build_sec", Seq("q266"), () => SimilarityQueries.ivfIndex(spark, sfDir)),
+      ("q129_q145_fixture_build_sec", Seq("q129", "q145"), () => Fixtures.audioMedia(spark, sfDir)),
+      ("q194_q195_fixture_build_sec", Seq("q194", "q195"), () => Fixtures.imageMedia(spark, sfDir)),
+      ("q230_fixture_build_sec", Seq("q230"), () => Fixtures.audioFramesMedia(spark, sfDir)),
+      ("q240_fixture_build_sec", Seq("q240"), () => Fixtures.mp4Media(spark, sfDir)))
          if selectedHas(users: _*)) {
       try {
         val t0 = System.nanoTime()
         build()
         prepared(key) = (System.nanoTime() - t0) / 1e9
       } catch { case e: Throwable =>
-        System.err.println(s"[bench] $key prepare failed (falls back to inline build): ${e.getMessage}")
+        System.err.println(s"[bench] $key prepare failed: ${e.getMessage}")
       }
+      Measure.sweep(spark)
     }
-    Measure.sweep(spark)
 
     // Per-stage diagnostics for the two composed chains: each stage frame is
     // materialized ONCE through noop, so the committed record carries
@@ -225,9 +186,10 @@ object Bench {
       String.format(java.util.Locale.ROOT, ""","%s":%.3f""", k, Double.box(v))
     }.mkString
     val detailCompact = queryMap(_.stripPrefix("q").takeWhile(_ != '_'))
-    // Only a FULL run replaces the committed record files; a filtered or
-    // shape-only run would clobber them with a partial one.
-    if (args.isEmpty) {
+    // Only a FULL run at the committed reps replaces the committed record
+    // files; a filtered, shape-only or fewer-reps diagnostic run would
+    // clobber them with a partial or differently measured one.
+    if (args.isEmpty && Reps == CommittedReps) {
       def write(file: String, json: String): Unit =
         try java.nio.file.Files.write(java.nio.file.Paths.get(file), json.getBytes("UTF-8"))
         catch { case e: Throwable => System.err.println(s"[bench] $file write failed: ${e.getMessage}") }

@@ -41,7 +41,7 @@ object CandCount {
       return
     }
     val n = graft.ops.Dedup.incrementalCandidates(
-      DedupQueries.q93Signatures(spark, sfDir, batch = false),
+      graft.sources.Tables.parquet(spark, DedupQueries.q93Index(spark, sfDir)),
       DedupQueries.q93Signatures(spark, sfDir, batch = true),
       DedupQueries.Q93Bands, DedupQueries.Q93RowsPerBand).count()
     println(s"CANDIDATES=$n sf=$sfDir")

@@ -3,8 +3,8 @@ package graft
 import graft.queries.DedupQueries
 
 /** Diagnostic main: does the scoped wide-shuffle ceiling actually reach
-  * q93's banded candidate exchanges? Runs the q93 operator once against a
-  * prebuilt index and prints the per-stage task counts — under the scoped
+  * q93's banded candidate exchanges? Runs the q93 operator once against its
+  * stored index and prints the per-stage task counts — under the scoped
   * `initialPartitionNum = max(8×cores, 256)` the heavy exchanges submit
   * with >32 tasks (AQE coalesces *down* from 256 by map statistics);
   * at the 32-partition session default no stage can exceed the scan
@@ -19,12 +19,9 @@ object ScopeCheck {
       override def onStageSubmitted(s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
         stages.add((s.stageInfo.stageId, s.stageInfo.numTasks))
     })
-    val idxPath = new java.io.File(
-      s"target/bench_idx/scopecheck_${new java.io.File(sfDir).getName}").getAbsolutePath
-    DedupQueries.q93Signatures(spark, sfDir, batch = false).write.mode("overwrite").parquet(idxPath)
+    DedupQueries.q93Index(spark, sfDir)
     stages.clear()
-    val out = DedupQueries.q93Probe(spark, sfDir, graft.sources.Tables.parquet(spark, idxPath))
-    out.write.mode("overwrite").format("noop").save()
+    DedupQueries.q93Probe(spark, sfDir).write.mode("overwrite").format("noop").save()
     org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
     import scala.jdk.CollectionConverters._
     val counts = stages.asScala.toSeq.sortBy(_._1)

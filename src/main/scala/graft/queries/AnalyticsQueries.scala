@@ -404,8 +404,7 @@ object AnalyticsQueries {
     // same quarter from the fact table.
     QueryDef("q252_sketch_gold_readback",
       (s, d) => {
-        val sfName = new java.io.File(d).getName
-        val out = s"${Fixtures.targetDir}/graft_part/$sfName/cust_sketch_monthly"
+        val out = Fixtures.partPath(d, "cust_sketch_monthly")
         // thetaStoreBuild pins STATIC overwrite per-write: the session
         // default is dynamic, under which this full rebuild would leave
         // stale partitions from a prior layout (the q258 spec's finding)
@@ -447,8 +446,7 @@ object AnalyticsQueries {
     // the fact table (exact-mode equality pinned in SketchSpec).
     QueryDef("q258_sketch_store_append",
       (s, d) => {
-        val sfName = new java.io.File(d).getName
-        val store = s"${Fixtures.targetDir}/graft_part/$sfName/cust_sketch_incr"
+        val store = Fixtures.partPath(d, "cust_sketch_incr")
         val o = Tables.orders(s, d)
           .withColumn("month", date_format(col("o_orderdate"), "yyyy-MM"))
         graft.ops.Profiling.thetaStoreBuild(
@@ -483,8 +481,7 @@ object AnalyticsQueries {
     QueryDef("q264_streaming_sketch_lifecycle",
       (s, d) => {
         import graft.streaming.StreamingOps
-        val sfName = new java.io.File(d).getName
-        val base = s"${Fixtures.targetDir}/graft_part/$sfName/stream_sketch"
+        val base = Fixtures.partPath(d, "stream_sketch")
         val p = new org.apache.hadoop.fs.Path(base)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
         val (src, store, ckpt, compacted) =

@@ -5,22 +5,29 @@ import org.apache.spark.sql.SparkSession
 import graft.ops.Multimodal
 import graft.sources.Tables
 
-/** Media-fixture synthesis, built ONCE PER JVM per path and reused: the
-  * media queries (q129/q145/q194/q195/q230/q240) measure DECODE / hash /
-  * frame work — synthesizing their own input is not the measured op, and
-  * re-writing it every bench rep both inflated their medians and made
-  * their sf1 ramp rows read superlinear (round-10 verdict #5: 12.2× and
-  * 5.6× "ramps" that were fixture-build artifacts). Bench pre-builds
-  * these untimed and reports each build as its own
-  * `qNNN_fixture_build_sec` field (the q93 index discipline); Verify and
-  * specs build lazily on first use. Content is deterministic per
-  * (fixture, sf), so build-once-read-many is semantics-preserving.
+/** Prebuilt query inputs, built ONCE PER JVM per path and reused
+  * (DECISIONS.md "Prebuilt query inputs"). Two kinds go through
+  * [[ensure]]:
+  *  - media fixtures (q129/q145/q194/q195/q230/q240, below): those queries
+  *    measure DECODE / hash / frame work, and re-writing their input every
+  *    bench rep both inflated their medians and made their sf1 ramp rows
+  *    read superlinear (round-10 verdict #5);
+  *  - stored state production would persist, each defined beside its
+  *    query: q93's corpus index (`DedupQueries.q93Index`), q265's KMV store
+  *    (`MedallionQueries.kmvStore`) and q266's IVF index
+  *    (`SimilarityQueries.ivfIndex`). Their queries always read the stored
+  *    input, so Verify, PlanSpec and Bench run one plan.
+  * Every path is keyed by the sf dir's name. Bench builds each input
+  * untimed before its reps and reports the build as its own `*_build_sec`
+  * field; Verify and specs build on first use. Content is deterministic
+  * per (input, sf), so build-once-read-many is semantics-preserving.
   */
 object Fixtures {
 
   private val built = scala.collection.mutable.Set.empty[String]
 
-  /** Run `build` the first time `path` is requested in this JVM. */
+  /** Run `build` the first time `path` is requested in this JVM. A build
+    * that throws is not recorded, so the next request builds again. */
   def ensure(path: String)(build: => Unit): String = synchronized {
     if (!built.contains(path)) { build; built += path }
     path
@@ -32,6 +39,11 @@ object Fixtures {
   val targetDir: String = new java.io.File("target").getAbsolutePath
 
   private def sfName(d: String): String = new java.io.File(d).getName
+
+  /** Where the query file `name` for sf dir `d` lives: the stored inputs
+    * and the partitioned round trips. */
+  def partPath(d: String, name: String): String =
+    s"$targetDir/graft_part/${sfName(d)}/$name"
 
   /** WAV blobs + stored samples (q129 decode, q145 decimate). */
   def audioMedia(s: SparkSession, d: String): String = {

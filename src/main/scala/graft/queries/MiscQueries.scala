@@ -299,8 +299,7 @@ object MiscQueries {
     // listing), not a post-scan Filter.
     QueryDef("q73_partitioned_roundtrip",
       (s, d) => {
-        val sfName = new java.io.File(d).getName
-        val out = s"${Fixtures.targetDir}/graft_part/$sfName/orders"
+        val out = Fixtures.partPath(d, "orders")
         Tables.orders(s, d)
           .withColumn("year", year(col("o_orderdate")))
           .withColumn("month", month(col("o_orderdate")))

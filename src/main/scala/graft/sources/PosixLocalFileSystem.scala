@@ -5,8 +5,8 @@ import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsConstants, FsServerDefaults,
-  LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
+  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.io.nativeio.NativeIO
@@ -17,12 +17,12 @@ import org.apache.hadoop.io.nativeio.NativeIO
   */
 class PosixLocalFileSystem extends LocalFileSystem(new PosixRawLocalFileSystem)
 
-/** Sets permissions in-process. Without libhadoop, Hadoop's
-  * `setPermission` forks `chmod` for every directory and file a write
-  * creates (about 3 ms each); `java.nio` sets the same bits in ~10 µs.
-  * Hadoop's own path still runs when native IO is loaded, for the sticky
-  * bit (which `PosixFilePermission` cannot express), and on a file store
-  * without POSIX attributes.
+/** Sets permissions and reads link status in-process. Without libhadoop,
+  * Hadoop's `setPermission` forks `chmod` for every directory and file a
+  * write creates (about 3 ms each); `java.nio` sets the same bits in
+  * ~10 µs. Hadoop's own path still runs when native IO is loaded, for the
+  * sticky bit (which `PosixFilePermission` cannot express), and on a file
+  * store without POSIX attributes.
   */
 class PosixRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit =
@@ -31,6 +31,16 @@ class PosixRawLocalFileSystem extends RawLocalFileSystem {
       try Files.setPosixFilePermissions(pathToFile(p).toPath,
         PosixFilePermissions.fromString(permission.toString))
       catch { case _: UnsupportedOperationException => super.setPermission(p, permission) }
+
+  /** Hadoop's default (non-`stat`) `getFileLinkStatus` forks `readlink` on
+    * `new File(f.toString)`. For a `file:`-qualified path that string
+    * (`file:/…`) names no file, so `readlink` reports no link and Hadoop
+    * returns `getFileStatus(f)`: this returns it without the fork.
+    * `FileContext.rename` asks for both paths and both `.crc` sidecars.
+    * Unqualified paths keep Hadoop's code.
+    */
+  override def getFileLinkStatus(f: Path): FileStatus =
+    if (f.toUri.getScheme == "file") getFileStatus(f) else super.getFileLinkStatus(f)
 }
 
 /** The same for Hadoop `FileContext`, which Spark's streaming checkpoints

@@ -9,11 +9,11 @@ import scala.jdk.CollectionConverters._
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{FileContext, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
 import graft.pipeline.{Bronze, Medallion}
-import graft.sources.{PosixLocalFileContextFs, PosixLocalFileSystem}
+import graft.sources.{PosixLocalFileContextFs, PosixLocalFileSystem, PosixRawLocalFileSystem}
 
 /** Local writes set permissions in-process (`GraftSession`'s `file:`
   * bindings): no forked `chmod`, and the bits Hadoop's own local
@@ -25,9 +25,9 @@ class PosixLocalFileSystemSpec extends SparkSpec {
   private lazy val conf = spark.sessionState.newHadoopConf()
 
   /** A Silver-style partitioned write, a Bronze ingest and a
-    * checkpoint-style FileContext write into one temp dir, under a JFR
-    * recording of process starts; `true` is started inside it as a control.
-    * Returns the dir and the recorded commands. */
+    * checkpoint-style FileContext write and rename into one temp dir, under
+    * a JFR recording of process starts; `true` is started inside it as a
+    * control. Returns the dir and the recorded commands. */
   private lazy val written: (JPath, Seq[String]) = {
     val tmp = Files.createTempDirectory("posix_local")
     val df = Seq((1L, "a", 2.5), (2L, "b", -1.0)).toDF("id", "k", "v")
@@ -40,9 +40,12 @@ class PosixLocalFileSystemSpec extends SparkSpec {
         Medallion.PartitionDate(2026, 8, 11))
       Bronze.ingestFrame(df, s"$tmp/bronze", "t", "2026-08-11", "spec")
       val fc = FileContext.getFileContext(new URI(s"file://$tmp"), conf)
-      fc.mkdir(new Path(s"$tmp/ckpt/offsets"), FsPermission.getDirDefault, true)
-      fc.create(new Path(s"$tmp/ckpt/offsets/0"),
+      // qualified, as Spark's checkpoint file manager passes them
+      val offsets = new Path(s"file:$tmp/ckpt/offsets")
+      fc.mkdir(offsets, FsPermission.getDirDefault, true)
+      fc.create(new Path(offsets, ".0.tmp"),
         java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE)).close()
+      fc.rename(new Path(offsets, ".0.tmp"), new Path(offsets, "0"))
       new ProcessBuilder("true").start().waitFor()
       rec.stop()
       rec.dump(dump)
@@ -58,9 +61,11 @@ class PosixLocalFileSystemSpec extends SparkSpec {
     PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
 
   test("a partitioned write, a Bronze ingest and a FileContext write fork no chmod") {
-    val (_, commands) = written
+    val (tmp, commands) = written
     assert(commands.exists(_.startsWith("true")), commands) // the recording sees forks
     assert(!commands.exists(_.startsWith("chmod")), commands)
+    assert(Files.exists(tmp.resolve("ckpt/offsets/0"))) // the rename ran
+    assert(!commands.exists(_.startsWith("readlink")), commands)
   }
 
   test("written files and directories carry Hadoop's default bits under the umask") {
@@ -94,6 +99,29 @@ class PosixLocalFileSystemSpec extends SparkSpec {
     val hadoop = layout(new LocalFileSystem)
     assert(hadoop == Seq("rwxr-x---", "rwxr-x---", "rw-r-----", "rw-r-----"))
     assert(layout(new PosixLocalFileSystem) == hadoop)
+  }
+
+  test("getFileLinkStatus on file: paths matches RawLocalFileSystem's") {
+    val dir = Files.createTempDirectory("posix_link")
+    val file = Files.write(dir.resolve("f"), "abc".getBytes("UTF-8"))
+    val link = Files.createSymbolicLink(dir.resolve("link"), file)
+    val dangling = Files.createSymbolicLink(dir.resolve("dangling"), dir.resolve("gone"))
+    def statuses(fs: RawLocalFileSystem): Seq[Either[String, Seq[Any]]] = {
+      fs.initialize(new URI("file:///"), conf)
+      try Seq(file, dir, link, dangling, dir.resolve("missing")).map { jp =>
+        val p = fs.makeQualified(new Path(jp.toString))
+        assert(p.toUri.getScheme == "file", p)
+        try {
+          val st = fs.getFileLinkStatus(p)
+          Right(Seq(st.getPath, st.getLen, st.isDirectory, st.isSymlink,
+            st.getReplication, st.getBlockSize, st.getModificationTime,
+            st.getAccessTime, st.getPermission, st.getOwner, st.getGroup))
+        } catch { case e: java.io.FileNotFoundException => Left(e.getMessage) }
+      } finally fs.close()
+    }
+    val hadoop = statuses(new RawLocalFileSystem)
+    assert(hadoop.map(_.isRight) == Seq(true, true, true, false, false), hadoop)
+    assert(statuses(new PosixRawLocalFileSystem) == hadoop)
   }
 
   test("a sticky-bit setPermission still sets the sticky bit") {
