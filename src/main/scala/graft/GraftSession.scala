@@ -55,9 +55,7 @@ object GraftSession {
       // instant is identical, and the whole engine (unix_micros arithmetic,
       // window binning, the DuckDB oracle dump) stays on one timestamp type
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // dynamic: overwriting one ingest_date/year-month-day partition
-      // replaces ONLY that partition — static overwrite (the default)
-      // would truncate the whole table on an incremental re-run
+      // an overwrite replaces only the partitions it writes (DECISIONS.md "Session defaults")
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       .config("spark.ui.enabled", "false")
       // local writes set permissions without forking chmod (DECISIONS.md "Session defaults")

@@ -42,7 +42,10 @@ object Bronze {
     IngestResult(observation.get("rows").asInstanceOf[Long], out)
   }
 
-  /** Partition-pruned Bronze read for one ingest_date. */
+  /** Partition-pruned Bronze read for one ingest_date. It reads the table
+    * root, not the `ingest_date=` directory, so the frame keeps the
+    * inferred `ingest_date` column, which a directory read would restate.
+    */
   def readIngestDate(spark: SparkSession, bronzeBase: String, table: String,
                      ingestDate: String): DataFrame =
     Tables.parquet(spark, s"${bronzeBase.stripSuffix("/")}/$table")

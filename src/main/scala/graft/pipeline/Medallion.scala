@@ -7,7 +7,7 @@ import org.apache.spark.storage.StorageLevel
 import graft.ops.{SetOps, Validation}
 import graft.sources.Tables
 
-/** Layer plumbing (partitioned writes, partition-pruned reads, catalog
+/** Layer plumbing (partitioned writes, partition reads, catalog
   * registration) and the one statement of a medallion batch: which Silver
   * builders feed which Gold builders, in what order, and how each layer is
   * persisted and written.
@@ -48,18 +48,18 @@ object Medallion {
       .partitionBy("year", "month", "day")
       .parquet(s"${base.stripSuffix("/")}/$table")
 
-  /** S4: partition-selected read. The reference concatenates the partition
-    * path by hand (gold/processor.py:117-130); we read the table root and
-    * let Catalyst prune (`PartitionFilters` in the scan) — same I/O, but
-    * the partition columns stay queryable and multi-partition reads stay
-    * one scan.
+  /** S4: one partition's rows, read from its directory
+    * `<base>/<table>/year=/month=/day=` as the reference builds the path
+    * (gold/processor.py:117-130). Only that directory is listed, however
+    * many partitions the table holds; the frame has the data columns in
+    * file order and no partition columns. A missing partition raises
+    * Spark's missing-path error, as the reference's read does
+    * (DECISIONS.md "Partition reads open the partition").
     */
   def readPartition(spark: SparkSession, base: String, table: String,
                     date: PartitionDate): DataFrame =
-    Tables.parquet(spark, s"${base.stripSuffix("/")}/$table")
-      .where(col("year") === date.year && col("month") === date.month &&
-        col("day") === date.day)
-      .drop("year", "month", "day")
+    Tables.parquet(spark,
+      s"${base.stripSuffix("/")}/$table/year=${date.year}/month=${date.month}/day=${date.day}")
 
   /** S9: register external parquet tables in the session catalog
     * (reference: spark/common/register_hive_tables.py:61-91).

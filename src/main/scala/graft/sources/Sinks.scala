@@ -28,9 +28,9 @@ object Sinks {
     * semantic the static mode can't express: overwrite ONLY the
     * partitions present in this batch, leave every other partition
     * untouched (static mode would wipe the whole table root first). The
-    * setting is applied per-WRITE via the writer option, never session-
-    * wide — a session-wide flip silently changes unrelated writers'
-    * semantics. At scale this is how per-day/per-source re-ingestion
+    * writer option fixes the mode for this write in any session;
+    * `GraftSession` also sets it session-wide (DECISIONS.md "Session
+    * defaults"). At scale this is how per-day/per-source re-ingestion
     * stays idempotent without rewriting history.
     */
   def parquetOverwriteDynamic(df: DataFrame, path: String,

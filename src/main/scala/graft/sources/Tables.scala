@@ -2,12 +2,13 @@ package graft.sources
 
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
 import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
 import org.apache.spark.sql.functions._
@@ -22,34 +23,41 @@ import org.apache.spark.sql.types.StructType
   */
 object Tables {
 
-  /** `spark.read.parquet(path)` without its schema-inference job.
+  /** `spark.read.parquet(path)` without its schema-inference job, listed once.
     *
     * With `mergeSchema` off Spark infers the schema from one footer —
     * `_common_metadata`, else `_metadata`, else the first data file by
     * path — but reads that footer in a one-task Spark job on every call.
     * This picks the same file from the same listing, reads its footer on
-    * the driver with the conversion the inference task uses, and hands
-    * the result to the reader as the schema. Nothing is cached, so a
-    * table overwritten between reads resolves afresh.
+    * the driver with the conversion the inference task uses, and builds
+    * the relation `spark.read.parquet` builds from that listing, so the
+    * path is listed once, not again by the reader. Nothing is cached, so
+    * a table overwritten between reads resolves afresh.
     *
     * Falls through to `spark.read.parquet(path)` (so the caller gets
     * Spark's own relation or error) when there is no file to read, the
     * footer cannot be read, the path is a streaming sink's output (Spark
-    * then lists the sink's log, not the directory), or a data column
-    * shares a name with a partition column (a given schema would move it).
+    * then lists the sink's log, not the directory), or two columns share
+    * a name (a data column named like a partition column keeps its place
+    * in Spark's relation; two alike data columns make Spark raise).
     */
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    footerSchema(spark, path) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
-      case None         => spark.read.parquet(path)
-    }
-
-  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
-    val conf = spark.sessionState.conf
+  def parquet(spark: SparkSession, path: String): DataFrame = {
     val hadoopConf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
     val index = new InMemoryFileIndex(
       spark, Seq(root.getFileSystem(hadoopConf).makeQualified(root)), Map.empty, None)
+    footerSchema(spark, path, index, hadoopConf) match {
+      // the fields DataSource.resolveRelation gives spark.read.parquet(path)'s relation
+      case Some(schema) => spark.baseRelationToDataFrame(HadoopFsRelation(index,
+        index.partitionSchema, GraftBridge.asNullable(schema), None, new ParquetFileFormat,
+        Map("path" -> path))(spark))
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  private def footerSchema(spark: SparkSession, path: String, index: InMemoryFileIndex,
+                           hadoopConf: Configuration): Option[StructType] = {
+    val conf = spark.sessionState.conf
     val leaves = index.allFiles().sortBy(_.getPath.toString)
     if (leaves.isEmpty || FileStreamSink.hasMetadata(Seq(path), hadoopConf, conf)) return None
     import ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE => common, PARQUET_METADATA_FILE => meta}
@@ -69,8 +77,9 @@ object Tables {
         Some(ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer), converter))
       } catch { case NonFatal(_) => None }
     }
-    val partCols = index.partitionSchema.fieldNames
-    schema.filterNot(_.fieldNames.exists(c => partCols.exists(conf.resolver(_, c))))
+    // two columns alike under the resolver: Spark's relation raises, or keeps a data column in place
+    schema.filterNot(s => (s.fieldNames ++ index.partitionSchema.fieldNames)
+      .combinations(2).exists(p => conf.resolver(p(0), p(1))))
   }
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =

@@ -2,6 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Minimal accessor for the `private[sql]` Column ↔ Expression bridge —
   * the supported way for libraries to expose custom Catalyst expressions
@@ -10,6 +11,12 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `schema` with every field nullable, nested fields included
+    * (`StructType.asNullable` is `private[spark]`): the data schema a
+    * file source relation carries.
+    */
+  def asNullable(schema: StructType): StructType = schema.asNullable
 
   /** Block until queued listener events are delivered (`listenerBus` is
     * `private[spark]`) — needed when metrics collected by a listener are

@@ -1,8 +1,9 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -184,16 +185,31 @@ class PipelineSpec extends SparkSpec {
 
   test("medallion round-trip: partitioned write then pruned read") {
     val dir = java.nio.file.Files.createTempDirectory("medallion").toString
-    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-    val date = Medallion.PartitionDate(2026, 8, 12)
-    Medallion.writePartitioned(df, dir, "t1", date)
-    val back = Medallion.readPartition(spark, dir, "t1", date)
-    assert(back.orderBy("id").collect().map(_.getLong(0)).toSeq == Seq(1L, 2L))
-    assert(back.columns.toSet == Set("id", "v"))
-    // partition pruning reaches the scan
-    val plan = Medallion.readPartition(spark, dir, "t1", date)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") || !plan.contains("year=2025"))
+    val written = Seq(
+      Medallion.PartitionDate(2026, 8, 12) -> Seq((1L, "a"), (2L, "b")),
+      Medallion.PartitionDate(2026, 8, 13) -> Seq((3L, "c")))
+    written.foreach { case (date, rows) => Medallion.writePartitioned(rows.toDF("id", "v"), dir, "t1", date) }
+    written.foreach { case (date, rows) =>
+      val back = Medallion.readPartition(spark, dir, "t1", date)
+      assert(back.columns.toSeq == Seq("id", "v"))
+      val got = back.as[(Long, String)].collect().toSeq.sortBy(_._1)
+      assert(got == rows, date)
+      // the frame a read of the table root filtered to the partition gives
+      val filtered = spark.read.parquet(s"$dir/t1")
+        .where(col("year") === date.year && col("month") === date.month && col("day") === date.day)
+        .drop("year", "month", "day")
+      assert(filtered.schema == back.schema, date)
+      assert(filtered.as[(Long, String)].collect().toSeq.sortBy(_._1) == got, date)
+      // the relation lists the partition's directory and nothing else
+      val roots = back.queryExecution.analyzed.collect {
+        case l: LogicalRelation => l.relation
+      }.collect { case r: HadoopFsRelation => r.location.rootPaths.map(_.toUri.getPath) }
+      assert(roots == Seq(Seq(s"$dir/t1/year=${date.year}/month=${date.month}/day=${date.day}")), date)
+    }
+    // a missing partition raises what spark.read.parquet raises for a missing path
+    val missing = intercept[AnalysisException](
+      Medallion.readPartition(spark, dir, "t1", Medallion.PartitionDate(2025, 8, 12)))
+    assert(missing.getCondition == "PATH_NOT_FOUND")
   }
 
   test("fused pipeline produces both gold tables") {
