@@ -4,6 +4,8 @@
 # ab_report.py. Removes host drift from single-change adjudication.
 # A defaults to a snapshot of the parent's classes, B to the current build.
 # Usage: [CLS_A=<dirA>] [CLS_B=<dirB>] scripts/ab.sh <name> <query-filter> [sfDir]
+#   query-filter: comma-separated full names or prefixes up to `_`
+#   (`q1,q10` runs q1_* and q10_*, not q100-q199).
 #   sfDir defaults to $SPARK_GRAFT_SF_DIR; captures go to target/ab/.
 set -uo pipefail
 cd "$(dirname "$0")/.."

@@ -96,20 +96,18 @@ object Bench {
     try graft.sources.Tables.registerAll(spark, sfDir) catch { case _: Throwable => }
     try spark.sql("select count(*) from lineitem").collect() catch { case _: Throwable => }
 
-    // optional substring filter (local iteration): `runMain graft.Bench q44`
-    // or comma-separated `runMain graft.Bench q60,q61,q97` (any match);
+    // optional query filter (local iteration, SparkEntry.selects):
+    // `runMain graft.Bench q44` or `runMain graft.Bench q60,q61,q97`;
     // `runMain graft.Bench shape` runs only the shape comparison.
     // Resolved BEFORE the prepare steps so a filtered run only builds the
     // inputs its queries actually read.
     val selected = args.headOption match {
       case Some("shape") => Map.empty[String, (SparkSession, String) => org.apache.spark.sql.DataFrame]
-      case Some(subs) =>
-        val pats = subs.split(',').filter(_.nonEmpty)
-        SparkEntry.queries.filter { case (n, _) => pats.exists(n.contains) }
+      case Some(pats) => SparkEntry.selected(pats)
       case None => SparkEntry.queries
     }
-    def selectedHas(subs: String*): Boolean =
-      selected.keys.exists(n => subs.exists(n.contains))
+    def selectedHas(pats: String*): Boolean =
+      pats.exists(p => selected.keys.exists(SparkEntry.selects(p, _)))
 
     // Prebuilt query inputs (DECISIONS.md "Prebuilt query inputs"): q93's
     // corpus index, q265's KMV store, q266's IVF index and the media
@@ -150,9 +148,7 @@ object Bench {
     // the parent query, so sf-ramp snapshots carry the split.
     def stageSplit(parent: String,
                    stages: => Seq[(String, org.apache.spark.sql.DataFrame)]): Unit = {
-      val wanted = args.isEmpty ||
-        args.headOption.exists(_.split(',').exists(p => p.nonEmpty && parent.contains(p)))
-      if (wanted) try {
+      if (selectedHas(parent)) try {
         for ((name, df) <- stages) {
           val t0 = System.nanoTime()
           df.write.mode("overwrite").format("noop").save()

@@ -7,8 +7,7 @@ import graft.queries.DedupQueries
 /** Diagnostic main: COUNT q93's band-join candidate pairs at a given SF —
   * the workload-growth denominator for the SCALE.md ratio gates (wall
   * ratios are only meaningful against the counted candidate growth, and
-  * the generated fixtures are re-derived each round, so the count is
-  * re-taken with them).
+  * a regenerated fixture changes it, so the count is re-taken with them).
   */
 object CandCount {
   def main(args: Array[String]): Unit = {
@@ -19,12 +18,11 @@ object CandCount {
     // verify joins actually consume), the denominator for ITS sf gate.
     if (args.drop(1).headOption.contains("jaccard")) {
       import org.apache.spark.sql.functions.{array_distinct, array_sort, size => asize}
-      // Measure the denominator under the PRODUCTION shuffle posture
-      // (round-15 ADVICE): the shipped operator runs its prefix chain
-      // inside the WideShuffle scope with the token frame persisted —
-      // counting at the 32-partition session default would re-create the
-      // exact fixed-partition spill class the round-15 fix removed and
-      // re-tokenize the corpus per pass.
+      // Measure the denominator under the shuffle posture the operator
+      // runs in: its prefix chain runs inside the WideShuffle scope with
+      // the token frame persisted — counting at the 32-partition session
+      // default would spill on fixed partitions that the scope exists to
+      // avoid, and re-tokenize the corpus per pass.
       graft.ops.DedupMinHash.WideShuffle.enter(spark)
       try {
         val t = graft.sources.Tables.documents(spark, sfDir)

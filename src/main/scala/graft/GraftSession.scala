@@ -69,8 +69,8 @@ object GraftSession {
   /** Local session; core count from SPARK_GRAFT_CPUS (driver contract).
     * SPARK_GRAFT_SHUFFLE_PARTITIONS still overrides the non-AQE shuffle
     * default AND the AQE initial partition count for deployments that
-    * want an explicit ceiling, but since round 13 it is a tuning
-    * override, not a correctness-of-scale requirement: the AQE
+    * want an explicit ceiling, but it is a tuning override, not a
+    * correctness-of-scale requirement: the AQE
     * initialPartitionNum growth path (see [[builder]]) sizes every
     * adaptive shuffle from runtime statistics.
     */

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Pivots, Projections, Validation}
+import graft.ops.{Pivots, Projections, Validation, Windows}
 import graft.pipeline.{Gold, Medallion, Silver}
 import graft.queries.MedallionQueries
 
@@ -82,7 +82,7 @@ object ShapeBench {
     val bureau = MedallionQueries.bureau(spark, sfDir)
     val balance = MedallionQueries.bureauBalance(spark, sfDir)
     bureau.count(); balance.count()                  // processor.py:253-254
-    val bureauAgg = Silver.bureauSummaryUnfiltered(bureau, balance)
+    val bureauAgg = Silver.bureauSummaryUnfiltered(referenceBureauWithLatest(bureau, balance))
     bureauAgg.count()                                // processor.py:349
     bureauAgg.filter(col("SK_ID_CURR").isNull).count() // processor.py:354
     val bureauValid = bureauAgg.filter(col("SK_ID_CURR").isNotNull)
@@ -129,6 +129,14 @@ object ShapeBench {
 
     ShapeResult(nProfile, nPortfolio)
   }
+
+  /** The reference's step-2 input (processor.py:286-313): each loan's
+    * latest `bureau_balance` month (W1) left-joined onto `bureau`, which
+    * the library's builder skips; ShapeBenchSpec pins the same rows.
+    */
+  private[graft] def referenceBureauWithLatest(bureau: DataFrame, balance: DataFrame): DataFrame =
+    bureau.join(Windows.topOnePerGroup(balance, Seq("SK_ID_BUREAU"), Seq(col("MONTHS_BALANCE").desc)),
+      Seq("SK_ID_BUREAU"), "left")
 
   /** The reference's step-4 builder as it runs (processor.py:588-651):
     * counts and amount averages as two per-client aggregates, the dynamic

@@ -26,6 +26,16 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(q => q.name -> q.fn).toMap
 
+  /** The mains' query filter: whether comma-separated `patterns` select
+    * `name`. A pattern selects the name it equals and the names it
+    * prefixes up to `_` (`q1` selects `q1_*`, not `q10_pivot_status`).
+    */
+  def selects(patterns: String, name: String): Boolean =
+    patterns.split(',').exists(p => p.nonEmpty && (name == p || name.startsWith(p + "_")))
+
+  def selected(patterns: String): Map[String, (SparkSession, String) => DataFrame] =
+    queries.filter { case (n, _) => selects(patterns, n) }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */

@@ -6,14 +6,9 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional third arg: substring filter for local iteration — comma-
-    // separated patterns match any (same syntax as Bench's filter)
-    val selected = args.lift(2) match {
-      case Some(subs) =>
-        val pats = subs.split(',').filter(_.nonEmpty)
-        SparkEntry.queries.filter { case (n, _) => pats.exists(n.contains) }
-      case None => SparkEntry.queries
-    }
+    // optional third arg: query filter for local iteration
+    // (SparkEntry.selects, the same syntax as Bench's filter)
+    val selected = args.lift(2).fold(SparkEntry.queries)(SparkEntry.selected)
     val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>

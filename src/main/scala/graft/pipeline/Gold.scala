@@ -31,16 +31,10 @@ object Gold {
       col("AMT_INCOME_TOTAL").alias("income"),
       col("AMT_CREDIT").alias("credit_exposure"),
       col("TARGET").alias("default_flag"))
-    val bureauSel = bureauSummary.select(
-      col("SK_ID_CURR"),
-      coalesce(col("bureau_total_debt"), lit(0)).alias("bureau_total_debt"))
+    val bureauSel = bureauSummary.select("SK_ID_CURR", "bureau_total_debt")
     val paymentSel = paymentBehavior.select(
-      col("SK_ID_CURR"),
-      coalesce(col("payment_avg_delay_days"), lit(0)).alias("payment_avg_delay_days"),
-      coalesce(col("payment_late_count"), lit(0)).alias("payment_late_count"))
-    val prevSel = previousApps.select(
-      col("SK_ID_CURR"),
-      coalesce(col("previous_rejection_rate"), lit(0.0)).alias("previous_rejection_rate"))
+      "SK_ID_CURR", "payment_avg_delay_days", "payment_late_count")
+    val prevSel = previousApps.select("SK_ID_CURR", "previous_rejection_rate")
 
     val joined = appSel
       .join(bureauSel, Seq("SK_ID_CURR"), "left")

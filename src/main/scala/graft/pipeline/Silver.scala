@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType}
 
-import graft.ops.{Pivots, Projections, SetOps, Validation, Windows}
+import graft.ops.{Pivots, Projections, SetOps, Validation}
 
 /** Silver-layer builders: the reference pipeline's four client-feature
   * tables, re-expressed as composable DataFrame functions
@@ -18,7 +18,10 @@ import graft.ops.{Pivots, Projections, SetOps, Validation, Windows}
   *    reference runs three and joins them back;
   *  - the status pivot accepts explicit values to skip the distinct job
   *    and fix the output schema (pass None to match the reference's
-  *    dynamic columns).
+  *    dynamic columns);
+  *  - the bureau summary skips the reference's latest-month join, and
+  *    payment behavior its timeline sequence: no output column reads
+  *    them (DECISIONS.md "Bureau summary without the latest-month join").
   */
 object Silver {
 
@@ -73,23 +76,20 @@ object Silver {
       normalizeApplication(SetOps.unionByNameTolerant(train, test)),
       clientApplicationRules)
 
-  /** silver_bureau_summary: latest bureau_balance month per loan (W1) ⟕
-    * bureau, then client-level rollup (silver/processor.py:286-347).
-    * (MONTHS_BALANCE is unique per loan, so the reference's single-column
-    * order is already total.)
+  /** silver_bureau_summary: client-level rollup of `bureau`
+    * (silver/processor.py:286-347). No output column depends on
+    * `bureauBalance`: the reference left-joins each loan's latest balance
+    * month, unique per `SK_ID_BUREAU`, and no aggregate reads it.
     */
   def bureauSummary(bureau: DataFrame, bureauBalance: DataFrame): DataFrame =
-    bureauSummaryUnfiltered(bureau, bureauBalance).filter(col("SK_ID_CURR").isNotNull)
+    bureauSummaryUnfiltered(bureau).filter(col("SK_ID_CURR").isNotNull)
 
   /** [[bureauSummary]] before the null-key keep-filter — the intermediate
     * the reference validates with separate count jobs
     * (silver/processor.py:349-358); exposed for shape-faithful replay.
     */
-  def bureauSummaryUnfiltered(bureau: DataFrame, bureauBalance: DataFrame): DataFrame = {
-    val latest = Windows.topOnePerGroup(bureauBalance, Seq("SK_ID_BUREAU"),
-      Seq(col("MONTHS_BALANCE").desc))
-    val joined = bureau.join(latest, Seq("SK_ID_BUREAU"), "left")
-    joined.groupBy("SK_ID_CURR")
+  def bureauSummaryUnfiltered(bureau: DataFrame): DataFrame =
+    bureau.groupBy("SK_ID_CURR")
       .agg(
         count(lit(1)).alias("bureau_credit_count"),
         sum(when(col("CREDIT_ACTIVE") === "Active", 1).otherwise(0))
@@ -97,11 +97,9 @@ object Silver {
         sum(col("AMT_CREDIT_SUM_DEBT")).alias("bureau_total_debt"),
         max(col("CREDIT_DAY_OVERDUE")).alias("bureau_max_days_overdue"),
         sum(col("AMT_CREDIT_SUM_OVERDUE")).alias("bureau_total_overdue"))
-  }
 
-  /** silver_payment_behavior: installment delay + client timeline sequence
-    * + client rollup with guarded payment ratio
-    * (silver/processor.py:430-487).
+  /** silver_payment_behavior: installment delay + client rollup with
+    * guarded payment ratio (silver/processor.py:430-487).
     */
   def paymentBehavior(installments: DataFrame): DataFrame =
     paymentBehaviorUnfiltered(installments).filter(col("SK_ID_CURR").isNotNull)
@@ -114,11 +112,7 @@ object Silver {
       coalesce(
         col("DAYS_ENTRY_PAYMENT").cast("int") - col("DAYS_INSTALMENT").cast("int"),
         lit(0)))
-    // the timeline sequence is part of the reference's surface (W2) even
-    // though the rollup doesn't consume it
-    val sequenced = Windows.sequenceNumber(withDelay, Seq("SK_ID_CURR"),
-      Seq(col("DAYS_ENTRY_PAYMENT").asc_nulls_last), "payment_sequence")
-    sequenced.groupBy("SK_ID_CURR")
+    withDelay.groupBy("SK_ID_CURR")
       .agg(
         avg(col("payment_delay_days")).alias("payment_avg_delay_days"),
         sum(when(col("payment_delay_days") > 0, 1).otherwise(0))

@@ -65,7 +65,7 @@ class PipelineSpec extends SparkSpec {
     assert(m.getAs[Long]("passed_rows") == 1L)
   }
 
-  test("bureauSummary: latest-month dedup, left-join nulls, client rollup") {
+  test("bureauSummary: client rollup of bureau, independent of bureau_balance") {
     val bureau = Seq(
       // (SK_ID_CURR, SK_ID_BUREAU, CREDIT_ACTIVE, CREDIT_DAY_OVERDUE, debt, overdue)
       (10L, 100L, "Active", 0, Double.box(1000.0), 0.0),
@@ -87,6 +87,10 @@ class PipelineSpec extends SparkSpec {
     assert(c10.getAs[Double]("bureau_total_debt") == 1500.0) // null row skipped by sum
     assert(c10.getAs[Int]("bureau_max_days_overdue") == 30)
     assert(out(20L).getAs[Long]("bureau_credit_count") == 1L)
+    // the reference's latest-month join feeds no column: an empty balance
+    // frame gives the same rows
+    def rows(b: DataFrame) = Silver.bureauSummary(bureau, b).collect().map(_.toString).sorted.toSeq
+    assert(rows(balance) == rows(balance.limit(0)))
   }
 
   test("paymentBehavior: delay coalesce, late count, guarded ratio") {

@@ -61,10 +61,14 @@ class PlanSpec extends SparkSpec {
   }
 
   test("previous applications and q10 pivot in one aggregation: one shuffle, no Pivot") {
+    import graft.queries.MedallionQueries
     val prev = graft.pipeline.Silver.previousApplications(
-      graft.queries.MedallionQueries.previousApps(spark, sf001),
-      Some(graft.queries.MedallionQueries.statuses))
+      MedallionQueries.previousApps(spark, sf001), Some(MedallionQueries.statuses))
+    // the bureau summary is one aggregation too: no latest-month window or join
+    val bureau = graft.pipeline.Silver.bureauSummary(
+      MedallionQueries.bureau(spark, sf001), MedallionQueries.bureauBalance(spark, sf001))
     Seq("previousApplications" -> prev.queryExecution.executedPlan.toString,
+        "bureauSummary" -> bureau.queryExecution.executedPlan.toString,
         "q10_pivot_status" -> plan("q10_pivot_status")).foreach { case (name, p) =>
       val shuffles = "(?<!Broadcast)Exchange ".r.findAllIn(p).length
       assert(shuffles == 1, s"$name plans $shuffles shuffle exchanges:\n$p")

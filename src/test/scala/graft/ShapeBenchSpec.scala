@@ -16,17 +16,28 @@ class ShapeBenchSpec extends SparkSpec {
     assert(ref.profileRows > 0 && ref.portfolioRows > 0)
   }
 
-  test("the reference replay's step 4 equals the library's dynamic-pivot builder") {
-    // the replay states the reference's three aggregates and two joins
-    // itself; the library's one-pass builder must give the same rows
-    val prev = graft.queries.MedallionQueries.previousApps(spark, sf001)
-    val ref = ShapeBench.referencePreviousApplications(prev)
-    val lib = graft.pipeline.Silver.previousApplications(prev, None)
-    assert(ref.schema.map(f => f.name -> f.dataType) == lib.schema.map(f => f.name -> f.dataType))
+  test("the reference replay's steps 2 and 4 equal the library's builders") {
+    // the replay states the reference's latest-month join (step 2) and its
+    // three aggregates and two joins (step 4) itself; the library's
+    // one-aggregation builders must give the same schema and rows
+    import graft.pipeline.Silver
+    import graft.queries.MedallionQueries
     def rows(df: DataFrame): Seq[String] = df.collect().map(_.mkString("|")).toSeq.sorted
-    val refRows = rows(ref)
-    assert(refRows.nonEmpty)
-    assert(refRows == rows(lib))
+    val bureau = MedallionQueries.bureau(spark, sf001)
+    val balance = MedallionQueries.bureauBalance(spark, sf001)
+    val prev = MedallionQueries.previousApps(spark, sf001)
+    Seq(
+      "step 2" -> (Silver.bureauSummaryUnfiltered(ShapeBench.referenceBureauWithLatest(bureau, balance))
+        .where("SK_ID_CURR IS NOT NULL"),
+        Silver.bureauSummary(bureau, balance)),
+      "step 4" -> (ShapeBench.referencePreviousApplications(prev),
+        Silver.previousApplications(prev, None))
+    ).foreach { case (step, (ref, lib)) =>
+      assert(ref.schema.map(f => f.name -> f.dataType) == lib.schema.map(f => f.name -> f.dataType), step)
+      val refRows = rows(ref)
+      assert(refRows.nonEmpty, step)
+      assert(refRows == rows(lib), step)
+    }
   }
 
   test("graft-shape gold outputs equal the q60/q61 registered queries") {
