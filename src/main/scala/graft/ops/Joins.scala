@@ -41,17 +41,14 @@ object Joins {
     *
     * Scale posture: the change batch is bounded (a CDC tick, a corrections
     * file), the target is the 100 TB side — so the target must NEVER
-    * shuffle. With `broadcastBatch` the anti join broadcasts the batch and
-    * the target streams through map-side; the whole merge is one target
-    * scan + one union, no exchange. A full-outer-join formulation (the
-    * naive MERGE) would shuffle the entire target on the key.
+    * shuffle. The anti join broadcasts the batch's keys and the target
+    * streams through map-side; the whole merge is one target scan + one
+    * union, no exchange. A full-outer-join formulation (the naive MERGE)
+    * would shuffle the entire target on the key.
     */
-  def upsert(target: DataFrame, batch: DataFrame, keys: Seq[String],
-             broadcastBatch: Boolean = true): DataFrame = {
-    val b = if (broadcastBatch) broadcast(batch.select(keys.map(col): _*)) else
-      batch.select(keys.map(col): _*)
-    target.join(b, keys, "left_anti").unionByName(batch)
-  }
+  def upsert(target: DataFrame, batch: DataFrame, keys: Seq[String]): DataFrame =
+    target.join(broadcast(batch.select(keys.map(col): _*)), keys, "left_anti")
+      .unionByName(batch)
 
   /** [[upsert]] with a per-row `action` audit column: 'kept' (target row
     * untouched), 'updated' (batch replaced an existing key), 'inserted'

@@ -1494,27 +1494,14 @@ object AnalyticsQueries {
     // linearly with orders, never quadratically with the catalog; the
     // per-item counts broadcast (dimension-sized).
     QueryDef("q167_market_basket",
-      (s, d) => {
-        val items = Tables.lineitem(s, d)
-          .select(col("l_orderkey"), col("l_partkey")).distinct()
-        val nOrders = items.select(col("l_orderkey")).distinct()
-          .agg(count(lit(1)).alias("__n"))
-        val itemCnt = items.groupBy(col("l_partkey"))
-          .agg(count(lit(1)).alias("__c"))
-        val pairs = orderPartPairs(items)
-          .select(col("pa").alias("part_a"), col("pb").alias("part_b"),
+      (s, d) => basketCounts(s, d, "part_a", "part_b") { pairs =>
+          pairs.select(col("pa").alias("part_a"), col("pb").alias("part_b"),
             col("pair_cnt"))
-        pairs
-          .join(broadcast(itemCnt.withColumnRenamed("l_partkey", "part_a")
-            .withColumnRenamed("__c", "__ca")), Seq("part_a"))
-          .join(broadcast(itemCnt.withColumnRenamed("l_partkey", "part_b")
-            .withColumnRenamed("__c", "__cb")), Seq("part_b"))
-          .crossJoin(broadcast(nOrders))
-          .select(col("part_a"), col("part_b"), col("pair_cnt"),
-            round(col("pair_cnt").cast(DoubleType) / col("__n"), 6).alias("support"),
-            round(col("pair_cnt").cast(DoubleType) * col("__n") /
-              (col("__ca") * col("__cb")), 6).alias("lift"))
-      },
+        }
+        .select(col("part_a"), col("part_b"), col("pair_cnt"),
+          round(col("pair_cnt").cast(DoubleType) / col("__n"), 6).alias("support"),
+          round(col("pair_cnt").cast(DoubleType) * col("__n") /
+            (col("__ca") * col("__cb")), 6).alias("lift")),
       Some("""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
              |n AS (SELECT COUNT(DISTINCT l_orderkey) AS n_orders FROM items),
              |ic AS (SELECT l_partkey, COUNT(*) AS c FROM items GROUP BY 1),
@@ -1832,31 +1819,18 @@ object AnalyticsQueries {
     // not — "batteries ⇒ toys" and "toys ⇒ batteries" are different
     // business facts. Integer counts, one double division chain each.
     QueryDef("q197_association_rules",
-      (s, d) => {
-        val items = Tables.lineitem(s, d)
-          .select(col("l_orderkey"), col("l_partkey")).distinct()
-        val nOrders = items.select(col("l_orderkey")).distinct()
-          .agg(count(lit(1)).alias("__n"))
-        val itemCnt = items.groupBy(col("l_partkey"))
-          .agg(count(lit(1)).alias("__c"))
-        val pairs = orderPartPairs(items)
-        val rules = pairs
-          .select(col("pa").alias("antecedent"), col("pb").alias("consequent"),
-            col("pair_cnt"))
-          .unionByName(pairs.select(col("pb").alias("antecedent"),
-            col("pa").alias("consequent"), col("pair_cnt")))
-        rules
-          .join(broadcast(itemCnt.withColumnRenamed("l_partkey", "antecedent")
-            .withColumnRenamed("__c", "__ca")), Seq("antecedent"))
-          .join(broadcast(itemCnt.withColumnRenamed("l_partkey", "consequent")
-            .withColumnRenamed("__c", "__cc")), Seq("consequent"))
-          .crossJoin(broadcast(nOrders))
-          .select(col("antecedent"), col("consequent"), col("pair_cnt"),
-            round(col("pair_cnt").cast(DoubleType) / col("__ca"), 6)
-              .alias("confidence"),
-            round(col("pair_cnt").cast(DoubleType) * col("__n") /
-              (col("__ca") * col("__cc")), 6).alias("lift"))
-      },
+      (s, d) => basketCounts(s, d, "antecedent", "consequent") { pairs =>
+          pairs
+            .select(col("pa").alias("antecedent"), col("pb").alias("consequent"),
+              col("pair_cnt"))
+            .unionByName(pairs.select(col("pb").alias("antecedent"),
+              col("pa").alias("consequent"), col("pair_cnt")))
+        }
+        .select(col("antecedent"), col("consequent"), col("pair_cnt"),
+          round(col("pair_cnt").cast(DoubleType) / col("__ca"), 6)
+            .alias("confidence"),
+          round(col("pair_cnt").cast(DoubleType) * col("__n") /
+            (col("__ca") * col("__cb")), 6).alias("lift")),
       Some("""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
              |n AS (SELECT COUNT(DISTINCT l_orderkey) AS n_orders FROM items),
              |ic AS (SELECT l_partkey, COUNT(*) AS c FROM items GROUP BY 1),
@@ -1970,6 +1944,29 @@ object AnalyticsQueries {
       .groupBy(col("a.l_partkey").alias("pa"), col("b.l_partkey").alias("pb"))
       .agg(count(lit(1)).alias("pair_cnt"))
       .filter(col("pair_cnt") >= 3)
+
+  /** The shared q167/q197 basket stage: `pairs` turns [[orderPartPairs]]
+    * over the distinct (order, part) items into rows keyed `a` and `b`,
+    * which gain those parts' order counts `__ca` and `__cb` and the total
+    * order count `__n` (all three dimension-sized, broadcast).
+    */
+  private def basketCounts(s: org.apache.spark.sql.SparkSession, d: String,
+                           a: String, b: String)(
+      pairs: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val items = Tables.lineitem(s, d)
+      .select(col("l_orderkey"), col("l_partkey")).distinct()
+    val nOrders = items.select(col("l_orderkey")).distinct()
+      .agg(count(lit(1)).alias("__n"))
+    val itemCnt = items.groupBy(col("l_partkey"))
+      .agg(count(lit(1)).alias("__c"))
+    def counts(part: String, c: String) = broadcast(
+      itemCnt.withColumnRenamed("l_partkey", part).withColumnRenamed("__c", c))
+    pairs(orderPartPairs(items))
+      .join(counts(a, "__ca"), Seq(a))
+      .join(counts(b, "__cb"), Seq(b))
+      .crossJoin(broadcast(nOrders))
+  }
 
   /** Shared q186/q193 purchase-count vectors, materialized ONCE
     * (localCheckpoint): the frame feeds the norm aggregate, both sides

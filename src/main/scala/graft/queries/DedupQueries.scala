@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
 import graft.ops.Dedup
-import graft.functions.TextFunctions.normalizeTextSql
+import graft.functions.TextFunctions.{normalizeTextSql, tokensSql}
 
 /** Deduplication queries over `documents` / `embeddings`. The exact and
   * brute-force variants carry DuckDB oracles; the LSH variants (MinHash,
@@ -51,30 +51,104 @@ object DedupQueries {
       threshold = 0.9, shingleK = 1, bands = Q93Bands, rowsPerBand = Q93RowsPerBand,
       estMargin = 0.35)
 
-  /** q137's DuckDB oracle — shared verbatim by the SQL-surface twin
-    * (q151) so the Scala and SQL statements of substring dedup are gated
-    * against the same truth.
+  /** CTE `t` of the token-set Jaccard oracles: each document's distinct
+    * tokens as `toks`, `where` narrowing the documents.
     */
-  private lazy val substringSpansOracle: String =
-    s"""WITH t AS (SELECT doc_id, ${graft.functions.TextFunctions.tokensSql} AS tk
+  private def tokenSetsCte(where: String): String =
+    s"""t AS (
+       |  SELECT doc_id,
+       |         list_distinct($tokensSql) AS toks
+       |  FROM documents$where)""".stripMargin
+
+  /** Jaccard of the token lists `a` and `b` as a double. */
+  private def jaccardSql(a: String, b: String): String =
+    s"""CAST(len(list_intersect($a, $b)) AS DOUBLE) /
+       |        len(list_distinct(list_cat($a, $b)))""".stripMargin
+
+  /** [[jaccardSql]] at the 6 dp the Spark side rounds to. */
+  private def roundedJaccardSql(a: String, b: String): String =
+    s"round(${jaccardSql(a, b)}, 6)"
+
+  /** Pairs of `rel` rows joined `on` whose rounded Jaccard over list
+    * column `c` reaches `threshold`, with that Jaccard.
+    */
+  private def jaccardPairsSql(rel: String, c: String, threshold: String,
+                              ids: String = "a.doc_id AS id_a, b.doc_id AS id_b",
+                              on: String = "a.doc_id < b.doc_id"): String =
+    s"""SELECT $ids,
+       |  ${roundedJaccardSql(s"a.$c", s"b.$c")} AS jaccard
+       |FROM $rel a JOIN $rel b ON $on
+       |WHERE ${roundedJaccardSql(s"a.$c", s"b.$c")} >= $threshold""".stripMargin
+
+  /** Brute-force token-set Jaccard pairs among documents below `maxDoc`. */
+  private def tokenJaccardOracle(maxDoc: Int, threshold: String): String =
+    s"""WITH ${tokenSetsCte(s" WHERE doc_id < $maxDoc")}
+       |${jaccardPairsSql("t", "toks", threshold)}""".stripMargin
+
+  /** The exactness-grade pair set (docs < 500, Jaccard >= 0.9) that q49's
+    * LSH and q118's prefix join both provably equal.
+    */
+  private lazy val exactGradePairsOracle: String = tokenJaccardOracle(500, "0.9")
+
+  /** q69's and q135's chain through `cc`: the exactness-grade pair graph
+    * and its transitive closure (each id with every component label it
+    * reaches).
+    */
+  private lazy val nearDupClosureCtes: String =
+    s"""WITH RECURSIVE ${tokenSetsCte(" WHERE doc_id < 500")},
+       |pairs AS (
+       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
+       |  FROM t a JOIN t b ON a.doc_id < b.doc_id
+       |  WHERE ${roundedJaccardSql("a.toks", "b.toks")} >= 0.9),
+       |edges AS (
+       |  SELECT id_a AS src, id_b AS dst FROM pairs
+       |  UNION
+       |  SELECT id_b AS src, id_a AS dst FROM pairs),
+       |cc AS (
+       |  SELECT src AS id, src AS comp FROM edges
+       |  UNION
+       |  SELECT e.dst AS id, cc.comp FROM cc JOIN edges e ON cc.id = e.src)""".stripMargin
+
+  /** `sh`/`h` of the substring-span oracles: the grams held by more than
+    * one document (`having` adds to that rule) and their span postings.
+    */
+  private def sharedGramsSql(having: String): String =
+    s"""sh AS (SELECT gram FROM g GROUP BY gram HAVING min(doc_id) <> max(doc_id)$having),
+       |h AS (SELECT doc_id, pos, pos + 7 AS e FROM g
+       |      WHERE gram IN (SELECT gram FROM sh))""".stripMargin
+
+  /** The substring-span oracles' chain through `i`: string 8-gram
+    * postings `g` over the token stream `t`, the span postings `shared`
+    * states as `sh`/`h`, and their gaps-and-islands merge.
+    */
+  private def substringIslandCtes(shared: String): String =
+    s"""WITH t AS (SELECT doc_id, $tokensSql AS tk
        |          FROM documents),
        |p AS (SELECT doc_id, tk, unnest(range(len(tk) - 7)) AS pos FROM t),
        |g AS (SELECT doc_id, pos, concat_ws(' ', tk[pos+1], tk[pos+2], tk[pos+3],
        |        tk[pos+4], tk[pos+5], tk[pos+6], tk[pos+7], tk[pos+8]) AS gram
        |      FROM p),
-       |sh AS (SELECT gram FROM g GROUP BY gram HAVING min(doc_id) <> max(doc_id)),
-       |h AS (SELECT doc_id, pos, pos + 7 AS e FROM g
-       |      WHERE gram IN (SELECT gram FROM sh)),
+       |$shared,
        |m AS (SELECT doc_id, pos, e,
        |        CASE WHEN pos > coalesce(max(e) OVER (PARTITION BY doc_id ORDER BY pos
        |             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -2) + 1
        |             THEN 1 ELSE 0 END AS brk FROM h),
        |i AS (SELECT doc_id, pos, e,
-       |        sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS island FROM m)
+       |        sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS island FROM m)""".stripMargin
+
+  /** One row per merged span of [[substringIslandCtes]]. */
+  private def substringSpansSql(shared: String): String =
+    s"""${substringIslandCtes(shared)}
        |SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
        |  CAST(max(e) AS BIGINT) AS span_end,
        |  CAST(max(e) - min(pos) + 1 AS BIGINT) AS span_tokens
        |FROM i GROUP BY doc_id, island""".stripMargin
+
+  /** q137's DuckDB oracle — shared verbatim by the SQL-surface twin
+    * (q151) so the Scala and SQL statements of substring dedup are gated
+    * against the same truth.
+    */
+  private lazy val substringSpansOracle: String = substringSpansSql(sharedGramsSql(""))
 
   val all: Seq[QueryDef] = Seq(
 
@@ -89,16 +163,7 @@ object DedupQueries {
     QueryDef("q41_token_jaccard_pairs",
       (s, d) => Dedup.tokenJaccardPairs(
         Tables.documents(s, d).filter(col("doc_id") < 200), "doc_id", "text", 0.5),
-      Some("""WITH t AS (
-             |  SELECT doc_id,
-             |         list_distinct(regexp_split_to_array(trim(lower(text)), '\s+')) AS toks
-             |  FROM documents WHERE doc_id < 200)
-             |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             |  round(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-             |        len(list_distinct(list_cat(a.toks, b.toks))), 6) AS jaccard
-             |FROM t a JOIN t b ON a.doc_id < b.doc_id
-             |WHERE round(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-             |            len(list_distinct(list_cat(a.toks, b.toks))), 6) >= 0.5""".stripMargin)),
+      Some(tokenJaccardOracle(200, "0.5"))),
 
     // Word-3-gram Jaccard: order-sensitive near-dup similarity (the
     // "n-gram Jaccard" dedup mode), string shingles so DuckDB states the
@@ -108,21 +173,16 @@ object DedupQueries {
         Tables.documents(s, d)
           .filter(col("doc_id") < 300 || col("doc_id") % 17 === 0),
         "doc_id", "text", k = 3, threshold = 0.15),
-      Some("""WITH t AS (
-             |  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-             |  FROM documents WHERE doc_id < 300 OR doc_id % 17 = 0),
-             |s AS (
-             |  SELECT doc_id, list_distinct(
-             |    CASE WHEN len(toks) >= 3 THEN list_transform(range(len(toks) - 2),
-             |      i -> concat_ws(' ', toks[i+1], toks[i+2], toks[i+3]))
-             |    ELSE CAST([] AS VARCHAR[]) END) AS sh
-             |  FROM t)
-             |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             |  round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-             |        len(list_distinct(list_cat(a.sh, b.sh))), 6) AS jaccard
-             |FROM s a JOIN s b ON a.doc_id < b.doc_id
-             |WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-             |            len(list_distinct(list_cat(a.sh, b.sh))), 6) >= 0.15""".stripMargin)),
+      Some(s"""WITH t AS (
+              |  SELECT doc_id, $tokensSql AS toks
+              |  FROM documents WHERE doc_id < 300 OR doc_id % 17 = 0),
+              |s AS (
+              |  SELECT doc_id, list_distinct(
+              |    CASE WHEN len(toks) >= 3 THEN list_transform(range(len(toks) - 2),
+              |      i -> concat_ws(' ', toks[i+1], toks[i+2], toks[i+3]))
+              |    ELSE CAST([] AS VARCHAR[]) END) AS sh
+              |  FROM t)
+              |${jaccardPairsSql("s", "sh", "0.15")}""".stripMargin)),
 
     // MinHash-LSH tuned for EXACTNESS: with 1-gram shingles the verify
     // step computes the same token-set Jaccard as q41's brute force, and
@@ -136,16 +196,7 @@ object DedupQueries {
       (s, d) => Dedup.minHashNearDup(
         Tables.documents(s, d).filter(col("doc_id") < 500), "doc_id", "text",
         threshold = 0.9, shingleK = 1, bands = 16, rowsPerBand = 3, estMargin = 0.35),
-      Some("""WITH t AS (
-             |  SELECT doc_id,
-             |         list_distinct(regexp_split_to_array(trim(lower(text)), '\s+')) AS toks
-             |  FROM documents WHERE doc_id < 500)
-             |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             |  round(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-             |        len(list_distinct(list_cat(a.toks, b.toks))), 6) AS jaccard
-             |FROM t a JOIN t b ON a.doc_id < b.doc_id
-             |WHERE round(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-             |            len(list_distinct(list_cat(a.toks, b.toks))), 6) >= 0.9""".stripMargin)),
+      Some(exactGradePairsOracle)),
 
     // Incremental near-dup with the q49 exactness-grade layout: every
     // 25th doc plays the NEW batch, the rest are the indexed corpus, read
@@ -154,16 +205,10 @@ object DedupQueries {
     // the brute-force new×corpus pair set, which DuckDB states directly.
     QueryDef("q93_incremental_neardup",
       (s, d) => q93Probe(s, d),
-      Some("""WITH t AS (
-             |  SELECT doc_id,
-             |         list_distinct(regexp_split_to_array(trim(lower(text)), '\s+')) AS toks
-             |  FROM documents)
-             |SELECT a.doc_id AS new_id, b.doc_id AS corpus_id,
-             |  round(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-             |        len(list_distinct(list_cat(a.toks, b.toks))), 6) AS jaccard
-             |FROM t a JOIN t b ON a.doc_id % 25 = 0 AND b.doc_id % 25 <> 0
-             |WHERE round(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-             |            len(list_distinct(list_cat(a.toks, b.toks))), 6) >= 0.9""".stripMargin)),
+      Some(s"""WITH ${tokenSetsCte("")}
+              |${jaccardPairsSql("t", "toks", "0.9",
+                   ids = "a.doc_id AS new_id, b.doc_id AS corpus_id",
+                   on = "a.doc_id % 25 = 0 AND b.doc_id % 25 <> 0")}""".stripMargin)),
 
     // Benchmark decontamination: training docs surviving an exact-match
     // anti join against a (fixture-derived) eval set. The engine matches
@@ -189,16 +234,7 @@ object DedupQueries {
       (s, d) => Dedup.jaccardJoinPrefix(
         Tables.documents(s, d).filter(col("doc_id") < 500), "doc_id", "text",
         threshold = 0.9),
-      Some("""WITH t AS (
-             |  SELECT doc_id,
-             |         list_distinct(regexp_split_to_array(trim(lower(text)), '\s+')) AS toks
-             |  FROM documents WHERE doc_id < 500)
-             |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             |  round(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-             |        len(list_distinct(list_cat(a.toks, b.toks))), 6) AS jaccard
-             |FROM t a JOIN t b ON a.doc_id < b.doc_id
-             |WHERE round(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-             |            len(list_distinct(list_cat(a.toks, b.toks))), 6) >= 0.9""".stripMargin)),
+      Some(exactGradePairsOracle)),
 
     // N-gram-collision decontamination (GPT-3 style): any shared word
     // 5-gram with the eval set drops the training doc — catches partial
@@ -212,7 +248,7 @@ object DedupQueries {
             "doc_id", "text", n = 5)
           .select(col("doc_id"))
       },
-      Some(s"""WITH t AS (SELECT doc_id, ${graft.functions.TextFunctions.tokensSql} AS tk
+      Some(s"""WITH t AS (SELECT doc_id, $tokensSql AS tk
               |          FROM documents),
               |g AS (SELECT doc_id, unnest(list_transform(range(len(tk) - 4),
               |        i -> concat_ws(' ', tk[i+1], tk[i+2], tk[i+3], tk[i+4], tk[i+5])))
@@ -249,25 +285,9 @@ object DedupQueries {
       (s, d) => Dedup.resolveNearDupClustersExact(
         Tables.documents(s, d).filter(col("doc_id") < 500), "doc_id", "text",
         threshold = 0.9),
-      Some("""WITH RECURSIVE t AS (
-             |  SELECT doc_id,
-             |         list_distinct(regexp_split_to_array(trim(lower(text)), '\s+')) AS toks
-             |  FROM documents WHERE doc_id < 500),
-             |pairs AS (
-             |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-             |  FROM t a JOIN t b ON a.doc_id < b.doc_id
-             |  WHERE round(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-             |              len(list_distinct(list_cat(a.toks, b.toks))), 6) >= 0.9),
-             |edges AS (
-             |  SELECT id_a AS src, id_b AS dst FROM pairs
-             |  UNION
-             |  SELECT id_b AS src, id_a AS dst FROM pairs),
-             |cc AS (
-             |  SELECT src AS id, src AS comp FROM edges
-             |  UNION
-             |  SELECT e.dst AS id, cc.comp FROM cc JOIN edges e ON cc.id = e.src)
-             |SELECT id, min(comp) AS keeper, (id = min(comp)) AS is_keeper
-             |FROM cc GROUP BY id""".stripMargin)),
+      Some(s"""$nearDupClosureCtes
+              |SELECT id, min(comp) AS keeper, (id = min(comp)) AS is_keeper
+              |FROM cc GROUP BY id""".stripMargin)),
 
     // Leakage-safe train/val/test split: the md5 split draw keys on the
     // near-dup CLUSTER representative (q69's exactness-grade clustering),
@@ -283,23 +303,7 @@ object DedupQueries {
       Some {
         val t1 = graft.ops.Sampling.hexThreshold(0.8)
         val t2 = graft.ops.Sampling.hexThreshold(0.9)
-        s"""WITH RECURSIVE t AS (
-           |  SELECT doc_id,
-           |         list_distinct(regexp_split_to_array(trim(lower(text)), '\\s+')) AS toks
-           |  FROM documents WHERE doc_id < 500),
-           |pairs AS (
-           |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM t a JOIN t b ON a.doc_id < b.doc_id
-           |  WHERE round(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-           |              len(list_distinct(list_cat(a.toks, b.toks))), 6) >= 0.9),
-           |edges AS (
-           |  SELECT id_a AS src, id_b AS dst FROM pairs
-           |  UNION
-           |  SELECT id_b AS src, id_a AS dst FROM pairs),
-           |cc AS (
-           |  SELECT src AS id, src AS comp FROM edges
-           |  UNION
-           |  SELECT e.dst AS id, cc.comp FROM cc JOIN edges e ON cc.id = e.src),
+        s"""$nearDupClosureCtes,
            |lab AS (SELECT id, min(comp) AS keeper FROM cc GROUP BY id),
            |r AS (
            |  SELECT d.doc_id, coalesce(l.keeper, d.doc_id) AS rep
@@ -387,15 +391,11 @@ object DedupQueries {
             "doc_id", "text", threshold = 0.8)
           .select(col("doc_id"))
       },
-      Some("""WITH t AS (
-             |  SELECT doc_id,
-             |         list_distinct(regexp_split_to_array(trim(lower(text)), '\s+')) AS toks
-             |  FROM documents),
-             |ev AS (SELECT toks FROM t WHERE doc_id % 29 = 0)
-             |SELECT doc_id FROM t
-             |WHERE NOT EXISTS (SELECT 1 FROM ev
-             |  WHERE CAST(len(list_intersect(t.toks, ev.toks)) AS DOUBLE) /
-             |        len(list_distinct(list_cat(t.toks, ev.toks))) >= 0.8)""".stripMargin)),
+      Some(s"""WITH ${tokenSetsCte("")},
+              |ev AS (SELECT toks FROM t WHERE doc_id % 29 = 0)
+              |SELECT doc_id FROM t
+              |WHERE NOT EXISTS (SELECT 1 FROM ev
+              |  WHERE ${jaccardSql("t.toks", "ev.toks")} >= 0.8)""".stripMargin)),
 
     // Within-corpus exact substring dedup (Lee et al. ExactSubstr at
     // 8-token granularity): maximal token spans occurring verbatim in >1
@@ -455,21 +455,7 @@ object DedupQueries {
     QueryDef("q139_substring_dedup_clean",
       (s, d) => Dedup.exactSubstringDedup(Tables.documents(s, d),
         "doc_id", "text", k = 8),
-      Some(s"""WITH t AS (SELECT doc_id, ${graft.functions.TextFunctions.tokensSql} AS tk
-              |          FROM documents),
-              |p AS (SELECT doc_id, tk, unnest(range(len(tk) - 7)) AS pos FROM t),
-              |g AS (SELECT doc_id, pos, concat_ws(' ', tk[pos+1], tk[pos+2], tk[pos+3],
-              |        tk[pos+4], tk[pos+5], tk[pos+6], tk[pos+7], tk[pos+8]) AS gram
-              |      FROM p),
-              |sh AS (SELECT gram FROM g GROUP BY gram HAVING min(doc_id) <> max(doc_id)),
-              |h AS (SELECT doc_id, pos, pos + 7 AS e FROM g
-              |      WHERE gram IN (SELECT gram FROM sh)),
-              |m AS (SELECT doc_id, pos, e,
-              |        CASE WHEN pos > coalesce(max(e) OVER (PARTITION BY doc_id ORDER BY pos
-              |             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -2) + 1
-              |             THEN 1 ELSE 0 END AS brk FROM h),
-              |i AS (SELECT doc_id, pos, e,
-              |        sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS island FROM m),
+      Some(s"""${substringIslandCtes(sharedGramsSql(""))},
               |sp AS (SELECT doc_id, min(pos) AS s, max(e) AS e2
               |       FROM i GROUP BY doc_id, island),
               |spl AS (SELECT doc_id, list([s, e2]) AS spans,
@@ -494,27 +480,12 @@ object DedupQueries {
     QueryDef("q140_substring_dedup_keepfirst",
       (s, d) => Dedup.exactSubstringSpansKeep(Tables.documents(s, d),
         "doc_id", "text", k = 8, keepFirst = true),
-      Some(s"""WITH t AS (SELECT doc_id, ${graft.functions.TextFunctions.tokensSql} AS tk
-              |          FROM documents),
-              |p AS (SELECT doc_id, tk, unnest(range(len(tk) - 7)) AS pos FROM t),
-              |g AS (SELECT doc_id, pos, concat_ws(' ', tk[pos+1], tk[pos+2], tk[pos+3],
-              |        tk[pos+4], tk[pos+5], tk[pos+6], tk[pos+7], tk[pos+8]) AS gram
-              |      FROM p),
-              |sh AS (SELECT gram, min(doc_id) AS dmin FROM g
-              |       GROUP BY gram HAVING min(doc_id) <> max(doc_id)),
-              |h AS (SELECT g.doc_id, g.pos, g.pos + 7 AS e
-              |      FROM g JOIN sh ON g.gram = sh.gram
-              |      WHERE g.doc_id <> sh.dmin),
-              |m AS (SELECT doc_id, pos, e,
-              |        CASE WHEN pos > coalesce(max(e) OVER (PARTITION BY doc_id ORDER BY pos
-              |             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -2) + 1
-              |             THEN 1 ELSE 0 END AS brk FROM h),
-              |i AS (SELECT doc_id, pos, e,
-              |        sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS island FROM m)
-              |SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-              |  CAST(max(e) AS BIGINT) AS span_end,
-              |  CAST(max(e) - min(pos) + 1 AS BIGINT) AS span_tokens
-              |FROM i GROUP BY doc_id, island""".stripMargin)),
+      Some(substringSpansSql(
+        """sh AS (SELECT gram, min(doc_id) AS dmin FROM g
+          |       GROUP BY gram HAVING min(doc_id) <> max(doc_id)),
+          |h AS (SELECT g.doc_id, g.pos, g.pos + 7 AS e
+          |      FROM g JOIN sh ON g.gram = sh.gram
+          |      WHERE g.doc_id <> sh.dmin)""".stripMargin))),
 
     // The boilerplate-guard knob under oracle: grams above the doc-freq
     // cap are excluded from span detection (the documented under-dedup
@@ -524,26 +495,7 @@ object DedupQueries {
     QueryDef("q141_substring_dedup_dfcap",
       (s, d) => Dedup.exactSubstringSpans(Tables.documents(s, d),
         "doc_id", "text", k = 8, maxGramDocFreq = Some(3)),
-      Some(s"""WITH t AS (SELECT doc_id, ${graft.functions.TextFunctions.tokensSql} AS tk
-              |          FROM documents),
-              |p AS (SELECT doc_id, tk, unnest(range(len(tk) - 7)) AS pos FROM t),
-              |g AS (SELECT doc_id, pos, concat_ws(' ', tk[pos+1], tk[pos+2], tk[pos+3],
-              |        tk[pos+4], tk[pos+5], tk[pos+6], tk[pos+7], tk[pos+8]) AS gram
-              |      FROM p),
-              |sh AS (SELECT gram FROM g GROUP BY gram
-              |       HAVING min(doc_id) <> max(doc_id) AND count(DISTINCT doc_id) <= 3),
-              |h AS (SELECT doc_id, pos, pos + 7 AS e FROM g
-              |      WHERE gram IN (SELECT gram FROM sh)),
-              |m AS (SELECT doc_id, pos, e,
-              |        CASE WHEN pos > coalesce(max(e) OVER (PARTITION BY doc_id ORDER BY pos
-              |             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -2) + 1
-              |             THEN 1 ELSE 0 END AS brk FROM h),
-              |i AS (SELECT doc_id, pos, e,
-              |        sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS island FROM m)
-              |SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-              |  CAST(max(e) AS BIGINT) AS span_end,
-              |  CAST(max(e) - min(pos) + 1 AS BIGINT) AS span_tokens
-              |FROM i GROUP BY doc_id, island""".stripMargin)),
+      Some(substringSpansSql(sharedGramsSql(" AND count(DISTINCT doc_id) <= 3")))),
 
     // Contamination AUDIT report: the drop-based decontamination ops
     // (q68/q70/q77/q110) silently remove; this emits WHICH (train, eval)
@@ -558,7 +510,7 @@ object DedupQueries {
           docs.filter(col("doc_id") % 31 === 0),
           "doc_id", "text", n = 5)
       },
-      Some(s"""WITH t AS (SELECT doc_id, ${graft.functions.TextFunctions.tokensSql} AS tk
+      Some(s"""WITH t AS (SELECT doc_id, $tokensSql AS tk
               |          FROM documents),
               |g AS (SELECT DISTINCT doc_id, unnest(list_transform(range(len(tk) - 4),
               |        i -> concat_ws(' ', tk[i+1], tk[i+2], tk[i+3], tk[i+4], tk[i+5])))
@@ -580,7 +532,7 @@ object DedupQueries {
     QueryDef("q219_line_dedup",
       (s, d) => graft.ops.Dedup.dedupLinesKeepFirst(
         Tables.documents(s, d), "doc_id", "text", lineTokens = 8),
-      Some(s"""WITH t AS (SELECT doc_id, ${graft.functions.TextFunctions.tokensSql} AS tk
+      Some(s"""WITH t AS (SELECT doc_id, $tokensSql AS tk
               |          FROM documents),
               |n AS (SELECT doc_id, tk,
               |        CAST(ceil(len(tk) / 8.0) AS BIGINT) AS nl FROM t),

@@ -207,53 +207,17 @@ object EventQueries {
     // Counts zero-fill; sums stay NULL on synthesized rows (SQL's sum of
     // an empty set), which q147's LOCF then carries forward.
     QueryDef("q146_gapfill_hourly",
-      (s, d) => TimeSeries.gapFillTumbling(Tables.events(s, d), "ts", "hour",
-        Seq("event_type"),
-        Seq(count(lit(1)).alias("n_events"),
-          Aggregations.exactSum(col("value")).alias("total_value")),
-        fillZero = Seq("n_events")),
-      Some(s"""WITH $evCte,
-              |a AS (SELECT date_trunc('hour', ts) AS window_start, event_type,
-              |        COUNT(*) AS n_events, ${exactSumSql("value")} AS total_value
-              |      FROM ev GROUP BY 1, 2),
-              |b AS (SELECT min(window_start) AS lo, max(window_start) AS hi FROM a),
-              |g AS (SELECT DISTINCT event_type FROM a),
-              |spine AS (SELECT s.window_start, g.event_type
-              |          FROM (SELECT unnest(generate_series(lo, hi, INTERVAL '1 hour'))
-              |                  AS window_start FROM b) s CROSS JOIN g)
-              |SELECT spine.window_start, spine.event_type,
-              |  coalesce(a.n_events, 0) AS n_events, a.total_value
-              |FROM spine LEFT JOIN a USING (window_start, event_type)""".stripMargin)),
+      (s, d) => gapFilled(s, d),
+      Some(s"""$spineCtes
+              |$gapFillSql""".stripMargin)),
 
     // LOCF over the gap-filled series: synthesized buckets inherit the
     // most recent observed hourly total per event type (nulls before the
     // first observation stay null — nothing to carry).
     QueryDef("q147_locf_hourly",
-      (s, d) => TimeSeries.locf(
-        TimeSeries.gapFillTumbling(Tables.events(s, d), "ts", "hour",
-          Seq("event_type"),
-          Seq(count(lit(1)).alias("n_events"),
-            Aggregations.exactSum(col("value")).alias("total_value")),
-          fillZero = Seq("n_events")),
-        Seq("event_type"), "window_start", "total_value", "total_value_filled"),
-      Some(s"""WITH $evCte,
-              |a AS (SELECT date_trunc('hour', ts) AS window_start, event_type,
-              |        COUNT(*) AS n_events, ${exactSumSql("value")} AS total_value
-              |      FROM ev GROUP BY 1, 2),
-              |b AS (SELECT min(window_start) AS lo, max(window_start) AS hi FROM a),
-              |g AS (SELECT DISTINCT event_type FROM a),
-              |spine AS (SELECT s.window_start, g.event_type
-              |          FROM (SELECT unnest(generate_series(lo, hi, INTERVAL '1 hour'))
-              |                  AS window_start FROM b) s CROSS JOIN g),
-              |f AS (SELECT spine.window_start, spine.event_type,
-              |        coalesce(a.n_events, 0) AS n_events, a.total_value
-              |      FROM spine LEFT JOIN a USING (window_start, event_type))
-              |SELECT window_start, event_type, n_events, total_value,
-              |  last_value(total_value IGNORE NULLS) OVER (
-              |    PARTITION BY event_type ORDER BY window_start
-              |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              |    AS total_value_filled
-              |FROM f""".stripMargin)),
+      (s, d) => locfFilled(s, d),
+      Some(s"""$gapFillCtes
+              |$locfSql""".stripMargin)),
 
     // Linear interpolation over the gap-filled series: nulls between two
     // observed buckets take the time-weighted blend of their neighbors;
@@ -261,29 +225,11 @@ object EventQueries {
     // arithmetic is ONE divide/multiply/add chain stated identically in
     // both engines over exact integer microsecond deltas, rounded at 9dp.
     QueryDef("q148_interpolate_hourly",
-      (s, d) => {
-        val filled = TimeSeries.gapFillTumbling(Tables.events(s, d), "ts", "hour",
-          Seq("event_type"),
-          Seq(count(lit(1)).alias("n_events"),
-            Aggregations.exactSum(col("value")).alias("total_value")),
-          fillZero = Seq("n_events"))
-        TimeSeries.interpolateLinear(filled, Seq("event_type"),
-            "window_start", "total_value", "total_value_interp")
-          .select(col("window_start"), col("event_type"), col("n_events"),
-            round(col("total_value_interp"), 9).alias("total_value_interp"))
-      },
-      Some(s"""WITH $evCte,
-              |a AS (SELECT date_trunc('hour', ts) AS window_start, event_type,
-              |        COUNT(*) AS n_events, ${exactSumSql("value")} AS total_value
-              |      FROM ev GROUP BY 1, 2),
-              |b AS (SELECT min(window_start) AS lo, max(window_start) AS hi FROM a),
-              |g AS (SELECT DISTINCT event_type FROM a),
-              |spine AS (SELECT s.window_start, g.event_type
-              |          FROM (SELECT unnest(generate_series(lo, hi, INTERVAL '1 hour'))
-              |                  AS window_start FROM b) s CROSS JOIN g),
-              |f AS (SELECT spine.window_start, spine.event_type,
-              |        coalesce(a.n_events, 0) AS n_events, a.total_value
-              |      FROM spine LEFT JOIN a USING (window_start, event_type)),
+      (s, d) => TimeSeries.interpolateLinear(gapFilled(s, d), Seq("event_type"),
+          "window_start", "total_value", "total_value_interp")
+        .select(col("window_start"), col("event_type"), col("n_events"),
+          round(col("total_value_interp"), 9).alias("total_value_interp")),
+      Some(s"""$gapFillCtes,
               |w AS (SELECT window_start, event_type, n_events, total_value,
               |        last_value(CASE WHEN total_value IS NOT NULL
               |            THEN {'t': window_start, 'v': total_value} END IGNORE NULLS)
@@ -1007,17 +953,22 @@ object EventQueries {
        |  FROM g
        |  WINDOW wr AS (PARTITION BY user_id ORDER BY run0))""".stripMargin
 
+  /** q146's gap-filled hourly series, the input of q147-q148's fills. */
+  private def gapFilled(s: org.apache.spark.sql.SparkSession, d: String) =
+    TimeSeries.gapFillTumbling(Tables.events(s, d), "ts", "hour",
+      Seq("event_type"),
+      Seq(count(lit(1)).alias("n_events"),
+        Aggregations.exactSum(col("value")).alias("total_value")),
+      fillZero = Seq("n_events"))
+
   private def locfFilled(s: org.apache.spark.sql.SparkSession, d: String) =
-    TimeSeries.locf(
-      TimeSeries.gapFillTumbling(Tables.events(s, d), "ts", "hour",
-        Seq("event_type"),
-        Seq(count(lit(1)).alias("n_events"),
-          Aggregations.exactSum(col("value")).alias("total_value")),
-        fillZero = Seq("n_events")),
+    TimeSeries.locf(gapFilled(s, d),
       Seq("event_type"), "window_start", "total_value", "total_value_filled")
 
-  /** Shared oracle CTE chain through the LOCF frame `l`. */
-  private lazy val locfCtes: String =
+  /** Shared oracle CTE chain through the dense per-type hourly `spine`
+    * (with the observed aggregate `a` it is joined to).
+    */
+  private lazy val spineCtes: String =
     s"""WITH $evCte,
        |a AS (SELECT date_trunc('hour', ts) AS window_start, event_type,
        |        COUNT(*) AS n_events, ${exactSumSql("value")} AS total_value
@@ -1026,14 +977,28 @@ object EventQueries {
        |g AS (SELECT DISTINCT event_type FROM a),
        |spine AS (SELECT s.window_start, g.event_type
        |          FROM (SELECT unnest(generate_series(lo, hi, INTERVAL '1 hour'))
-       |                  AS window_start FROM b) s CROSS JOIN g),
-       |f AS (SELECT spine.window_start, spine.event_type,
-       |        coalesce(a.n_events, 0) AS n_events, a.total_value
-       |      FROM spine LEFT JOIN a USING (window_start, event_type)),
-       |l AS (SELECT window_start, event_type, n_events, total_value,
-       |        last_value(total_value IGNORE NULLS) OVER (
-       |          PARTITION BY event_type ORDER BY window_start
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-       |          AS total_value_filled
-       |      FROM f)""".stripMargin
+       |                  AS window_start FROM b) s CROSS JOIN g)""".stripMargin
+
+  /** The gap-filled series over [[spineCtes]]: zero-filled counts, sums
+    * NULL on synthesized buckets.
+    */
+  private lazy val gapFillSql: String =
+    """SELECT spine.window_start, spine.event_type,
+      |  coalesce(a.n_events, 0) AS n_events, a.total_value
+      |FROM spine LEFT JOIN a USING (window_start, event_type)""".stripMargin
+
+  /** LOCF of the gap-filled frame `f`'s hourly totals. */
+  private lazy val locfSql: String =
+    """SELECT window_start, event_type, n_events, total_value,
+      |  last_value(total_value IGNORE NULLS) OVER (
+      |    PARTITION BY event_type ORDER BY window_start
+      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+      |    AS total_value_filled
+      |FROM f""".stripMargin
+
+  /** Shared oracle CTE chain through the gap-filled frame `f`. */
+  private lazy val gapFillCtes: String = s"$spineCtes,\nf AS ($gapFillSql)"
+
+  /** Shared oracle CTE chain through the LOCF frame `l`. */
+  private lazy val locfCtes: String = s"$gapFillCtes,\nl AS ($locfSql)"
 }

@@ -705,23 +705,9 @@ object MiscQueries {
     QueryDef("q157_merge_upsert",
       (s, d) => {
         val cust = Tables.customer(s, d)
-        val updates = cust.filter(col("c_custkey") % 7 === 3)
-          .withColumn("c_acctbal", col("c_acctbal") + 100.0)
-        val inserts = cust.filter(col("c_custkey") % 97 === 0)
-          .select((col("c_custkey") + 1000000L).alias("c_custkey"), col("c_name"),
-            col("c_nationkey"), lit(0.0).alias("c_acctbal"),
-            lit("NEW").alias("c_mktsegment"))
-        graft.ops.Joins.upsertWithAction(
-          cust, updates.unionByName(inserts), Seq("c_custkey"))
+        graft.ops.Joins.upsertWithAction(cust, customerChangeBatch(cust), Seq("c_custkey"))
       },
-      Some("""WITH batch AS (
-             |  SELECT c_custkey, c_name, c_nationkey,
-             |         c_acctbal + 100.0 AS c_acctbal, c_mktsegment
-             |  FROM customer WHERE c_custkey % 7 = 3
-             |  UNION ALL
-             |  SELECT c_custkey + 1000000, c_name, c_nationkey,
-             |         CAST(0.0 AS DOUBLE), 'NEW'
-             |  FROM customer WHERE c_custkey % 97 = 0)
+      Some(s"""WITH $customerChangeBatchSql
              |SELECT t.c_custkey, t.c_name, t.c_nationkey, t.c_acctbal,
              |       t.c_mktsegment, 'kept' AS action
              |FROM customer t
@@ -1268,19 +1254,26 @@ object MiscQueries {
     */
   private def mergedCustomer(s: org.apache.spark.sql.SparkSession, d: String) = {
     val cust = Tables.customer(s, d)
+    graft.ops.Joins.upsert(cust, customerChangeBatch(cust), Seq("c_custkey"))
+  }
+
+  /** q157's change batch over the customer dimension: updates =
+    * custkey%7=3 with +100 balance; inserts = shifted new keys.
+    */
+  private def customerChangeBatch(cust: org.apache.spark.sql.DataFrame) = {
     val updates = cust.filter(col("c_custkey") % 7 === 3)
       .withColumn("c_acctbal", col("c_acctbal") + 100.0)
     val inserts = cust.filter(col("c_custkey") % 97 === 0)
       .select((col("c_custkey") + 1000000L).alias("c_custkey"), col("c_name"),
         col("c_nationkey"), lit(0.0).alias("c_acctbal"),
         lit("NEW").alias("c_mktsegment"))
-    graft.ops.Joins.upsert(cust, updates.unionByName(inserts), Seq("c_custkey"))
+    updates.unionByName(inserts)
   }
 
-  // def, not val: `all` above initializes first and would interpolate a
+  // defs, not vals: `all` above initializes first and would interpolate a
   // null val (object-init order)
-  /** Shared oracle CTEs: the q157 change batch and the merged snapshot. */
-  private def mergedCustomerSql =
+  /** Oracle CTE `batch`: [[customerChangeBatch]]. */
+  private def customerChangeBatchSql =
     """batch AS (
       |  SELECT c_custkey, c_name, c_nationkey,
       |         c_acctbal + 100.0 AS c_acctbal, c_mktsegment
@@ -1288,7 +1281,11 @@ object MiscQueries {
       |  UNION ALL
       |  SELECT c_custkey + 1000000, c_name, c_nationkey,
       |         CAST(0.0 AS DOUBLE), 'NEW'
-      |  FROM customer WHERE c_custkey % 97 = 0),
+      |  FROM customer WHERE c_custkey % 97 = 0)""".stripMargin
+
+  /** Shared oracle CTEs: the q157 change batch and the merged snapshot. */
+  private def mergedCustomerSql =
+    s"""$customerChangeBatchSql,
       |new_snap AS (
       |  SELECT t.c_custkey, t.c_name, t.c_nationkey, t.c_acctbal, t.c_mktsegment
       |  FROM customer t

@@ -29,6 +29,48 @@ object SimilarityQueries {
        |FROM scored
        |QUALIFY rank <= $K""".stripMargin
 
+  /** The MMR oracles' greedy selection over the scored candidates `sc0`
+    * (`query_id, nid, vec, cos_raw`): the top-`topN` candidates `cand`,
+    * then four unrolled λ = 1/2 rounds `pick_1`..`pick_4` (each score
+    * floor-quantized at 6 dp before the argmax, ties to the lowest id) and
+    * the running selections `sel_r`.
+    */
+  private def mmrPicksCtes(topN: Int): String = {
+    val lam = "CAST(0.5 AS DOUBLE)"
+    def round(r: Int): String =
+      s"""ms_$r AS (
+         |  SELECT cd.query_id, cd.nid, max(cd.rel) AS rel,
+         |    max(${VectorFunctions.cosineSql("cd.vec", "sl.vec")}) AS maxsim
+         |  FROM cand cd JOIN sel_${r - 1} sl USING (query_id)
+         |  WHERE NOT EXISTS (SELECT 1 FROM sel_${r - 1} x
+         |    WHERE x.query_id = cd.query_id AND x.nid = cd.nid)
+         |  GROUP BY cd.query_id, cd.nid),
+         |pick_$r AS MATERIALIZED (
+         |  SELECT m.query_id, m.nid, cd2.vec,
+         |    floor(($lam * m.rel - $lam * m.maxsim) * 1e6 + 0.5) / 1e6 AS s
+         |  FROM ms_$r m JOIN cand cd2
+         |    ON cd2.query_id = m.query_id AND cd2.nid = m.nid
+         |  QUALIFY ROW_NUMBER() OVER (PARTITION BY m.query_id
+         |    ORDER BY s DESC, m.nid ASC) = 1),
+         |sel_$r AS MATERIALIZED (
+         |  SELECT query_id, nid, vec FROM sel_${r - 1}
+         |  UNION ALL SELECT query_id, nid, vec FROM pick_$r)""".stripMargin
+    s"""cand AS MATERIALIZED (
+       |  SELECT query_id, nid, vec, round(cos_raw, 6) AS rel,
+       |    ROW_NUMBER() OVER (PARTITION BY query_id
+       |      ORDER BY cos_raw DESC, nid ASC) AS rnk
+       |  FROM sc0 WHERE cos_raw IS NOT NULL
+       |  QUALIFY rnk <= $topN),
+       |pick_1 AS MATERIALIZED (
+       |  SELECT query_id, nid, vec,
+       |    floor($lam * rel * 1e6 + 0.5) / 1e6 AS s
+       |  FROM cand WHERE rnk = 1),
+       |sel_1 AS MATERIALIZED (SELECT query_id, nid, vec FROM pick_1),
+       |${round(2)},
+       |${round(3)},
+       |${round(4)}""".stripMargin
+  }
+
   val all: Seq[QueryDef] = Seq(
 
     // Array higher-order-function parity over the float embedding
@@ -601,25 +643,6 @@ object SimilarityQueries {
           "vec_id", "embedding", k = 4, topN = 10, lambda = 0.5)
       },
       Some {
-        val lam = "CAST(0.5 AS DOUBLE)"
-        def round(r: Int): String =
-          s"""ms_$r AS (
-             |  SELECT cd.query_id, cd.nid, max(cd.rel) AS rel,
-             |    max(${VectorFunctions.cosineSql("cd.vec", "sl.vec")}) AS maxsim
-             |  FROM cand cd JOIN sel_${r - 1} sl USING (query_id)
-             |  WHERE NOT EXISTS (SELECT 1 FROM sel_${r - 1} x
-             |    WHERE x.query_id = cd.query_id AND x.nid = cd.nid)
-             |  GROUP BY cd.query_id, cd.nid),
-             |pick_$r AS MATERIALIZED (
-             |  SELECT m.query_id, m.nid, cd2.vec,
-             |    floor(($lam * m.rel - $lam * m.maxsim) * 1e6 + 0.5) / 1e6 AS s
-             |  FROM ms_$r m JOIN cand cd2
-             |    ON cd2.query_id = m.query_id AND cd2.nid = m.nid
-             |  QUALIFY ROW_NUMBER() OVER (PARTITION BY m.query_id
-             |    ORDER BY s DESC, m.nid ASC) = 1),
-             |sel_$r AS MATERIALIZED (
-             |  SELECT query_id, nid, vec FROM sel_${r - 1}
-             |  UNION ALL SELECT query_id, nid, vec FROM pick_$r)""".stripMargin
         s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv
            |           FROM embeddings WHERE vec_id < $NQ),
            |c AS (SELECT vec_id AS nid, embedding AS cv
@@ -627,20 +650,7 @@ object SimilarityQueries {
            |sc0 AS (SELECT q.query_id, c.nid, c.cv AS vec,
            |          ${VectorFunctions.cosineSql("qv", "cv")} AS cos_raw
            |        FROM c CROSS JOIN q),
-           |cand AS MATERIALIZED (
-           |  SELECT query_id, nid, vec, round(cos_raw, 6) AS rel,
-           |    ROW_NUMBER() OVER (PARTITION BY query_id
-           |      ORDER BY cos_raw DESC, nid ASC) AS rnk
-           |  FROM sc0 WHERE cos_raw IS NOT NULL
-           |  QUALIFY rnk <= 10),
-           |pick_1 AS MATERIALIZED (
-           |  SELECT query_id, nid, vec,
-           |    floor($lam * rel * 1e6 + 0.5) / 1e6 AS s
-           |  FROM cand WHERE rnk = 1),
-           |sel_1 AS MATERIALIZED (SELECT query_id, nid, vec FROM pick_1),
-           |${round(2)},
-           |${round(3)},
-           |${round(4)}
+           |${mmrPicksCtes(10)}
            |SELECT query_id, CAST(1 AS BIGINT) AS mmr_rank,
            |  nid AS selected_id, s AS mmr_score FROM pick_1
            |UNION ALL SELECT query_id, CAST(2 AS BIGINT), nid, s FROM pick_2
@@ -765,25 +775,6 @@ object SimilarityQueries {
             col("mmr_rank").alias("rank")), k = 4)
       },
       Some {
-        val lam = "CAST(0.5 AS DOUBLE)"
-        def round(r: Int): String =
-          s"""ms_$r AS (
-             |  SELECT cd.query_id, cd.nid, max(cd.rel) AS rel,
-             |    max(${VectorFunctions.cosineSql("cd.vec", "sl.vec")}) AS maxsim
-             |  FROM cand cd JOIN sel_${r - 1} sl USING (query_id)
-             |  WHERE NOT EXISTS (SELECT 1 FROM sel_${r - 1} x
-             |    WHERE x.query_id = cd.query_id AND x.nid = cd.nid)
-             |  GROUP BY cd.query_id, cd.nid),
-             |pick_$r AS MATERIALIZED (
-             |  SELECT m.query_id, m.nid, cd2.vec,
-             |    floor(($lam * m.rel - $lam * m.maxsim) * 1e6 + 0.5) / 1e6 AS s
-             |  FROM ms_$r m JOIN cand cd2
-             |    ON cd2.query_id = m.query_id AND cd2.nid = m.nid
-             |  QUALIFY ROW_NUMBER() OVER (PARTITION BY m.query_id
-             |    ORDER BY s DESC, m.nid ASC) = 1),
-             |sel_$r AS MATERIALIZED (
-             |  SELECT query_id, nid, vec FROM sel_${r - 1}
-             |  UNION ALL SELECT query_id, nid, vec FROM pick_$r)""".stripMargin
         s"""WITH qs AS (SELECT vec_id AS query_id, embedding AS qv
            |            FROM embeddings WHERE vec_id < $NQ),
            |cs AS (SELECT vec_id AS neighbor_id, embedding AS cv
@@ -812,20 +803,7 @@ object SimilarityQueries {
            |sc0 AS (SELECT p.query_id, a.neighbor_id AS nid, a.cv AS vec,
            |    ${VectorFunctions.cosineSql("p.qv", "a.cv")} AS cos_raw
            |  FROM ca a JOIN pq p ON a.cell = p.cell),
-           |cand AS MATERIALIZED (
-           |  SELECT query_id, nid, vec, round(cos_raw, 6) AS rel,
-           |    ROW_NUMBER() OVER (PARTITION BY query_id
-           |      ORDER BY cos_raw DESC, nid ASC) AS rnk
-           |  FROM sc0 WHERE cos_raw IS NOT NULL
-           |  QUALIFY rnk <= 8),
-           |pick_1 AS MATERIALIZED (
-           |  SELECT query_id, nid, vec,
-           |    floor($lam * rel * 1e6 + 0.5) / 1e6 AS s
-           |  FROM cand WHERE rnk = 1),
-           |sel_1 AS MATERIALIZED (SELECT query_id, nid, vec FROM pick_1),
-           |${round(2)},
-           |${round(3)},
-           |${round(4)},
+           |${mmrPicksCtes(8)},
            |truth AS MATERIALIZED (
            |  SELECT query_id, neighbor_id AS nid,
            |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY

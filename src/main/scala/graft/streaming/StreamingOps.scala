@@ -131,43 +131,13 @@ object StreamingOps {
                     bands: Int = 16, rowsPerBand: Int = 3,
                     estMargin: Double = 0.35): Unit = {
     import graft.ops.Dedup
-    val q = spark.readStream.schema(schema).parquet(srcDir)
-      .writeStream.foreachBatch { (batch0: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val batch = batch0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val withinDrops = Dedup.minHashNearDup(batch, idCol, textCol,
-              threshold, shingleK, bands, rowsPerBand, estMargin)
-            .select(col("id_b").alias("__drop")).distinct()
-          val keptWithin = batch.join(withinDrops,
-            col(idCol) === col("__drop"), "left_anti")
-          val indexExists = {
-            val dir = new java.io.File(indexDir)
-            dir.isDirectory && dir.listFiles != null &&
-              dir.listFiles.exists(f => f.getName.startsWith("batch="))
-          }
-          val survivors =
-            if (!indexExists) keptWithin
-            else {
-              val corpusSig = Tables.parquet(spark, indexDir)
-              val vsIndex = Dedup.minHashNearDupAgainst(corpusSig, keptWithin,
-                  idCol, textCol, threshold, shingleK, bands, rowsPerBand, estMargin)
-                .select(col("new_id").alias("__drop")).distinct()
-              keptWithin.join(vsIndex, col(idCol) === col("__drop"), "left_anti")
-            }
-          // dynamic partition overwrite (GraftSession default) keyed on the
-          // micro-batch id: replays rewrite their own partition, idempotent
-          survivors.withColumn("batch", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch").parquet(destDir)
-          Dedup.minHashSignatures(survivors, idCol, textCol,
-              shingleK, bands * rowsPerBand)
-            .withColumn("batch", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch").parquet(indexDir)
-        } finally { batch.unpersist(false); () }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    nearDupIngestLoop(spark, srcDir, destDir, checkpointDir, indexDir, schema, idCol)(
+      batch => Dedup.minHashNearDup(batch, idCol, textCol,
+        threshold, shingleK, bands, rowsPerBand, estMargin),
+      (corpusSig, kept) => Dedup.minHashNearDupAgainst(corpusSig, kept,
+        idCol, textCol, threshold, shingleK, bands, rowsPerBand, estMargin),
+      survivors => Dedup.minHashSignatures(survivors, idCol, textCol,
+        shingleK, bands * rowsPerBand))
   }
 
   /** Embedding-modality twin of [[nearDupIngest]]: streaming ingestion of
@@ -190,15 +160,37 @@ object StreamingOps {
                              planes: Int = 0, bands: Int = 1,
                              prefilterBits: Int = 512): Unit = {
     import graft.ops.Dedup
+    nearDupIngestLoop(spark, srcDir, destDir, checkpointDir, indexDir, schema, idCol)(
+      batch => Dedup.embeddingNearDup(batch, idCol, vecCol,
+        threshold, dim, planes, bands, prefilterBits),
+      (index, kept) => Dedup.embeddingNearDupAgainst(index, kept, idCol, vecCol,
+        threshold, dim, planes, bands, prefilterBits),
+      survivors => Dedup.embeddingIndex(survivors, idCol, vecCol, dim, prefilterBits))
+  }
+
+  /** The micro-batch loop of [[nearDupIngest]] and
+    * [[embeddingNearDupIngest]]. Each batch is persisted; the ids `within`
+    * pairs as `id_b` (the batch's near-dup pairs) drop; once `indexDir`
+    * holds a `batch=` partition, the ids `against` pairs as `new_id` (the
+    * survivors probed against the persisted index) drop too; the
+    * survivors and their `indexRows` land as batch-id dynamic-overwrite
+    * partitions of `destDir` and `indexDir`.
+    */
+  private def nearDupIngestLoop(spark: SparkSession, srcDir: String,
+                                destDir: String, checkpointDir: String,
+                                indexDir: String, schema: StructType,
+                                idCol: String)(
+      within: DataFrame => DataFrame,
+      against: (DataFrame, DataFrame) => DataFrame,
+      indexRows: DataFrame => DataFrame): Unit = {
+    def dropPaired(rows: DataFrame, pairs: DataFrame, pairCol: String) =
+      rows.join(pairs.select(col(pairCol).alias("__drop")).distinct(),
+        col(idCol) === col("__drop"), "left_anti")
     val q = spark.readStream.schema(schema).parquet(srcDir)
       .writeStream.foreachBatch { (batch0: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val batch = batch0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val withinDrops = Dedup.embeddingNearDup(batch, idCol, vecCol,
-              threshold, dim, planes, bands, prefilterBits)
-            .select(col("id_b").alias("__drop")).distinct()
-          val keptWithin = batch.join(withinDrops,
-            col(idCol) === col("__drop"), "left_anti")
+          val keptWithin = dropPaired(batch, within(batch), "id_b")
           val indexExists = {
             val dir = new java.io.File(indexDir)
             dir.isDirectory && dir.listFiles != null &&
@@ -206,16 +198,13 @@ object StreamingOps {
           }
           val survivors =
             if (!indexExists) keptWithin
-            else {
-              val vsIndex = Dedup.embeddingNearDupAgainst(
-                  Tables.parquet(spark, indexDir), keptWithin, idCol, vecCol,
-                  threshold, dim, planes, bands, prefilterBits)
-                .select(col("new_id").alias("__drop")).distinct()
-              keptWithin.join(vsIndex, col(idCol) === col("__drop"), "left_anti")
-            }
+            else dropPaired(keptWithin,
+              against(Tables.parquet(spark, indexDir), keptWithin), "new_id")
+          // dynamic partition overwrite (GraftSession default) keyed on the
+          // micro-batch id: replays rewrite their own partition, idempotent
           survivors.withColumn("batch", lit(batchId))
             .write.mode("overwrite").partitionBy("batch").parquet(destDir)
-          Dedup.embeddingIndex(survivors, idCol, vecCol, dim, prefilterBits)
+          indexRows(survivors)
             .withColumn("batch", lit(batchId))
             .write.mode("overwrite").partitionBy("batch").parquet(indexDir)
         } finally { batch.unpersist(false); () }
@@ -493,20 +482,8 @@ object StreamingOps {
     */
   def attributionJoin(clicks: DataFrame, signups: DataFrame,
                       maxDelay: String = "1 hour",
-                      watermark: String = "1 hour"): DataFrame = {
-    val c = clicks.select(col("event_id").alias("click_id"),
-      col("user_id"), col("ts").alias("click_ts"))
-      .withWatermark("click_ts", watermark)
-    val s = signups.select(col("event_id").alias("signup_id"),
-      col("user_id").alias("s_user_id"), col("ts").alias("signup_ts"))
-      .withWatermark("signup_ts", watermark)
-    c.join(s,
-      col("user_id") === col("s_user_id") &&
-        col("signup_ts") <= col("click_ts") &&
-        col("signup_ts") >= col("click_ts") - expr(s"INTERVAL $maxDelay"))
-      .select(col("click_id"), col("user_id"), col("click_ts"),
-        col("signup_id"), col("signup_ts"))
-  }
+                      watermark: String = "1 hour"): DataFrame =
+    attributionJoinAs(clicks, signups, maxDelay, watermark, "inner")
 
   /** LEFT-OUTER variant of [[attributionJoin]]: every click surfaces —
     * matched clicks immediately, never-matched clicks as a null-padded
@@ -519,7 +496,12 @@ object StreamingOps {
     */
   def attributionJoinOuter(clicks: DataFrame, signups: DataFrame,
                            maxDelay: String = "1 hour",
-                           watermark: String = "1 hour"): DataFrame = {
+                           watermark: String = "1 hour"): DataFrame =
+    attributionJoinAs(clicks, signups, maxDelay, watermark, "left_outer")
+
+  private def attributionJoinAs(clicks: DataFrame, signups: DataFrame,
+                                maxDelay: String, watermark: String,
+                                joinType: String): DataFrame = {
     val c = clicks.select(col("event_id").alias("click_id"),
       col("user_id"), col("ts").alias("click_ts"))
       .withWatermark("click_ts", watermark)
@@ -530,7 +512,7 @@ object StreamingOps {
       col("user_id") === col("s_user_id") &&
         col("signup_ts") <= col("click_ts") &&
         col("signup_ts") >= col("click_ts") - expr(s"INTERVAL $maxDelay"),
-      "left_outer")
+      joinType)
       .select(col("click_id"), col("user_id"), col("click_ts"),
         col("signup_id"), col("signup_ts"))
   }

@@ -713,6 +713,12 @@ class StreamingSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet == Set(1L, 3L, 4L, 6L))
     assert(spark.read.parquet(idx).select("__id")
       .collect().map(_.getLong(0)).toSet == Set(1L, 3L, 4L, 6L))
+
+    // no new files → a run commits nothing and rewrites nothing
+    ingest()
+    val out = spark.read.parquet(dest)
+    assert(out.count() == 4 && out.select("vec_id").distinct().count() == 4,
+      "replay with no new files must be a no-op")
   }
 
   test("streaming corpus ingest: dedup then chunk matches the batch pipeline") {
