@@ -38,9 +38,9 @@ object CandCount {
       spark.stop()
       return
     }
-    val n = graft.ops.Dedup.incrementalCandidates(
-      graft.sources.Tables.parquet(spark, DedupQueries.q93Index(spark, sfDir)),
+    val n = graft.ops.Dedup.minHashCandidates(graft.ops.PairSides.against(
       DedupQueries.q93Signatures(spark, sfDir, batch = true),
+      graft.sources.Tables.parquet(spark, DedupQueries.q93Index(spark, sfDir))),
       DedupQueries.Q93Bands, DedupQueries.Q93RowsPerBand).count()
     println(s"CANDIDATES=$n sf=$sfDir")
     spark.stop()

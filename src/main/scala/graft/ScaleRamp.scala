@@ -79,9 +79,10 @@ object ScaleRamp {
       // band-join candidate generation alone, and the full probe, all
       // against the SAME stored index the registry query reads.
       "x_q93_batch_sig" -> (() => DedupQueries.q93Signatures(spark, sfDir, batch = true)),
-      "x_q93_candidates" -> (() => graft.ops.Dedup.incrementalCandidates(
-        graft.sources.Tables.parquet(spark, DedupQueries.q93Index(spark, sfDir)),
-        DedupQueries.q93Signatures(spark, sfDir, batch = true),
+      "x_q93_candidates" -> (() => graft.ops.Dedup.minHashCandidates(
+        graft.ops.PairSides.against(
+          DedupQueries.q93Signatures(spark, sfDir, batch = true),
+          graft.sources.Tables.parquet(spark, DedupQueries.q93Index(spark, sfDir))),
         DedupQueries.Q93Bands, DedupQueries.Q93RowsPerBand)),
       // q97 chain DECOMPOSITION (round 11: 13× at 10× data in the sf10
       // subset): the fused signal scan and the exact-dedup hash shuffle

@@ -23,7 +23,18 @@ object TextFunctions {
   /** Whitespace tokenization (lowercased). */
   def tokens(c: Column): Column = split(trim(lower(c)), "\\s+")
 
-  val tokensSql: String = "regexp_split_to_array(trim(lower(text)), '\\s+')"
+  /** DuckDB mirror of [[tokens]] over the column `c`. */
+  def tokensSqlOn(c: String): String = s"regexp_split_to_array(trim(lower($c)), '\\s+')"
+
+  val tokensSql: String = tokensSqlOn("text")
+
+  /** DuckDB list of the word `k`-grams of the token list `tk`, each joined
+    * by one space, in order (an empty list when `tk` has fewer than `k`
+    * tokens).
+    */
+  def wordGramsSql(tk: String, k: Int): String =
+    s"list_transform(range(len($tk) - ${k - 1}), i -> concat_ws(' ', " +
+      (1 to k).map(j => s"$tk[i+$j]").mkString(", ") + "))"
 
   /** Word k-gram shingles (distinct), built with sequence+transform —
     * no UDF, no explode.

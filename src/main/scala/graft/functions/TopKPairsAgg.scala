@@ -73,12 +73,12 @@ final class TopKHeap(val k: Int) {
 }
 
 /** Exact top-k by (score desc, id asc) as a native
-  * `TypedImperativeAggregate`: the same bounded-heap partial aggregation
-  * as [[TopKAggregator]], but over `InternalRow` — input rows stay in
-  * Tungsten format end-to-end (no Kryo buffer encoder, no per-row
-  * deserialization out of whole-stage codegen), which is where the typed
-  * Dataset variant spent 7× the window plan's CPU at sf0.1. Only k pairs
-  * per group per partition cross the shuffle.
+  * `TypedImperativeAggregate`: a bounded-heap partial aggregation over
+  * `InternalRow` — input rows stay in Tungsten format end-to-end (no Kryo
+  * buffer encoder, no per-row deserialization out of whole-stage codegen),
+  * which is where a typed-Dataset `Aggregator` variant spent 7× the window
+  * plan's CPU at sf0.1. Only k pairs per group per partition cross the
+  * shuffle.
   *
   * Null ids or scores are skipped (a null cosine is an undefined
   * similarity). Output: `array<struct<neighbor_id:long, cosine:double>>`,

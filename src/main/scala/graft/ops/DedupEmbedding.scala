@@ -60,8 +60,7 @@ trait DedupEmbedding {
                        planes: Int = 8, bands: Int = 4,
                        prefilterBits: Int = 512): DataFrame = {
     import graft.functions.VectorFunctions
-    require(planes >= 0 && planes <= 64, "a band key must fit one long")
-    val nBits = math.max(prefilterBits, planes * bands)
+    val nBits = sketchBits(planes, bands, prefilterBits)
     val hp = Hyperplanes.generate(seed = 42L, nPlanes = nBits, dim = dim)
     val base0 = df.select(col(idCol).alias("__id"), col(vecCol).alias("__v"))
       .withColumn("__nrm", VectorFunctions.norm(col("__v")))
@@ -75,53 +74,53 @@ trait DedupEmbedding {
     val base =
       if (nBits > 0) base0.withColumn("__ws", VectorFunctions.hyperplaneSketchWide(col("__v"), hp))
       else base0
-    // ids only through the explode/self-join — never replicate the vector
-    val banded =
-      if (planes == 0) // exhaustive: one global bucket
-        base.select(col("__id"), lit(0).alias("__band"), lit(0L).alias("__key"))
-      else
-        base.select(col("__id"),
-          posexplode(array(bandKeyCols(col("__ws"), planes, bands): _*))
-            .as(Seq("__band", "__key")))
+    cosinePairs(PairSides.within(base), threshold, planes, bands, prefilterBits, nBits)
+  }
 
-    // ids-only distinct (never shuffle the vectors or sketches)
-    val candidates = banded.alias("a")
-      .join(banded.alias("b"),
-        col("a.__band") === col("b.__band") && col("a.__key") === col("b.__key") &&
-          col("a.__id") < col("b.__id"))
-      .select(col("a.__id").alias("id_a"), col("b.__id").alias("id_b"))
-      .distinct()
+  /** The sketch width a layout needs: the prefilter bits, or the band
+    * bits when those are wider.
+    */
+  private def sketchBits(planes: Int, bands: Int, prefilterBits: Int): Int = {
+    require(planes >= 0 && planes <= 64, "a band key must fit one long")
+    math.max(prefilterBits, planes * bands)
+  }
+
+  /** The band → candidates → hamming cut → exact-cosine chain of
+    * [[embeddingNearDup]] and [[embeddingNearDupAgainst]] over frames
+    * carrying `__id`, `__v`, `__nrm` and (when `nBits` > 0) the
+    * `nBits`-bit sketch `__ws`.
+    */
+  private def cosinePairs(sides: PairSides, threshold: Double, planes: Int,
+                          bands: Int, prefilterBits: Int, nBits: Int): DataFrame = {
+    import graft.functions.VectorFunctions
+    // ids only through the explode/join — never replicate the vector
+    val candidates = sides.candidates(idx =>
+      if (planes == 0) // exhaustive: one global bucket
+        idx.select(col("__id"), lit(0).alias("__band"), lit(0L).alias("__key"))
+      else
+        idx.select(col("__id"),
+          posexplode(array(bandKeyCols(col("__ws"), planes, bands): _*))
+            .as(Seq("__band", "__key"))))
 
     // stage 1: hamming over the full wide sketch (8 longs, not 64 floats)
     val f = math.acos(math.max(-1.0, math.min(1.0, threshold))) / math.Pi
     val cut = math.floor(nBits * f + 4.0 * math.sqrt(nBits * f * (1.0 - f))).toLong
-    // shuffle_hash on the corpus-sized sketch/vector frames: SMJ would
-    // sort the CANDIDATE-sized intermediate with the wide payload
-    // attached (the verify-family heap/spill bomb, see
-    // DedupJaccardJoin.verifyJaccard); SHJ streams candidates unsorted.
+    // the sketch and vector frames attach shuffle_hash (PairSides.attach)
     val prefiltered =
       if (prefilterBits == 0) candidates
-      else candidates
-        .join(base.select(col("__id").alias("id_a"), col("__ws").alias("__wsa"))
-          .hint("shuffle_hash"), "id_a")
-        .join(base.select(col("__id").alias("id_b"), col("__ws").alias("__wsb"))
-          .hint("shuffle_hash"), "id_b")
+      else sides.attach(candidates)(s => Seq(col("__ws").alias(s"__ws$s")))
         .filter(VectorFunctions.hammingWide(col("__wsa"), col("__wsb"), (nBits + 63) / 64) <= cut)
-        .select(col("id_a"), col("id_b"))
+        .select(sides.ids: _*)
 
     // stage 2: exact cosine, norms hoisted to per-row columns
-    val va = base.select(col("__id").alias("id_a"), col("__v").alias("__va"),
-      col("__nrm").alias("__na")).hint("shuffle_hash")
-    val vb = base.select(col("__id").alias("id_b"), col("__v").alias("__vb"),
-      col("__nrm").alias("__nb")).hint("shuffle_hash")
     Projections.pinnedFilter(
-      prefiltered.join(va, "id_a").join(vb, "id_b")
+      sides.attach(prefiltered)(s => Seq(col("__v").alias(s"__v$s"), col("__nrm").alias(s"__n$s")))
         .withColumn("cosine", round(
           when(col("__na") > 0 && col("__nb") > 0,
             VectorFunctions.dot(col("__va"), col("__vb")) / (col("__na") * col("__nb")))
             .otherwise(lit(null)), 6)),
       col("cosine") >= threshold) // pinned: else the dot runs twice per pair
-      .select(col("id_a"), col("id_b"), col("cosine"))
+      .select(sides.ids :+ col("cosine"): _*)
   }
 
   /** Persistable embedding index: (`__id`, `__v`, `__nrm`, `__ws`) — the
@@ -160,9 +159,7 @@ trait DedupEmbedding {
                               threshold: Double, dim: Int,
                               planes: Int = 8, bands: Int = 4,
                               prefilterBits: Int = 512): DataFrame = {
-    import graft.functions.VectorFunctions
-    require(planes >= 0 && planes <= 64, "a band key must fit one long")
-    val nBits = math.max(prefilterBits, planes * bands)
+    val nBits = sketchBits(planes, bands, prefilterBits)
     // A corpus index built with a different prefilterBits has a different
     // sketch length AND different bits in word 1, so banding/hammingWide
     // would silently produce wrong or empty candidates — fail loud (the
@@ -197,42 +194,8 @@ trait DedupEmbedding {
     }
     val newIdx = embeddingIndex(newDocs, idCol, vecCol, dim, math.max(nBits, 1))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def banded(idx: DataFrame) =
-      if (planes == 0) idx.select(col("__id"), lit(0).alias("__band"), lit(0L).alias("__key"))
-      else idx.select(col("__id"),
-        posexplode(array(bandKeyCols(col("__ws"), planes, bands): _*))
-          .as(Seq("__band", "__key")))
-    val candidates = banded(newIdx).alias("a")
-      .join(banded(corpusIdx).alias("b"),
-        col("a.__band") === col("b.__band") && col("a.__key") === col("b.__key") &&
-          col("a.__id") =!= col("b.__id"))
-      .select(col("a.__id").alias("new_id"), col("b.__id").alias("corpus_id"))
-      .distinct()
-    val f = math.acos(math.max(-1.0, math.min(1.0, threshold))) / math.Pi
-    val cut = math.floor(nBits * f + 4.0 * math.sqrt(nBits * f * (1.0 - f))).toLong
-    // shuffle_hash on the corpus-sized frames — see the batch path note
-    val prefiltered =
-      if (prefilterBits == 0) candidates
-      else candidates
-        .join(newIdx.select(col("__id").alias("new_id"), col("__ws").alias("__wsa"))
-          .hint("shuffle_hash"), "new_id")
-        .join(corpusIdx.select(col("__id").alias("corpus_id"), col("__ws").alias("__wsb"))
-          .hint("shuffle_hash"), "corpus_id")
-        .filter(VectorFunctions.hammingWide(col("__wsa"), col("__wsb"), (nBits + 63) / 64) <= cut)
-        .select(col("new_id"), col("corpus_id"))
-    val va = newIdx.select(col("__id").alias("new_id"), col("__v").alias("__va"),
-      col("__nrm").alias("__na")).hint("shuffle_hash")
-    val vb = corpusIdx.select(col("__id").alias("corpus_id"), col("__v").alias("__vb"),
-      col("__nrm").alias("__nb")).hint("shuffle_hash")
-    val out = Projections.pinnedFilter(
-      prefiltered.join(va, "new_id").join(vb, "corpus_id")
-        .withColumn("cosine", round(
-          when(col("__na") > 0 && col("__nb") > 0,
-            VectorFunctions.dot(col("__va"), col("__vb")) / (col("__na") * col("__nb")))
-            .otherwise(lit(null)), 6)),
-      col("cosine") >= threshold)
-      .select(col("new_id"), col("corpus_id"), col("cosine"))
-      .eagerCut()
+    val out = cosinePairs(PairSides.against(newIdx, corpusIdx), threshold,
+      planes, bands, prefilterBits, nBits).eagerCut()
     newIdx.unpersist(false)
     out
   }

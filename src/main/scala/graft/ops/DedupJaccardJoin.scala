@@ -14,34 +14,31 @@ import graft.ops.Checkpoints._
   */
 trait DedupJaccardJoin {
 
-  /** Exact Jaccard verification of candidate pairs against the shingle-set
-    * frame (`__id`, `__sh`).
+  /** Exact Jaccard verification of candidate pairs against the shingle
+    * sets (`__sh`) of both sides.
     */
-  protected def verifyJaccard(pairs: DataFrame, shingleSets: DataFrame,
-                            threshold: Double): DataFrame = {
+  protected def verifyJaccard(pairs: DataFrame, sides: PairSides,
+                              threshold: Double): DataFrame = {
     import graft.functions.JaccardSortedExpr
     // sort once per ROW; each pair is then one allocation-free merge pass
     // (array_intersect/array_union build hash sets per PAIR — the
     // dominant cost at hundreds of thousands of candidates)
     //
-    // shuffle_hash on the DOC-sized array frames (round-14): a
-    // sort-merge join here SORTS the pair-sized intermediate — after the
-    // first join that intermediate already carries one ~350 B array per
-    // row, and at sf10 the second join's sort held 56M rows × ~850 B =
-    // 48 GB of in-heap sort pages (G1 cannot reclaim humongous Tungsten
-    // pages fast enough; the driver heartbeat-collapsed). A shuffled
-    // hash join builds its per-partition map from the DOC-count-sided
-    // frame (KBs..MBs per partition) and STREAMS the candidate side —
-    // no candidate-sized sort exists at any scale.
-    val sa = shingleSets.select(col("__id").alias("id_a"),
-      array_sort(col("__sh")).alias("__sha")).hint("shuffle_hash")
-    val sb = shingleSets.select(col("__id").alias("id_b"),
-      array_sort(col("__sh")).alias("__shb")).hint("shuffle_hash")
+    // shuffle_hash on the DOC-sized array frames (round-14, see
+    // PairSides.attach): a sort-merge join here SORTS the pair-sized
+    // intermediate — after the first join that intermediate already
+    // carries one ~350 B array per row, and at sf10 the second join's
+    // sort held 56M rows × ~850 B = 48 GB of in-heap sort pages (G1
+    // cannot reclaim humongous Tungsten pages fast enough; the driver
+    // heartbeat-collapsed). A shuffled hash join builds its per-partition
+    // map from the DOC-count-sided frame (KBs..MBs per partition) and
+    // STREAMS the candidate side — no candidate-sized sort exists at any
+    // scale.
     Projections.pinnedFilter(
-      pairs.join(sa, "id_a").join(sb, "id_b")
+      sides.attach(pairs)(s => Seq(array_sort(col("__sh")).alias(s"__sh$s")))
         .withColumn("jaccard", round(JaccardSortedExpr(col("__sha"), col("__shb")), 6)),
       col("jaccard") >= threshold) // pinned: else the merge pass runs twice per pair
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+      .select(sides.ids :+ col("jaccard"): _*)
   }
 
   /** Brute-force token-set Jaccard pairs (the small-n oracle-checkable
@@ -237,4 +234,47 @@ trait DedupJaccardJoin {
       col("jaccard") >= threshold) // pinned: else the merge pass runs twice per pair
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
+}
+
+/** The two sides of a banded near-dup join and the names of its pairs.
+  * [[PairSides.within]] pairs one frame with itself as (id_a, id_b),
+  * id_a < id_b; [[PairSides.against]] pairs a new batch with a stored
+  * index as (new_id, corpus_id), any two distinct ids. Both frames carry
+  * the row id as `__id`.
+  */
+private[graft] final case class PairSides(a: DataFrame, b: DataFrame,
+                                          idA: String, idB: String,
+                                          idPred: (Column, Column) => Column) {
+  def ids: Seq[Column] = Seq(col(idA), col(idB))
+
+  /** (idA, idB) pairs sharing a bucket, where `banded` explodes a frame
+    * into (`__id`, `__band`, `__key`). Ids only through the distinct:
+    * payloads re-attach by key afterwards, never shuffled through it.
+    */
+  def candidates(banded: DataFrame => DataFrame): DataFrame =
+    banded(a).alias("a")
+      .join(banded(b).alias("b"),
+        col("a.__band") === col("b.__band") && col("a.__key") === col("b.__key") &&
+          idPred(col("a.__id"), col("b.__id")))
+      .select(col("a.__id").alias(idA), col("b.__id").alias(idB))
+      .distinct()
+
+  /** `pairs` with `payload("a")` of side a joined on idA, then
+    * `payload("b")` of side b on idB. The side frames are hinted
+    * shuffle_hash: the hash map builds from the doc-sized frame and the
+    * candidate-sized side streams unsorted (a sort-merge join would sort
+    * the candidates with the payload attached — see
+    * [[DedupJaccardJoin.verifyJaccard]]).
+    */
+  def attach(pairs: DataFrame)(payload: String => Seq[Column]): DataFrame = {
+    def side(df: DataFrame, id: String, s: String) =
+      df.select(col("__id").alias(id) +: payload(s): _*).hint("shuffle_hash")
+    pairs.join(side(a, idA, "a"), idA).join(side(b, idB, "b"), idB)
+  }
+}
+
+private[graft] object PairSides {
+  def within(df: DataFrame): PairSides = PairSides(df, df, "id_a", "id_b", _ < _)
+  def against(batch: DataFrame, stored: DataFrame): PairSides =
+    PairSides(batch, stored, "new_id", "corpus_id", _ =!= _)
 }

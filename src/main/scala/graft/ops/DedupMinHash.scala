@@ -68,73 +68,70 @@ trait DedupMinHash { self: DedupJaccardJoin =>
                      threshold: Double = 0.5, shingleK: Int = 3,
                      bands: Int = 8, rowsPerBand: Int = 4,
                      estMargin: Double = 0.2): DataFrame = withWideShuffle(df.sparkSession) {
-    val numHashes = bands * rowsPerBand
-    // shingle sets + signatures are consumed by three branches (banding,
-    // estimate filter, exact verify) — cache once instead of recomputing
-    // the 32-hash MinHash three times. Shingles are HASHED k-grams built
-    // from a bound token-hash column (no string concat, no O(n²)
-    // element_at reuse — see TextFunctions.shingleHashesFromTokenHashes).
-    val sig = minHashSignatures(df, idCol, textCol, shingleK, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // Shingles are HASHED k-grams built from a bound token-hash column (no
+    // string concat, no O(n²) element_at reuse — see
+    // TextFunctions.shingleHashesFromTokenHashes).
+    val sig = minHashSignatures(df, idCol, textCol, shingleK, bands * rowsPerBand)
+    cutNearDupPairs(PairSides.within(sig), threshold, bands, rowsPerBand, estMargin)
+  }
+
+  /** The eager body of [[minHashNearDup]] and [[minHashNearDupAgainst]].
+    * Side `a` holds the signatures this call built (the self-join passes
+    * it as `b` too): it is consumed by three branches (banding, estimate
+    * filter, exact verify), so it is cached once instead of recomputing
+    * the MinHash three times.
+    */
+  private def cutNearDupPairs(sides: PairSides, threshold: Double, bands: Int,
+                              rowsPerBand: Int, estMargin: Double): DataFrame = {
+    sides.a.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // The narrow candidate set is eagerly cut BEFORE the verify joins
     // (round 16, the q118 lesson applied to the minhash family): the
-    // banded self-join + distinct are the operator's fastest-growing
+    // banded join + distinct are the operator's fastest-growing
     // exchanges, and in a monolithic DAG their shuffle files stay on disk
     // until the END of the verify stage — the round-16 sf100 q93 capture
     // measured ~53 GB of concurrent zstd shuffle at the peak, overrunning
     // the sandbox disk exactly as r14's lz4 run did. Cutting here lets
     // the ContextCleaner release the band-join/distinct files while the
     // verify joins run, so peak footprint is max(stage) not sum(stages).
-    val cand = nearDupCandidates(sig, bands, rowsPerBand).eagerCut()
-    val verified = nearDupVerifyOnSigs(cand, sig, threshold, numHashes, estMargin)
+    val cand = minHashCandidates(sides, bands, rowsPerBand).eagerCut()
     // Materialize the (small) verified pair set eagerly so the wide
     // signature cache can be released before returning — otherwise every
     // invocation leaks cached blocks for the session lifetime. The
     // localCheckpoint blocks holding the result are weak-reference-cleaned
     // by the ContextCleaner once the returned frame is unreferenced.
-    val out = verified.eagerCut()
-    sig.unpersist(false)
+    val out = verifyOnSigs(cand, sides, threshold, bands * rowsPerBand, estMargin).eagerCut()
+    sides.a.unpersist(false)
     org.apache.spark.sql.GraftBridge.releaseCheckpoint(cand)
     out
   }
 
-  /** The self-join near-dup chain on a prepared signature frame — the
-    * UN-checkpointed plan behind [[minHashNearDup]], extracted so
-    * PlanSpec can pin the narrow-first prefilter order on the exact
-    * production path (the public operator checkpoints eagerly, so its
-    * returned plan is an opaque RDDScan and the chain would otherwise be
-    * un-auditable).
+  /** The near-dup chain on prepared signature frames — the UN-checkpointed
+    * plan behind [[minHashNearDup]] and [[minHashNearDupAgainst]],
+    * extracted so PlanSpec can pin the narrow-first prefilter order on the
+    * exact production path (the public operators checkpoint eagerly, so
+    * their returned plan is an opaque RDDScan and the chain would
+    * otherwise be un-auditable).
     */
-  private[graft] def nearDupPairsPlan(sig: DataFrame, threshold: Double,
+  private[graft] def nearDupPairsPlan(sides: PairSides, threshold: Double,
                                       bands: Int, rowsPerBand: Int,
                                       estMargin: Double): DataFrame =
-    nearDupVerifyOnSigs(nearDupCandidates(sig, bands, rowsPerBand), sig,
+    verifyOnSigs(minHashCandidates(sides, bands, rowsPerBand), sides,
       threshold, bands * rowsPerBand, estMargin)
 
-  /** Banded candidate (id_a, id_b) pairs of [[minHashNearDup]] — ids
-    * only, the stage the public operator eagerly cuts so the band-join
-    * and distinct shuffle files release before verification runs.
+  /** Banded candidate pairs of the two signature frames — ids only, the
+    * stage the public operators eagerly cut so the band-join and distinct
+    * shuffle files release before verification runs.
     */
-  private[graft] def nearDupCandidates(sig: DataFrame, bands: Int,
-                                       rowsPerBand: Int): DataFrame = {
-    val banded = sig.select(col("__id"),
-        posexplode(TextFunctions.bandKeys(col("__sig"), bands, rowsPerBand))
-          .as(Seq("__band", "__key")))
-    // candidates stay NARROW (ids only) through the distinct
-    banded.alias("a")
-      .join(banded.alias("b"),
-        col("a.__band") === col("b.__band") && col("a.__key") === col("b.__key") &&
-          col("a.__id") < col("b.__id"))
-      .select(col("a.__id").alias("id_a"), col("b.__id").alias("id_b"))
-      .distinct()
-  }
+  private[graft] def minHashCandidates(sides: PairSides, bands: Int,
+                                       rowsPerBand: Int): DataFrame =
+    sides.candidates(_.select(col("__id"),
+      posexplode(TextFunctions.bandKeys(col("__sig"), bands, rowsPerBand))
+        .as(Seq("__band", "__key"))))
 
-  /** The prefilter + exact-verify chain of [[minHashNearDup]] over a
-    * prepared candidate set.
-    */
-  private[graft] def nearDupVerifyOnSigs(candidates: DataFrame, sig: DataFrame,
-                                         threshold: Double, numHashes: Int,
-                                         estMargin: Double): DataFrame = {
+  /** The prefilter + exact-verify chain over a prepared candidate set. */
+  private def verifyOnSigs(candidates: DataFrame, sides: PairSides,
+                           threshold: Double, numHashes: Int,
+                           estMargin: Double): DataFrame = {
     // two cheap prefilters before touching the wide shingle arrays:
     //  1. size ratio: true jaccard ≤ min(|A|,|B|)/max(|A|,|B|) — lossless;
     //  2. signature estimate: matching-minhash fraction ≈ jaccard; cut at
@@ -152,11 +149,11 @@ trait DedupMinHash { self: DedupJaccardJoin =>
     // same output — candidate-frame bytes drop ~10× through the heaviest
     // exchanges.
     // shuffle_hash on every doc-sized frame joined onto the candidate
-    // set: SMJ would sort the CANDIDATE-sized intermediate (with the
-    // signature arrays attached after sa/sb, that sort is the verify
-    // family's heap/spill bomb — see DedupJaccardJoin.verifyJaccard);
-    // SHJ builds per-partition maps from the doc frames and streams
-    // candidates unsorted.
+    // set (PairSides.attach): SMJ would sort the CANDIDATE-sized
+    // intermediate (with the signature arrays attached after the sizes,
+    // that sort is the verify family's heap/spill bomb — see
+    // DedupJaccardJoin.verifyJaccard); SHJ builds per-partition maps from
+    // the doc frames and streams candidates unsorted.
     //
     // Known tradeoffs of the unconditional hint (round-14 ADVICE,
     // measured and accepted): (1) at toy scale it demotes joins AQE
@@ -171,28 +168,18 @@ trait DedupMinHash { self: DedupJaccardJoin =>
     // withWideShuffle partition floor keeps per-partition build maps
     // bounded as the corpus grows; a skewed-id corpus would need the
     // floor raised, not the hint removed.
-    val na = sig.select(col("__id").alias("id_a"), col("__n").alias("__na"))
-      .hint("shuffle_hash")
-    val nb = sig.select(col("__id").alias("id_b"), col("__n").alias("__nb"))
-      .hint("shuffle_hash")
-    val sized = candidates
-      .join(na, "id_a").join(nb, "id_b")
+    val sized = sides.attach(candidates)(s => Seq(col("__n").alias(s"__n$s")))
       .filter(least(col("__na"), col("__nb")).cast("double") /
         greatest(col("__na"), col("__nb")) >= threshold)
-      .select(col("id_a"), col("id_b"))
-    val sa = sig.select(col("__id").alias("id_a"), col("__sig").alias("__siga"))
-      .hint("shuffle_hash")
-    val sb = sig.select(col("__id").alias("id_b"), col("__sig").alias("__sigb"))
-      .hint("shuffle_hash")
+      .select(sides.ids: _*)
     val estMatches = aggregate(
       zip_with(col("__siga"), col("__sigb"), (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, v) => acc + v)
-    val prefiltered = sized
-      .join(sa, "id_a").join(sb, "id_b")
+    val prefiltered = sides.attach(sized)(s => Seq(col("__sig").alias(s"__sig$s")))
       .filter(estMatches >= (threshold - estMargin) * numHashes)
-      .select(col("id_a"), col("id_b"))
+      .select(sides.ids: _*)
 
-    verifyJaccard(prefiltered, sig.select(col("__id"), col("__sh")), threshold)
+    verifyJaccard(prefiltered, sides, threshold)
   }
 
   /** MinHash signature frame (`__id`, `__sh`, `__sig`, `__n`) — the
@@ -224,9 +211,8 @@ trait DedupMinHash { self: DedupJaccardJoin =>
     * 100 TB shape of continuous dedup: only the batch is hashed and
     * banded per run, the corpus index is joined as-is, and the band join
     * is asymmetric (batch × corpus), so its cost scales with the BATCH,
-    * not the corpus. The same size-ratio and signature-estimate
-    * prefilters as [[minHashNearDup]] run before the exact-Jaccard
-    * verification.
+    * not the corpus. The candidate, prefilter and verify chain is
+    * [[minHashNearDup]]'s, with the batch and the corpus as its two sides.
     */
   def minHashNearDupAgainst(corpusSig: DataFrame, newDocs: DataFrame,
                             idCol: String, textCol: String,
@@ -242,96 +228,7 @@ trait DedupMinHash { self: DedupJaccardJoin =>
           "rebuild the index or pass the layout it was built with")
     }
     val newSig = minHashSignatures(newDocs, idCol, textCol, shingleK, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager candidate cut before verification — see [[minHashNearDup]]
-    // (round 16: releases the band-join/distinct shuffle files, the
-    // dominant share of q93's measured ~53 GB sf100 peak scratch, before
-    // the verify joins write theirs)
-    val cand = incrementalCandidates(corpusSig, newSig, bands, rowsPerBand)
-      .eagerCut()
-    val verified = incrementalVerifyOnSigs(cand, corpusSig, newSig,
-      threshold, numHashes, estMargin)
-    val out = verified.eagerCut()
-    newSig.unpersist(false)
-    org.apache.spark.sql.GraftBridge.releaseCheckpoint(cand)
-    out
-  }
-
-  /** The batch×corpus near-dup chain on prepared signature frames — the
-    * UN-checkpointed plan behind [[minHashNearDupAgainst]], extracted so
-    * PlanSpec can pin the narrow-first prefilter order on the exact
-    * production path (see [[nearDupPairsPlan]]).
-    */
-  private[graft] def incrementalPairsPlan(corpusSig: DataFrame, newSig: DataFrame,
-                                          threshold: Double, bands: Int,
-                                          rowsPerBand: Int,
-                                          estMargin: Double): DataFrame =
-    incrementalVerifyOnSigs(
-      incrementalCandidates(corpusSig, newSig, bands, rowsPerBand),
-      corpusSig, newSig, threshold, bands * rowsPerBand, estMargin)
-
-  /** Banded batch×corpus candidate pairs of [[minHashNearDupAgainst]] —
-    * ids only (the eagerly-cut stage; see [[nearDupCandidates]]).
-    */
-  private[graft] def incrementalCandidates(corpusSig: DataFrame,
-                                           newSig: DataFrame, bands: Int,
-                                           rowsPerBand: Int): DataFrame = {
-    def banded(sig: DataFrame) = sig.select(col("__id"),
-      posexplode(TextFunctions.bandKeys(col("__sig"), bands, rowsPerBand))
-        .as(Seq("__band", "__key")))
-    banded(newSig).alias("a")
-      .join(banded(corpusSig).alias("b"),
-        col("a.__band") === col("b.__band") && col("a.__key") === col("b.__key") &&
-          col("a.__id") =!= col("b.__id"))
-      .select(col("a.__id").alias("new_id"), col("b.__id").alias("corpus_id"))
-      .distinct()
-  }
-
-  /** The prefilter + exact-verify chain of [[minHashNearDupAgainst]] over
-    * a prepared candidate set.
-    */
-  private[graft] def incrementalVerifyOnSigs(candidates: DataFrame,
-                                             corpusSig: DataFrame,
-                                             newSig: DataFrame,
-                                             threshold: Double, numHashes: Int,
-                                             estMargin: Double): DataFrame = {
-    // narrow-first prefilter order (round-14): the size-ratio cut runs
-    // with only the 8 B shingle counts attached, so the wide signature
-    // arrays are joined onto size-SURVIVORS — q93's sf10 candidate frame
-    // was spilling ~200 B/side/row through its join sorts (88% iowait);
-    // same predicate conjunction, same output, ~10× fewer spilled bytes.
-    val na = newSig.select(col("__id").alias("new_id"), col("__n").alias("__na"))
-      .hint("shuffle_hash")
-    val nb = corpusSig.select(col("__id").alias("corpus_id"), col("__n").alias("__nb"))
-      .hint("shuffle_hash")
-    val sized = candidates
-      .join(na, "new_id").join(nb, "corpus_id")
-      .filter(least(col("__na"), col("__nb")).cast("double") /
-        greatest(col("__na"), col("__nb")) >= threshold)
-      .select(col("new_id"), col("corpus_id"))
-    val sa = newSig.select(col("__id").alias("new_id"), col("__sig").alias("__siga"))
-      .hint("shuffle_hash")
-    val sb = corpusSig.select(col("__id").alias("corpus_id"), col("__sig").alias("__sigb"))
-      .hint("shuffle_hash")
-    val estMatches = aggregate(
-      zip_with(col("__siga"), col("__sigb"), (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, v) => acc + v)
-    val prefiltered = sized
-      .join(sa, "new_id").join(sb, "corpus_id")
-      .filter(estMatches >= (threshold - estMargin) * numHashes)
-      .select(col("new_id"), col("corpus_id"))
-    import graft.functions.JaccardSortedExpr
-    val shA = newSig.select(col("__id").alias("new_id"),
-      array_sort(col("__sh")).alias("__sha")).hint("shuffle_hash")
-    val shB = corpusSig.select(col("__id").alias("corpus_id"),
-      array_sort(col("__sh")).alias("__shb")).hint("shuffle_hash")
-    // pinnedFilter: substitution would run the merge-pass Jaccard twice
-    // per candidate (predicate + projection) — see Projections.pinnedFilter
-    Projections.pinnedFilter(
-      prefiltered.join(shA, "new_id").join(shB, "corpus_id")
-        .withColumn("jaccard", round(JaccardSortedExpr(col("__sha"), col("__shb")), 6)),
-      col("jaccard") >= threshold)
-      .select(col("new_id"), col("corpus_id"), col("jaccard"))
+    cutNearDupPairs(PairSides.against(newSig, corpusSig), threshold, bands, rowsPerBand, estMargin)
   }
 
   /** [[minHashNearDup]] with the band layout chosen by [[LshParams]] for

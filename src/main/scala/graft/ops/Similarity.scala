@@ -43,42 +43,11 @@ object Similarity {
         col("rank"))
   }
 
-  /** Exact top-k via the typed [[graft.functions.TopKAggregator]]: same
-    * result as [[bruteForceTopK]], but ranked with map-side-combined
-    * bounded heaps instead of a window sort — only k rows per query per
-    * partition cross the shuffle (the scale path for large corpora).
-    */
-  def bruteForceTopKAgg(queries: DataFrame, corpus: DataFrame,
-                        idCol: String, vecCol: String, k: Int): DataFrame = {
-    import graft.functions.{Scored, TopKAggregator}
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val q = queries.select(col(idCol).alias("query_id"), col(vecCol).alias("__qv"))
-    val c = corpus.select(col(idCol).alias("neighbor_id"), col(vecCol).alias("__cv"))
-    val scored = Projections.pinnedFilter(
-      c.crossJoin(broadcast(q))
-        .select(col("query_id"),
-          col("neighbor_id"),
-          VectorFunctions.cosine(col("__qv"), col("__cv")).alias("cosine")),
-      col("cosine").isNotNull) // keep degenerate-vector semantics identical to bruteForceTopK
-      .as[(Long, Long, Double)]
-    val agg = new TopKAggregator(k).toColumn
-    scored.groupByKey(_._1)
-      .mapValues { case (_, id, cos) => Scored(id, cos) }
-      .agg(agg)
-      .flatMap { case (queryId, top) =>
-        top.zipWithIndex.map { case (s, i) => (queryId, s.neighborId, s.score, (i + 1).toLong) }
-      }
-      .toDF("query_id", "neighbor_id", "cosine", "rank")
-      .withColumn("cosine", round(col("cosine"), 6))
-  }
-
   /** Exact top-k ranked by the native [[graft.functions.TopKPairsAgg]]
     * `TypedImperativeAggregate`: bounded k-element heaps with partial
     * (map-side) aggregation — only k pairs per query per partition cross
-    * the shuffle — and, unlike the typed-Dataset
-    * [[bruteForceTopKAgg]] variant, input rows stay in Tungsten format
-    * (no Kryo buffer, no object churn per row). Same output as
+    * the shuffle — and input rows stay in Tungsten format (no Kryo
+    * buffer, no object churn per row). Same output as
     * [[bruteForceTopK]]; this is the scale path for large corpora.
     */
   def bruteForceTopKNative(queries: DataFrame, corpus: DataFrame,

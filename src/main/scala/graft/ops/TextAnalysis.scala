@@ -153,7 +153,7 @@ object TextAnalysis {
     val stops = gopherStopwords.map(w => s"'$w'").mkString(", ")
     s"""WITH g0 AS (SELECT doc_id, $textCol AS t FROM $base),
        |g1 AS (SELECT doc_id, t,
-       |  regexp_split_to_array(trim(lower(t)), '\\s+') AS tk,
+       |  ${TextFunctions.tokensSqlOn("t")} AS tk,
        |  string_split(t, chr(10)) AS ln FROM g0),
        |g2 AS (SELECT doc_id,
        |  CAST(len(tk) AS BIGINT) AS n_words,
@@ -298,7 +298,7 @@ object TextAnalysis {
        |  list_transform(
        |    list_filter(string_split(t, chr(10)), l ->
        |      regexp_matches(trim(l), '[.!?"]\\s*$$')
-       |      AND len(regexp_split_to_array(trim(lower(l)), '\\s+')) >= $minLineWords
+       |      AND len(${TextFunctions.tokensSqlOn("l")}) >= $minLineWords
        |      AND NOT contains(lower(l), 'javascript')),
        |    l -> trim(l)) AS kept
        |  FROM c0),

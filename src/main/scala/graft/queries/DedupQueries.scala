@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
 import graft.ops.Dedup
-import graft.functions.TextFunctions.{normalizeTextSql, tokensSql}
+import graft.functions.TextFunctions.{normalizeTextSql, tokensSql, wordGramsSql}
 
 /** Deduplication queries over `documents` / `embeddings`. The exact and
   * brute-force variants carry DuckDB oracles; the LSH variants (MinHash,
@@ -178,8 +178,7 @@ object DedupQueries {
               |  FROM documents WHERE doc_id < 300 OR doc_id % 17 = 0),
               |s AS (
               |  SELECT doc_id, list_distinct(
-              |    CASE WHEN len(toks) >= 3 THEN list_transform(range(len(toks) - 2),
-              |      i -> concat_ws(' ', toks[i+1], toks[i+2], toks[i+3]))
+              |    CASE WHEN len(toks) >= 3 THEN ${wordGramsSql("toks", 3)}
               |    ELSE CAST([] AS VARCHAR[]) END) AS sh
               |  FROM t)
               |${jaccardPairsSql("s", "sh", "0.15")}""".stripMargin)),
@@ -250,8 +249,7 @@ object DedupQueries {
       },
       Some(s"""WITH t AS (SELECT doc_id, $tokensSql AS tk
               |          FROM documents),
-              |g AS (SELECT doc_id, unnest(list_transform(range(len(tk) - 4),
-              |        i -> concat_ws(' ', tk[i+1], tk[i+2], tk[i+3], tk[i+4], tk[i+5])))
+              |g AS (SELECT doc_id, unnest(${wordGramsSql("tk", 5)})
               |        AS gram
               |      FROM t),
               |bad AS (SELECT DISTINCT doc_id FROM g
@@ -512,8 +510,7 @@ object DedupQueries {
       },
       Some(s"""WITH t AS (SELECT doc_id, $tokensSql AS tk
               |          FROM documents),
-              |g AS (SELECT DISTINCT doc_id, unnest(list_transform(range(len(tk) - 4),
-              |        i -> concat_ws(' ', tk[i+1], tk[i+2], tk[i+3], tk[i+4], tk[i+5])))
+              |g AS (SELECT DISTINCT doc_id, unnest(${wordGramsSql("tk", 5)})
               |        AS gram
               |      FROM t)
               |SELECT a.doc_id AS train_id, b.doc_id AS eval_id,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.ops.{Dedup, TextAnalysis}
 import graft.ops.Aggregations.exactAvgSql
-import graft.functions.TextFunctions.{normalizeTextSql, tokensSql}
+import graft.functions.TextFunctions.{normalizeTextSql, tokensSql, wordGramsSql}
 import graft.ops.Checkpoints._
 
 /** Text-analysis queries over the `documents` fixture. Oracles reproduce
@@ -97,8 +97,7 @@ object TextQueries {
       Some(s"""WITH t AS (SELECT doc_id, $toks AS tk FROM documents),
               |g AS (SELECT doc_id,
               |  CASE WHEN len(tk) >= 3 THEN
-              |    list_distinct(list_transform(range(len(tk) - 2),
-              |      i -> concat_ws(' ', tk[i+1], tk[i+2], tk[i+3])))
+              |    list_distinct(${wordGramsSql("tk", 3)})
               |  ELSE CAST([] AS VARCHAR[]) END AS grams FROM t)
               |SELECT doc_id,
               |  array_to_string(list_sort(list_transform(grams, g -> md5(g)))[1:8], ',')
@@ -112,11 +111,9 @@ object TextQueries {
       (s, d) => TextAnalysis.repetitionStats(Tables.documents(s, d), "doc_id", "text"),
       Some(s"""WITH t AS (SELECT doc_id, $toks AS tk FROM documents),
               |g AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tokens,
-              |  CASE WHEN len(tk) >= 2 THEN list_transform(range(len(tk) - 1),
-              |    i -> concat_ws(' ', tk[i+1], tk[i+2]))
+              |  CASE WHEN len(tk) >= 2 THEN ${wordGramsSql("tk", 2)}
               |  ELSE CAST([] AS VARCHAR[]) END AS g2,
-              |  CASE WHEN len(tk) >= 3 THEN list_transform(range(len(tk) - 2),
-              |    i -> concat_ws(' ', tk[i+1], tk[i+2], tk[i+3]))
+              |  CASE WHEN len(tk) >= 3 THEN ${wordGramsSql("tk", 3)}
               |  ELSE CAST([] AS VARCHAR[]) END AS g3
               |  FROM t)
               |SELECT doc_id, n_tokens,
@@ -205,8 +202,7 @@ object TextQueries {
       (s, d) => TextAnalysis.sourceOverlapMatrix(
         Tables.documents(s, d), "source", "text", k = 5),
       Some(s"""WITH t AS (SELECT source, $toks AS tk FROM documents),
-              |g AS (SELECT DISTINCT source, unnest(list_transform(range(len(tk) - 4),
-              |        i -> concat_ws(' ', tk[i+1], tk[i+2], tk[i+3], tk[i+4], tk[i+5])))
+              |g AS (SELECT DISTINCT source, unnest(${wordGramsSql("tk", 5)})
               |        AS gram
               |      FROM t),
               |s AS (SELECT source, count(*) AS n FROM g GROUP BY source),
@@ -299,8 +295,7 @@ object TextQueries {
               |tot AS (SELECT CAST(SUM(len(tk)) AS BIGINT) AS n1,
               |        CAST(SUM(greatest(len(tk) - 1, 0)) AS BIGINT) AS n2 FROM t),
               |b AS (SELECT unnest(CASE WHEN len(tk) >= 2
-              |        THEN list_transform(range(len(tk) - 1),
-              |          i -> concat_ws(' ', tk[i+1], tk[i+2]))
+              |        THEN ${wordGramsSql("tk", 2)}
               |        ELSE CAST([] AS VARCHAR[]) END) AS g FROM t),
               |c2 AS (SELECT g AS bigram, CAST(COUNT(*) AS BIGINT) AS pair_cnt
               |       FROM b GROUP BY g HAVING COUNT(*) >= 5)
@@ -369,8 +364,7 @@ object TextQueries {
               |u AS (SELECT unnest(tk) AS w FROM t),
               |c1 AS (SELECT w, count(*) AS c1 FROM u GROUP BY w),
               |b AS (SELECT doc_id, unnest(CASE WHEN len(tk) >= 2
-              |        THEN list_transform(range(len(tk) - 1),
-              |          i -> concat_ws(' ', tk[i+1], tk[i+2]))
+              |        THEN ${wordGramsSql("tk", 2)}
               |        ELSE CAST([] AS VARCHAR[]) END) AS g2 FROM t),
               |c2 AS (SELECT g2, count(*) AS c2 FROM b GROUP BY g2),
               |p AS (SELECT b.doc_id, round(CAST(c2.c2 AS DOUBLE) / c1.c1, 6) AS prob
@@ -1401,8 +1395,7 @@ object TextQueries {
        |  CAST(length(text) AS BIGINT) AS char_len,
        |  CAST(length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS BIGINT)
        |    AS punct,
-       |  CASE WHEN len(tk) >= 2 THEN list_transform(range(len(tk) - 1),
-       |    i -> concat_ws(' ', tk[i+1], tk[i+2]))
+       |  CASE WHEN len(tk) >= 2 THEN ${wordGramsSql("tk", 2)}
        |  ELSE CAST([] AS VARCHAR[]) END AS g2
        |  FROM t),
        |q AS (SELECT doc_id, lang, source, n_tokens,

@@ -191,10 +191,12 @@ object StreamingOps {
         val batch = batch0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val keptWithin = dropPaired(batch, within(batch), "id_b")
+          // through the path's own FileSystem: a URI index (file:, hdfs:,
+          // s3a:) must probe like a local one
           val indexExists = {
-            val dir = new java.io.File(indexDir)
-            dir.isDirectory && dir.listFiles != null &&
-              dir.listFiles.exists(f => f.getName.startsWith("batch="))
+            val dir = new org.apache.hadoop.fs.Path(indexDir)
+            val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+            fs.exists(dir) && fs.listStatus(dir).exists(_.getPath.getName.startsWith("batch="))
           }
           val survivors =
             if (!indexExists) keptWithin

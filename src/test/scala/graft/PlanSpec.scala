@@ -647,9 +647,9 @@ class PlanSpec extends SparkSpec {
       assert(everywhere.contains("__siga") && everywhere.contains("__sigb"),
         s"signature estimate stage missing above the ratio cut (renamed?):\n$plan")
     }
-    audit(graft.ops.Dedup.nearDupPairsPlan(sig, 0.5, 8, 4, 0.2))
-    audit(graft.ops.Dedup.incrementalPairsPlan(
-      sig, sig.filter(org.apache.spark.sql.functions.col("__id") % 2 === 0),
+    audit(graft.ops.Dedup.nearDupPairsPlan(graft.ops.PairSides.within(sig), 0.5, 8, 4, 0.2))
+    audit(graft.ops.Dedup.nearDupPairsPlan(graft.ops.PairSides.against(
+      sig.filter(org.apache.spark.sql.functions.col("__id") % 2 === 0), sig),
       0.5, 8, 4, 0.2))
   }
 
@@ -694,8 +694,13 @@ class PlanSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
 
     // shipped chains: narrow-first minhash and the prefix-jaccard builders
-    assert(findings(graft.ops.Dedup.nearDupPairsPlan(sig, 0.5, 8, 4, 0.2)).isEmpty,
+    assert(findings(graft.ops.Dedup.nearDupPairsPlan(
+        graft.ops.PairSides.within(sig), 0.5, 8, 4, 0.2)).isEmpty,
       "shipped minhash chain tripped the candidate-payload audit")
+    assert(findings(graft.ops.Dedup.nearDupPairsPlan(
+        graft.ops.PairSides.against(sig.filter(col("__id") % 2 === 0), sig),
+        0.5, 8, 4, 0.2)).isEmpty,
+      "shipped minhash batch×corpus chain tripped the candidate-payload audit")
     val t = docs.select(col("doc_id").alias("__id"),
         array_sort(array_distinct(graft.functions.TextFunctions.tokenHashes(
           graft.functions.TextFunctions.tokens(col("text"))))).alias("__toks"))

@@ -648,10 +648,17 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("nearDupIngest drops near-dups within and across batches, replay-safe") {
+    // once with the index directory as a plain path, once as a file: URI:
+    // the cross-batch probe must find the index through its FileSystem
+    Seq[java.nio.file.Path => String](_.toString, _.toUri.toString)
+      .foreach(checkNearDupIngest)
+  }
+
+  private def checkNearDupIngest(indexDir: java.nio.file.Path => String): Unit = {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("neardup_ingest")
     val (src, dest, ckpt, idx) =
-      (s"$base/src", s"$base/dest", s"$base/ckpt", s"$base/index")
+      (s"$base/src", s"$base/dest", s"$base/ckpt", indexDir(base.resolve("index")))
     def doc(id: Long, vocab: String, swap: Int = 0) =
       (id, (1 to 50).map(i => if (i <= swap) s"sw${vocab}$i" else s"$vocab$i").mkString(" "))
     val schema = Seq(doc(0L, "a")).toDF("doc_id", "text").schema
