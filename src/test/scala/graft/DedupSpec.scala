@@ -256,23 +256,6 @@ class DedupSpec extends SparkSpec {
     assert(inc == expected,
       s"missed=${expected.diff(inc).take(5)} extra=${inc.diff(expected).take(5)}")
     assert(inc.nonEmpty, "vacuous fixture: no new×corpus near-dup pairs")
-
-    // the embedding family, same contract (new ids: vec_id % 5 == 0)
-    val emb = graft.sources.Tables.embeddings(spark, sf001)
-    val embExpected = Dedup.embeddingNearDup(emb, "vec_id", "embedding",
-        threshold = 0.4, dim = 64, planes = 4, bands = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .flatMap { case (a, b, c) =>
-        Seq((a, b, c), (b, a, c)).filter { case (x, y, _) => x % 5 == 0 && y % 5 != 0 }
-      }.toSet
-    val embInc = Dedup.embeddingNearDupAgainst(
-        Dedup.embeddingIndex(emb.filter(col("vec_id") % 5 =!= 0), "vec_id", "embedding", dim = 64),
-        emb.filter(col("vec_id") % 5 === 0), "vec_id", "embedding",
-        threshold = 0.4, dim = 64, planes = 4, bands = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(embInc == embExpected,
-      s"missed=${embExpected.diff(embInc).take(5)} extra=${embInc.diff(embExpected).take(5)}")
-    assert(embInc.nonEmpty, "vacuous fixture: no new×corpus embedding pairs")
   }
 
   test("decontaminateExact drops exact normalized matches only") {
