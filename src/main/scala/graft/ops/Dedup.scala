@@ -4,8 +4,7 @@ package graft.ops
   *
   * Scale design:
   *  - Exact dedup is a hash groupBy on the normalized text — one shuffle,
-  *    map-side combined. At 100 TB, group on a 64-bit content hash instead
-  *    of the full text to keep shuffle rows narrow ([[exactDedupByHash]]).
+  *    map-side combined ([[exactDedup]]).
   *  - Near-dup avoids the O(n²) pairwise wall via MinHash-LSH banding: only
   *    documents sharing a band bucket are candidate pairs; candidates are
   *    then verified with exact Jaccard. Skewed buckets (boilerplate shingle
@@ -16,7 +15,7 @@ package graft.ops
   *    self-join the hot bucket is skewed on BOTH sides, which AQE cannot
   *    split (splitting requires replicating a non-skewed other side) —
   *    there the mitigation is pipeline ordering: collapse exact
-  *    duplicates first ([[exactDedup]]/[[exactDedupByHash]], as
+  *    duplicates first ([[exactDedup]], as
   *    q97's curation does), so identical boilerplate never reaches
   *    banding, and the size/estimate prefilters keep the surviving
   *    candidate verify narrow.

@@ -10,22 +10,25 @@ import graft.ops.Checkpoints._
   */
 trait DedupComponents { self: DedupMinHash =>
 
-  /** Connected components over a near-dup pair graph via iterative
-    * min-label propagation: each node's label converges to the minimum id
-    * reachable from it. Labels advance one hop per round, so convergence
-    * takes O(diameter) rounds — near-dup clusters are dense (small
-    * diameter), which keeps the round count low in practice; `maxIter`
-    * bounds pathological chains and the loop THROWS if labels were still
-    * changing when it ran out (silently returning partial labels would
-    * mis-cluster). For graphs with genuinely large diameters use a
-    * pointer-doubling variant (large-star/small-star) instead. Returns
+  /** Connected components with pointer doubling: each round updates a
+    * node's label to the min over its own label, its neighbors' labels,
+    * AND its label's label (`comp(comp(id))` — the path-halving step that
+    * makes label chains collapse geometrically). Where ids increase along a
+    * chain this converges in O(log diameter) rounds, where one-hop min-label
+    * propagation takes O(diameter): a 200-node path converges within 16.
+    * With ids shuffled along the paths the extra hop gains little: a
+    * 300-node forest of diameter 19 takes 17-20 rounds (DedupSpec). Cost
+    * per round: one extra self-join of the (small) label frame on top of
+    * the edge join. `maxIter` bounds pathological graphs
+    * and the loop THROWS if labels were still changing when it ran out
+    * (silently returning partial labels would mis-cluster). Returns
     * (id, component) with component = min id of the cluster.
     *
     * Scale notes: each round is one groupBy-min over edges ∪ labels;
     * `localCheckpoint` truncates the growing lineage (the classic
     * iterative-algorithm trap on Spark).
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+  def connectedComponentsFast(pairs: DataFrame, maxIter: Int = 16): DataFrame = {
     // undirected edge list, both directions, cached ALREADY HASH-
     // PARTITIONED on the probe key (round 16): every round's neighbor
     // join probes edges on `src`, and an unpartitioned cache re-exchanged
@@ -45,77 +48,6 @@ trait DedupComponents { self: DedupMinHash =>
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIter) {
-      // candidate label per node: min of own label and neighbors' labels.
-      // The own-label branch tags its previous label as `__old`, so the
-      // convergence test ("did any min label change?") falls out of the
-      // SAME aggregate — the old shape re-joined next⋈labels (two more
-      // node-sized exchanges + a join per round) just to count changes.
-      // Every id has exactly one own row (dst ids are src ids on the
-      // mirrored edge list), so max(__old) recovers its previous label.
-      val neighborLabels = edges
-        .join(labels.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").alias("id"), col("component"),
-          lit(null).cast(compType).alias("__old"))
-      val next = labels
-        .select(col("id"), col("component"), col("component").alias("__old"))
-        .union(neighborLabels)
-        .groupBy("id").agg(min("component").alias("component"),
-          max("__old").alias("__old"))
-        .eagerCut()
-      // one scan of the fresh checkpoint blocks — no join, no shuffle.
-      // __old is null-guarded (round-17 hardening): correctness of the
-      // fused test rests on the every-id-has-one-own-label-row invariant
-      // above; if edge construction ever broke it, max(__old) would be
-      // null and a bare =!= would DROP the row from the changed count —
-      // converging early with wrong components. A null __old now counts
-      // as changed, so a broken invariant keeps iterating and trips the
-      // maxIter guard loudly instead of mis-clustering.
-      changed = next.filter(col("__old").isNull ||
-        col("component") =!= col("__old")).count()
-      // the superseded round's checkpoint blocks are dead the moment the
-      // new aggregate consumed them — release eagerly, don't let them
-      // accumulate one-per-round on the ContextCleaner's queue
-      org.apache.spark.sql.GraftBridge.releaseCheckpoint(resident)
-      resident = next
-      labels = next.select(col("id"), col("component"))
-      iter += 1
-    }
-    edges.unpersist()
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds " +
-          s"($changed labels still changing) — graph diameter exceeds maxIter; " +
-          "raise maxIter or use a pointer-doubling variant")
-    labels
-  }
-
-  /** Connected components with pointer doubling: each round updates a
-    * node's label to the min over its own label, its neighbors' labels,
-    * AND its label's label (`comp(comp(id))` — the path-halving step that
-    * makes label chains collapse geometrically). Converges in
-    * O(log diameter) rounds vs [[connectedComponents]]'s O(diameter) —
-    * the variant to reach for when clusters can be long chains (the
-    * near-dup graphs of templated corpora often are). Cost per round: one
-    * extra self-join of the (small) label frame on top of the edge join.
-    * Throws on non-convergence like the one-hop variant.
-    */
-  def connectedComponentsFast(pairs: DataFrame, maxIter: Int = 16): DataFrame = {
-    // probe-key-partitioned edge cache + tagged-union convergence test —
-    // see [[connectedComponents]] (round 16)
-    val edges = pairs.select(col("id_a").alias("src"), col("id_b").alias("dst"))
-      .union(pairs.select(col("id_b").alias("src"), col("id_a").alias("dst")))
-      .distinct()
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("src").alias("id"))
-      .distinct()
-      .withColumn("component", col("id"))
-      .eagerCut()
-    var resident = labels
-    val compType = labels.schema("component").dataType
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
       val viaNeighbors = edges
         .join(labels.withColumnRenamed("id", "src"), "src")
         .select(col("dst").alias("id"), col("component"),
@@ -125,17 +57,31 @@ trait DedupComponents { self: DedupMinHash =>
         .join(labels.alias("l2"), col("l1.component") === col("l2.id"))
         .select(col("l1.id").alias("id"), col("l2.component").alias("component"),
           lit(null).cast(compType).alias("__old"))
+      // The own-label branch tags its previous label as `__old`, so the
+      // convergence test ("did any min label change?") falls out of the
+      // SAME aggregate (round 16) — re-joining next⋈labels just to count
+      // changes cost two more node-sized exchanges and a join per round.
+      // Every id has exactly one own row (dst ids are src ids on the
+      // mirrored edge list), so max(__old) recovers its previous label.
       val next = labels
         .select(col("id"), col("component"), col("component").alias("__old"))
         .union(viaNeighbors).union(viaDouble)
         .groupBy("id").agg(min("component").alias("component"),
           max("__old").alias("__old"))
         .eagerCut()
-      // null-guarded like connectedComponents — a broken own-label
-      // invariant must fail loudly, not converge early
+      // one scan of the fresh checkpoint blocks — no join, no shuffle.
+      // __old is null-guarded (round-17 hardening): if edge construction
+      // ever broke the one-own-row invariant, max(__old) would be null
+      // and a bare =!= would DROP the row from the changed count —
+      // converging early with wrong components. A null __old counts as
+      // changed, so a broken invariant keeps iterating and trips the
+      // maxIter guard loudly instead of mis-clustering.
       changed = next.filter(col("__old").isNull ||
         col("component") =!= col("__old")).count()
-      org.apache.spark.sql.GraftBridge.releaseCheckpoint(resident) // see connectedComponents
+      // the superseded round's checkpoint blocks are dead the moment the
+      // new aggregate consumed them — release eagerly, don't let them
+      // accumulate one-per-round on the ContextCleaner's queue
+      org.apache.spark.sql.GraftBridge.releaseCheckpoint(resident)
       resident = next
       labels = next.select(col("id"), col("component"))
       iter += 1

@@ -48,15 +48,6 @@ trait DedupMinHash { self: DedupJaccardJoin =>
       .agg(min(col(idCol)).alias("keeper_id"), count(lit(1)).alias("dup_count"))
       .select(col("keeper_id"), col("dup_count"))
 
-  /** Scale variant: group on xxhash64 of the normalized text (narrow
-    * shuffle rows; a 64-bit collision at 100 TB doc counts is ~birthday
-    * bound 1e-4 for 1e8 docs — acceptable for dedup, or re-verify within
-    * groups when it isn't).
-    */
-  def exactDedupByHash(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.groupBy(xxhash64(TextFunctions.normalizeText(col(textCol))).alias("content_hash"))
-      .agg(min(col(idCol)).alias("keeper_id"), count(lit(1)).alias("dup_count"))
-
   /** MinHash-LSH near-duplicate pairs, verified with exact Jaccard over
     * word-`shingleK`-gram shingle sets. Returns (id_a, id_b, jaccard) with
     * id_a < id_b and jaccard >= threshold.

@@ -9,9 +9,9 @@ import org.apache.spark.sql.types._
   *
   * PNG/JPEG decode is REAL ([[decodeImages]], JDK ImageIO) and so is
   * WAV/PCM audio decode ([[decodeAudio]], `javax.sound.sampled`) — no
-  * external codecs needed; [[decodeStub]] remains the clearly-marked
-  * deterministic fake for media types the JVM cannot decode (video,
-  * compressed audio). Batched
+  * external codecs needed; [[decodeImages]]' stub features remain the
+  * clearly-marked deterministic fake for media types the JVM cannot
+  * decode (video frames, compressed audio). Batched
   * iteration via `mapPartitions` (the Scala analogue of `mapInPandas` —
   * one JVM-side batch loop per partition, no per-row UDF overhead) and
   * size-aware repartitioning keep one huge blob from skewing a task.
@@ -40,36 +40,13 @@ object Multimodal {
     * target, one shuffle, no ordering — large blobs land in different
     * partitions with high probability instead of clustering (the failure
     * mode of range-partitioning on size, which packs all the big blobs
-    * together). The workhorse at 100 TB; use [[sizeBalancedExact]] when a
-    * hard per-partition byte bound matters more than sort cost.
+    * together). The workhorse at 100 TB: a hard per-partition byte bound
+    * would need a running byte total, which Spark evaluates as a
+    * single-partition window.
     */
   def sizeBalanced(df: DataFrame, targetPartitionBytes: Long, totalBytes: Long): DataFrame = {
     val parts = math.max(1, math.ceil(totalBytes.toDouble / targetPartitionBytes).toInt)
     df.repartition(parts, col("media_id"))
-  }
-
-  /** Exact byte balancing: bucket on the running byte total (each bucket
-    * closes at `targetPartitionBytes`), then range-partition one bucket
-    * per task — every partition is bounded by target + one blob.
-    * The running sum needs a total order over rows, which Spark evaluates
-    * as a single-partition window: pay it when hard bounds matter (e.g.
-    * feeding a memory-limited codec), not as the default.
-    */
-  def sizeBalancedExact(df: DataFrame, targetPartitionBytes: Long, totalBytes: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val parts = math.max(1, math.ceil(totalBytes.toDouble / targetPartitionBytes).toInt)
-    val w = Window.orderBy(col("media_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // the single-partition running-sum window sees only (media_id,
-    // n_bytes) — ~16 bytes/row — never the content blobs; buckets join
-    // back by id before the range partitioning moves the payload
-    val buckets = df.select(col("media_id"), col("n_bytes"))
-      .withColumn("__bucket",
-        floor((sum(col("n_bytes")).over(w) - col("n_bytes")) / targetPartitionBytes))
-      .select(col("media_id"), col("__bucket"))
-    df.join(buckets, "media_id")
-      .repartitionByRange(parts, col("__bucket"), col("media_id"))
-      .drop("__bucket")
   }
 
   /** Fixture adapter: render each document's leading bytes as a tiny RGB
@@ -120,9 +97,10 @@ object Multimodal {
     * bands) plus the aspect ratio; large images are sampled on a stride so
     * per-row cost is bounded by ~`maxSamples` pixels regardless of
     * resolution. Rows whose media type is not an image type — or whose bytes
-    * fail to decode — fall back to [[decodeStub]]'s hash features with
-    * `decode_ok = false` and null dimensions, so one corrupt blob cannot
-    * fail a 100 TB batch.
+    * fail to decode — fall back to [[stubFeatures]] with `decode_ok =
+    * false` and null dimensions, so one corrupt blob cannot fail a
+    * 100 TB batch. Same mapPartitions codec batching as a real decoder
+    * (codec context is the justified mapPartitions use).
     */
   def decodeImages(media: DataFrame, maxSamples: Int = 4096): DataFrame = {
     val enc = org.apache.spark.sql.Encoders.row(imageFeatureSchema)
@@ -163,74 +141,6 @@ object Multimodal {
             while (b < math.min(bands, 4)) { feats(b) = sums(b) / n / 255.0; b += 1 }
             feats(4) = w.toDouble / h
             Row(id, mediaType, nBytes, true, Int.box(w), Int.box(h), Int.box(bands), feats.toSeq)
-          }
-        }
-      }(enc)
-  }
-
-  /** REAL image RESIZE (the brief's missing multimodal op between decode
-    * and feature-extract): decode → nearest-neighbor downscale so the
-    * longest side is ≤ `maxSide` → re-encode as PNG. Nearest-neighbor via
-    * `AffineTransformOp.TYPE_NEAREST_NEIGHBOR` because its output is
-    * EXACTLY defined (source pixel at the floor of the inverse mapping) —
-    * bit-identical across JVMs/platforms, where bilinear kernels may
-    * differ in last-ulp rounding; PNG re-encode because PNG is lossless,
-    * so the resized pixel CONTENT (not the container bytes) is the
-    * deterministic artifact MultimodalSpec pins. Images already within
-    * bounds pass through pixel-identical (PNG re-encode, resized =
-    * false). Non-image/corrupt rows degrade with decode_ok = false and
-    * null content — one bad blob cannot fail a 100 TB batch. Same
-    * mapPartitions codec batching as [[decodeImages]] (codec context is
-    * the justified mapPartitions use).
-    */
-  def resizeImages(media: DataFrame, maxSide: Int = 4): DataFrame = {
-    require(maxSide >= 1, "maxSide must be positive")
-    val schema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("media_type", StringType),
-      StructField("decode_ok", BooleanType),
-      StructField("resized", BooleanType),
-      StructField("orig_width", IntegerType), StructField("orig_height", IntegerType),
-      StructField("width", IntegerType), StructField("height", IntegerType),
-      StructField("content", BinaryType)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    media.select(col("media_id"), col("content"), col("media_type"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val bytes = r.getAs[Array[Byte]](1)
-          val mediaType = r.getString(2)
-          val img =
-            if (bytes != null && mediaType != null && mediaType.startsWith("image/"))
-              try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-              catch { case _: Exception => null }
-            else null
-          if (img == null)
-            Row(id, mediaType, false, false, null, null, null, null, null)
-          else {
-            val (w, h) = (img.getWidth, img.getHeight)
-            if (math.max(w, h) <= maxSide)
-              Row(id, "image/png", true, false, Int.box(w), Int.box(h),
-                Int.box(w), Int.box(h), encodePng(img))
-            else {
-              val scale = maxSide.toDouble / math.max(w, h)
-              val (nw, nh) = (math.max(1, math.round(w * scale).toInt),
-                math.max(1, math.round(h * scale).toInt))
-              // normalize to a known layout first: TYPE_INT_RGB draw is
-              // defined for every ImageIO-produced color model
-              val src = new java.awt.image.BufferedImage(w, h,
-                java.awt.image.BufferedImage.TYPE_INT_RGB)
-              src.getGraphics.drawImage(img, 0, 0, null)
-              val op = new java.awt.image.AffineTransformOp(
-                java.awt.geom.AffineTransform.getScaleInstance(
-                  nw.toDouble / w, nh.toDouble / h),
-                java.awt.image.AffineTransformOp.TYPE_NEAREST_NEIGHBOR)
-              val dst = new java.awt.image.BufferedImage(nw, nh,
-                java.awt.image.BufferedImage.TYPE_INT_RGB)
-              op.filter(src, dst)
-              Row(id, "image/png", true, true, Int.box(w), Int.box(h),
-                Int.box(nw), Int.box(nh), encodePng(dst))
-            }
           }
         }
       }(enc)
@@ -302,8 +212,10 @@ object Multimodal {
 
   /** REAL perceptual hashing over the binary column: decode (ImageIO),
     * NN-normalize to the 9×8 dHash grid when larger (AffineTransformOp
-    * NEAREST — exactly-defined sampling, the [[resizeImages]] argument),
-    * integer luminance 299R+587G+114B, bit (r,c) set iff lum(r,c) >
+    * NEAREST — EXACTLY defined: the source pixel at the floor of the
+    * inverse mapping, bit-identical across JVMs, where bilinear kernels
+    * may differ in last-ulp rounding), integer luminance
+    * 299R+587G+114B, bit (r,c) set iff lum(r,c) >
     * lum(r,c+1) — the classic difference hash: gradient structure
     * survives re-encoding and brightness shifts, which is what makes
     * Hamming distance on it a NEAR-duplicate signal where the exact
@@ -686,8 +598,15 @@ object Multimodal {
       }(enc)
   }
 
-  /** The stub's FNV-1a stripe features (shared by [[decodeStub]] and the
-    * non-image fallback of [[decodeImages]]).
+  /** STUB — deterministic fake "feature extract" for media the JVM has
+    * no codec for, the non-image fallback of [[decodeImages]]. For VIDEO
+    * the container METADATA side is REAL ([[mp4Meta]] — brand/timescale/
+    * duration/tracks/codecs by pure byte arithmetic over ISO-BMFF boxes);
+    * only FRAME decode is honestly absent (a real implementation needs
+    * video codecs that do not exist in the JDK). An 8-dim vector in
+    * [0,1) from the content bytes (FNV-1a rolling hash per stripe), so
+    * the plumbing (batch shape, schema, partitioning) is fully exercised
+    * and test-assertable.
     */
   private def stubFeatures(bytesOrNull: Array[Byte]): Array[Double] = {
     val bytes = if (bytesOrNull == null) Array.emptyByteArray else bytesOrNull
@@ -706,37 +625,10 @@ object Multimodal {
     feats
   }
 
-  /** STUB — deterministic fake "decode + feature extract" for media the
-    * JVM has no codec for. For VIDEO the container METADATA side is now
-    * REAL ([[mp4Meta]] — brand/timescale/duration/tracks/codecs by pure
-    * byte arithmetic over ISO-BMFF boxes); only FRAME decode is honestly
-    * absent (??? a real implementation needs video codecs that do not
-    * exist in the JDK). The fake derives an 8-dim feature vector from
-    * content bytes (FNV-1a rolling hash per stripe) so the plumbing
-    * (batch shape, schema, partitioning) is fully exercised and
-    * test-assertable.
-    */
-  def decodeStub(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("n_bytes", LongType),
-      StructField("feature", ArrayType(DoubleType))))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    media.select(col("media_id"), col("content"), col("n_bytes"))
-      .mapPartitions { rows =>
-        // batched loop — one buffer reused per partition, as a real decoder
-        // (arrow batch / codec context) would be
-        rows.map { r =>
-          Row(r.getLong(0), r.getLong(2), stubFeatures(r.getAs[Array[Byte]](1)).toSeq)
-        }
-      }(enc)
-  }
-
   // ------------------------------------------------------------------
   // MP4/ISO-BMFF container metadata (ISO/IEC 14496-12 box structure).
   // Pure byte arithmetic over the binary column — no codec, no frame
-  // decode (which the JDK honestly cannot do; see [[decodeStub]]).
+  // decode (which the JDK honestly cannot do; see [[stubFeatures]]).
   // Lifts the video tier from "stub" to real metadata extraction:
   // brand, movie timescale/duration, track count, codec fourccs.
   // ------------------------------------------------------------------

@@ -13,15 +13,12 @@ import graft.ops.Checkpoints._
   * pipeline before tensorization).
   *
   * Scale design: chunking is pure per-row expression work (codegen'd, no
-  * shuffle). Packing comes in two disciplines, both deterministic in the
-  * DATA (never in the partitioning):
-  *  - [[packSequences]]: budget-respecting greedy next-fit inside
-  *    deterministic id-range buckets — bins never exceed the budget;
-  *  - [[packConcatSplit]]: concatenate-and-split at budget boundaries
-  *    (the GPT-style layout) — fully expressible as a prefix sum, so it
-  *    carries a SQL oracle (q92).
+  * shuffle). Packing is [[packConcatSplit]]: concatenate-and-split at
+  * budget boundaries (the GPT-style layout), deterministic in the DATA
+  * (never in the partitioning) and fully expressible as a prefix sum, so
+  * it carries a SQL oracle (q92).
   *
-  * Both derive their buckets from the id RANGE (min/max, an exact
+  * It derives its buckets from the id RANGE (min/max, an exact
   * 2-value aggregate) rather than `repartitionByRange`, whose reservoir-
   * sampled boundaries can shift between runs once the sample is smaller
   * than the data — bin ids must be a function of (data, parameters)
@@ -69,54 +66,11 @@ object Packing {
     sized.withColumn("__b", expr(s"(id - ${minId}L) div ${span}L"))
   }
 
-  /** Greedy next-fit packing of documents into token-budget bins, run
-    * independently inside each deterministic id-range bucket: docs fold
-    * in id order, a doc joins the open bin while the running total fits
-    * the budget, else opens a new bin. Bin ids are (bucket << 32 | local)
-    * — globally unique without coordination, and a pure function of
-    * (data, budget, buckets): the fold resets at every bucket boundary,
-    * so neither the cluster layout nor the task count can shift an
-    * assignment. A single document larger than the budget gets a bin of
-    * its own (never split here; chunk first with [[chunkDocuments]] when
-    * splitting is wanted).
-    *
-    * Returns (id, n_tokens, bin_id). Next-fit on a sorted stream is
-    * within 2× of the bucket-local optimum; the waste that matters
-    * operationally — bins padded far below budget — is bounded by the
-    * final bin of each bucket.
-    */
-  def packSequences(df: DataFrame, idCol: String, textCol: String,
-                    budget: Long, partitions: Int = 0): DataFrame = {
-    require(budget > 0, "budget must be positive")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val buckets = if (partitions > 0) partitions else 32
-    sizedWithBuckets(df, idCol, textCol, buckets)
-      .repartition(col("__b"))
-      .sortWithinPartitions(col("__b"), col("id"))
-      .select(col("id"), col("n_tokens"), col("__b"))
-      .as[(Long, Long, Long)]
-      .mapPartitions { rows =>
-        // a hash partition may hold several buckets; the fold resets at
-        // each bucket boundary so assignments stay bucket-local
-        var curB = Long.MinValue
-        var localBin = -1L
-        var used = 0L
-        rows.map { case (id, n, b) =>
-          if (b != curB) { curB = b; localBin = -1L; used = 0L }
-          if (localBin < 0L || used + n > budget) { localBin += 1; used = 0L }
-          used += n
-          (id, n, (b << 32) | localBin)
-        }
-      }
-      .toDF("id", "n_tokens", "bin_id")
-  }
-
   /** Concatenate-and-split packing (the GPT-style training layout): all
     * documents are laid out in id order as one virtual token stream and
     * cut every `budget` tokens; each document is assigned the bin its
     * FIRST token lands in. Bins can overhang by at most one document —
-    * the discipline trades the hard budget cap of [[packSequences]] for
+    * the discipline trades the hard budget cap of greedy next-fit bins for
     * zero padding waste and an exact SQL expression (q92's oracle
     * recomputes it as a window prefix sum).
     *

@@ -15,31 +15,16 @@ object Sampling {
     df.sample(withReplacement = false, fraction, seed)
 
   /** Exact-fraction stratified sample: per-stratum Bernoulli with a
-    * seeded hash threshold — deterministic, single pass, no
-    * count-per-stratum pre-job (`df.stat.sampleBy` has the same contract
-    * but draws from partition-order-dependent RNG; this is stable across
-    * cluster sizes).
-    */
-  def stratifiedSample(df: DataFrame, strataCol: String, idCol: String,
-                       fractions: Map[String, Double], seed: Long = 42L): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val bucket = pmod(xxhash64(col(idCol), lit(seed)), lit(10000L))
-    val keep = fractions.foldLeft(lit(false)) { case (acc, (stratum, f)) =>
-      acc || (col(strataCol) === stratum && bucket < math.round(f * 10000))
-    }
-    df.filter(keep)
-  }
-
-  /** [[stratifiedSample]] with an engine-PORTABLE keep decision: the
-    * per-row draw is `md5(id || ":" || seed)` compared lexicographically
-    * against a per-stratum 32-digit hex threshold — any engine with a
-    * standard md5 reproduces the exact same sample (lowercase-hex string
-    * order == numeric order on the 128-bit space), which is what makes a
-    * corpus mixture auditable across systems. Same contract otherwise:
-    * deterministic, single pass, zero shuffle, stable under
-    * repartitioning. xxhash64 ([[stratifiedSample]]) is cheaper per row;
-    * use this when cross-engine reproducibility matters more than the
-    * hash cost.
+    * seeded hash threshold — deterministic, single pass, zero shuffle, no
+    * count-per-stratum pre-job, stable under repartitioning
+    * (`df.stat.sampleBy` has the same contract but draws from
+    * partition-order-dependent RNG). A stratum missing from `fractions`
+    * drops out. The keep decision is engine-PORTABLE: the per-row draw is
+    * `md5(id || ":" || seed)` compared lexicographically against a
+    * per-stratum 32-digit hex threshold — any engine with a standard md5
+    * reproduces the exact same sample (lowercase-hex string order ==
+    * numeric order on the 128-bit space), which is what makes a corpus
+    * mixture auditable across systems.
     */
   def portableStratifiedSample(df: DataFrame, strataCol: String, idCol: String,
                                fractions: Map[String, Double],

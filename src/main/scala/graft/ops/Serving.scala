@@ -8,9 +8,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale note: `orderBy.offset.limit` pagination is a global sort; Spark
   * plans it as TakeOrderedAndProject when limit+offset is small — no full
-  * sort materialization. Deep pagination (huge offsets) should switch to
-  * keyset pagination ([[pageAfter]]) which turns the scan into an indexed
-  * range predicate — O(page) instead of O(offset+page).
+  * sort materialization. A page costs O(offset+page): the reference API
+  * paginates by offset/limit, so there is no keyset form.
   */
 object Serving {
 
@@ -19,10 +18,6 @@ object Serving {
     */
   def paginate(df: DataFrame, sortKeys: Seq[Column], offset: Int, limit: Int): DataFrame =
     df.orderBy(sortKeys: _*).offset(offset).limit(limit)
-
-  /** Keyset pagination: rows strictly after `lastKey` under `key` asc. */
-  def pageAfter(df: DataFrame, key: String, lastKey: Long, limit: Int): DataFrame =
-    df.filter(col(key) > lastKey).orderBy(col(key)).limit(limit)
 
   /** Point lookup by key (api/app/database.py:109-132). */
   def pointLookup(df: DataFrame, key: String, value: Any): DataFrame =

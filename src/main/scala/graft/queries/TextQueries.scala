@@ -144,9 +144,7 @@ object TextQueries {
     // Concat-and-split token packing (GPT-style layout): bin = the
     // budget-boundary slot of each doc's first token in the id-ordered
     // virtual token stream. A pure function of (data, budget), so the
-    // oracle recomputes it as a window prefix sum; the budget-capped
-    // greedy variant (Packing.packSequences) stays property-pinned in
-    // PackingSpec.
+    // oracle recomputes it as a window prefix sum.
     QueryDef("q92_pack_sequences",
       (s, d) => graft.ops.Packing.packConcatSplit(
         Tables.documents(s, d), "doc_id", "text", budget = 256),

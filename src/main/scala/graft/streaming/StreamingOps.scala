@@ -443,9 +443,9 @@ object StreamingOps {
     * time watermark (`dropDuplicatesWithinWatermark` — duplicates arriving
     * within the watermark window of the kept row are removed; state for
     * keys older than the watermark is evicted, so an infinite stream
-    * doesn't accumulate infinite state). The streaming face of
-    * [[graft.ops.Dedup.exactDedupByHash]]: same key derivation — a 64-bit
-    * hash of the normalized content — computed on the stream.
+    * doesn't accumulate infinite state). The key is the 64-bit xxhash64
+    * of the content under [[graft.functions.TextFunctions.normalizeText]],
+    * the normalization [[graft.ops.Dedup.exactDedup]] groups on.
     */
   def dedupStream(rows: DataFrame, textCol: String, tsCol: String,
                   watermark: String = "1 hour"): DataFrame =

@@ -80,24 +80,6 @@ class ActionsSpec extends SparkSpec {
     }
   }
 
-  test("stratifiedSample keeps per-stratum fractions and is a subset") {
-    import graft.ops.Sampling
-    val events = graft.sources.Tables.events(spark, sf001)
-    val sampled = Sampling.stratifiedSample(events, "event_type", "event_id",
-      Map("click" -> 0.5, "error" -> 0.1))
-    val got = sampled.groupBy("event_type").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(got.keySet == Set("click", "error")) // unlisted strata drop out
-    val base = events.groupBy("event_type").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(math.abs(got("click").toDouble / base("click") - 0.5) < 0.1)
-    assert(math.abs(got("error").toDouble / base("error") - 0.1) < 0.06)
-    // subset of the source and deterministic
-    assert(sampled.join(events, Seq("event_id"), "left_anti").count() == 0)
-    assert(Sampling.stratifiedSample(events, "event_type", "event_id",
-      Map("click" -> 0.5, "error" -> 0.1)).count() == sampled.count())
-  }
-
   test("portableStratifiedSample is repartition-stable with exact edge fractions") {
     import graft.ops.Sampling
     val events = graft.sources.Tables.events(spark, sf001)
@@ -109,6 +91,8 @@ class ActionsSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got.getOrElse("error", 0L) == base("error"), "frac 1.0 must keep every row")
     assert(!got.contains("view"), "frac 0.0 must keep none")
+    val unlisted = base.keySet -- fracs.keySet
+    assert(unlisted.nonEmpty && (got.keySet & unlisted).isEmpty, "a stratum missing from the map drops out")
     assert(math.abs(got("click").toDouble / base("click") - 0.5) < 0.1)
     // the kept ID SET (not just counts) survives repartitioning
     val again = Sampling.portableStratifiedSample(

@@ -23,15 +23,6 @@ class DedupSpec extends SparkSpec {
     assert(byKeeper(4L) == 1L)
   }
 
-  test("exactDedupByHash matches exactDedup group sizes") {
-    val df = graft.sources.Tables.documents(spark, sf001)
-    val a = Dedup.exactDedup(df, "doc_id", "text")
-      .agg(sum("dup_count"), count(lit(1))).collect()(0)
-    val b = Dedup.exactDedupByHash(df, "doc_id", "text")
-      .agg(sum("dup_count"), count(lit(1))).collect()(0)
-    assert(a == b)
-  }
-
   test("minHashNearDup finds a constructed near-duplicate and skips unrelated docs") {
     val base = "the quick brown fox jumps over the lazy dog while the cat sleeps " +
       "on the warm mat near the door of the old house by the river bank today"
@@ -192,15 +183,15 @@ class DedupSpec extends SparkSpec {
   }
 
   test("connectedComponents throws instead of returning unconverged labels") {
-    // a 6-hop chain cannot converge in 2 rounds of one-hop min propagation
-    val chain = (1L to 7L).sliding(2).map(s => (s(0), s(1))).toSeq
+    // a 200-node path cannot converge in 2 rounds of pointer doubling
+    val chain = (1L to 200L).sliding(2).map(s => (s(0), s(1))).toSeq
       .toDF("id_a", "id_b")
     val e = intercept[IllegalStateException] {
-      Dedup.connectedComponents(chain, maxIter = 2).collect()
+      Dedup.connectedComponentsFast(chain, maxIter = 2).collect()
     }
     assert(e.getMessage.contains("did not converge"))
-    // and with enough rounds the same graph resolves to one component
-    val ok = Dedup.connectedComponents(chain, maxIter = 10)
+    // and with the default rounds the same graph resolves to one component
+    val ok = Dedup.connectedComponentsFast(chain)
       .select("component").distinct().collect()
     assert(ok.map(_.getLong(0)).toSeq == Seq(1L))
   }
@@ -323,16 +314,26 @@ class DedupSpec extends SparkSpec {
     assert(out.count() == 200)
   }
 
-  test("connectedComponentsFast equals the one-hop variant on mixed graphs") {
-    val pairs = Seq(
-      (1L, 2L), (2L, 3L), (3L, 4L),      // chain
-      (10L, 11L), (11L, 12L), (10L, 12L), // triangle
-      (20L, 21L)                          // pair
-    ).toDF("id_a", "id_b")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(canon(Dedup.connectedComponentsFast(pairs)) ==
-      canon(Dedup.connectedComponents(pairs)))
+  test("connectedComponentsFast equals a driver-side union-find on mixed and random graphs") {
+    // (id, min id of its component) for every id that has a pair
+    def unionFind(pairs: Seq[(Long, Long)]): Set[(Long, Long)] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = { val p = parent.getOrElseUpdate(x, x); if (p == x) x else find(p) }
+      pairs.foreach { case (a, b) => val (ra, rb) = (find(a), find(b)); parent(ra max rb) = ra min rb }
+      parent.keys.map(x => x -> find(x)).toSet
+    }
+    val mixed = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L), (10L, 12L), (20L, 21L)) // chain, triangle, pair
+    // seeded random forest over shuffled ids: a node hangs off one of the last 4 placed, or starts a tree
+    val rnd = new scala.util.Random(16)
+    val ids = rnd.shuffle((1L to 300L).toVector)
+    val forest = (1 until 300).filter(_ => rnd.nextDouble() < 0.9)
+      .map(i => (ids(i - 1 - rnd.nextInt(i min 4)), ids(i)))
+    // the forest gets maxIter 32: with ids shuffled along its paths (diameter 19) it takes 17-20 rounds
+    for ((pairs, maxIter) <- Seq(mixed -> 16, forest -> 32)) {
+      val got = Dedup.connectedComponentsFast(pairs.toDF("id_a", "id_b"), maxIter).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == unionFind(pairs))
+    }
   }
 
   test("resolveNearDupClustersExact equals clustering over brute-force pairs") {

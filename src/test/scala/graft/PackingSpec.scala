@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.ops.Packing
 import graft.sources.Tables
 
-/** Invariants of the sequence-prep operators. Chunking is oracle-gated
-  * (q91); packing has no SQL oracle, so every packing guarantee is
-  * pinned here.
+/** Invariants of the sequence-prep operators. Chunking (q91) and packing
+  * (q92) are oracle-gated; packing's independence of bucket count and
+  * partitioning and its overhang bound are pinned here.
   */
 class PackingSpec extends SparkSpec {
   import spark.implicits._
@@ -28,22 +28,6 @@ class PackingSpec extends SparkSpec {
     // a short doc still yields exactly one chunk
     val short = Packing.chunkDocuments(docs(2L -> "a b"), "doc_id", "text", 40, 32)
     assert(short.count() == 1 && short.head().getLong(2) == 2L)
-  }
-
-  test("packSequences packs every doc exactly once within the budget") {
-    val corpus = Tables.documents(spark, sf001)
-    val packed = Packing.packSequences(corpus, "doc_id", "text", budget = 256)
-    // every doc appears exactly once
-    assert(packed.count() == corpus.count())
-    assert(packed.select("id").distinct().count() == corpus.count())
-    // no bin exceeds the budget (fixture docs are all < 256 tokens)
-    val over = packed.groupBy("bin_id")
-      .agg(sum("n_tokens").alias("total"))
-      .filter(col("total") > 256)
-    assert(over.count() == 0, "bin over budget")
-    // packing actually packs: mean bin fill is well above a doc per bin
-    val bins = packed.select("bin_id").distinct().count()
-    assert(bins < corpus.count() / 2, s"degenerate packing: $bins bins")
   }
 
   test("packConcatSplit matches the global prefix-sum layout at any bucket count") {
@@ -73,19 +57,4 @@ class PackingSpec extends SparkSpec {
     assert(over.count() == 0)
   }
 
-  test("packSequences is deterministic and gives oversized docs their own bin") {
-    val df = docs(
-      1L -> (1 to 300).map(_ => "w").mkString(" "), // 300 tokens > budget 256
-      2L -> "a b c",
-      3L -> "d e")
-    val p1 = Packing.packSequences(df, "doc_id", "text", budget = 256, partitions = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toMap
-    val p2 = Packing.packSequences(df.repartition(5), "doc_id", "text",
-      budget = 256, partitions = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toMap
-    assert(p1 == p2, "bin assignment changed under input repartitioning")
-    // the oversized doc shares its bin with nobody
-    val oversizedBin = p1(1L)
-    assert(p1.count(_._2 == oversizedBin) == 1)
-  }
 }

@@ -26,7 +26,7 @@ class ProfilingSpec extends SparkSpec {
     // 1-2-3 chained, 10-11 paired, 20-21-22 star around 20
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (20L, 22L))
       .toDF("id_a", "id_b")
-    val comp = Dedup.connectedComponents(pairs).collect()
+    val comp = Dedup.connectedComponentsFast(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(Seq(1L, 2L, 3L).forall(comp(_) == 1L))
     assert(Seq(10L, 11L).forall(comp(_) == 10L))

@@ -42,8 +42,8 @@ class ServingSpec extends SparkSpec {
         Serving.rangeFilterNullTolerant(table, Seq(("d", Some(lo), Some(hi)))) },
       { case (lo: Double, hi: Double) => all.filter(r => d(r).forall(x => x >= lo && x <= hi)) },
       Seq((10.0, 20.0), (33.5, 90.0), (1.5, 7.5), (60.0, 61.0))),
-    ("pageAfter", v => Serving.pageAfter(table, "k", v.asInstanceOf[Long], 20),
-      v => sorted(all.filter(key(_) > v.asInstanceOf[Long])).take(20), Seq(100L, 601L, 3L, 450L)))
+    ("paginate", v => Serving.paginate(table, Seq(col("k")), v.asInstanceOf[Int], 20),
+      v => sorted(all).slice(v.asInstanceOf[Int], v.asInstanceOf[Int] + 20), Seq(100, 285, 3, 150)))
 
   private def withConf[T](kv: (String, String)*)(body: => T): T = {
     val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
@@ -63,7 +63,7 @@ class ServingSpec extends SparkSpec {
           val got = op(v).collect().toSeq
           val want = expected(v)
           assert(want.nonEmpty, s"$name($v) selects nothing: a vacuous check")
-          val inOrder = name == "pageAfter"
+          val inOrder = name == "paginate"
           assert((if (inOrder) got else sorted(got)) == (if (inOrder) want else sorted(want)),
             s"$name($v), codegen=$codegen")
         }
